@@ -601,15 +601,6 @@ def _stage_partitioned_merge(
     return manifest
 
 
-def _finish_partitioned_merge(spark: SparkSession, path: str) -> list:
-    """Step 5: roll the published manifest forward (idempotent)."""
-    import json as _json
-
-    manifest = _json.loads(_read_small_file(spark, f"{path}/{_MERGE_MANIFEST}"))
-    _commit_partitioned_merge(spark, path, manifest)
-    return manifest["touched"]
-
-
 def _data_files(fs, jvm, dirpath: str) -> list:
     """Names of the data files directly under ``dirpath`` (skips _SUCCESS,
     manifests and other underscore/dot control files)."""

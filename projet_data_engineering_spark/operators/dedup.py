@@ -31,6 +31,7 @@ from projet_data_engineering_spark.io import (
 )
 from projet_data_engineering_spark.plans.hints import merge_if_large
 from projet_data_engineering_spark.registry import query
+from projet_data_engineering_spark.session import graph_loop
 
 N_HASHES = 8
 BAND_SIZE = 2  # 8 hashes / 2 per band = 4 bands
@@ -348,7 +349,6 @@ def connected_components(
     right: str = "doc2",
     max_iter: int = 64,
     checkpoint_every: int = 3,
-    low_latency: bool | None = None,
 ) -> DataFrame:
     """Connected components over candidate pairs → (node, root) with root =
     the smallest id reachable: the clustering stage between near-dup pair
@@ -371,13 +371,14 @@ def connected_components(
     executors, swap ``localCheckpoint`` (executor-local blocks) for a
     reliable ``checkpoint()`` to the cluster FS; billion-edge graphs would
     additionally swap the propagation step for the large-star/small-star
-    variant."""
+    variant.
+
+    Small graphs run the loop with AQE off: see ``session.graph_loop``."""
     # Symmetrize in ONE pass over the pair input: the old two-branch union
     # (e ∪ swap(e)) computed the upstream pair pipeline twice when the
     # persist first materialized (each branch is an independent subtree
     # until the cache exists — r11, guide §2.4). explode doubles rows
     # map-side instead.
-    spark = pairs.sparkSession
     e = pairs.select(F.col(left).alias("a"), F.col(right).alias("b"))
     edges = (
         e.select(
@@ -392,40 +393,17 @@ def connected_components(
         # localCheckpoint instead of persist (r12): a cached plan keeps
         # its PRE-AQE partitioning (canChangeCachedPlanOutputPartitioning
         # is off), so the persisted edge frame stayed 200-wide on tiny
-        # graphs and the width probe below could never see "small"; the
+        # graphs and the width probe could never see "small"; the
         # checkpoint RDD carries the AQE-finalized width — and truncates
         # the pair pipeline's lineage like the LSS variant already did.
         .localCheckpoint(eager=True)
     )
-    # Low-latency mode on small graphs (r12 — the pagerank/LSS recipe):
-    # run the loop with AQE off, shuffles pinned to a width derived from
-    # the edge count, and the node-sized label frame broadcast into the
-    # propagation join — one convergence job per round instead of ~4 AQE
-    # stage jobs. Pure integer min-folding: layout cannot change any
-    # output row. Unlike the LSS variant, this edge frame ends in a MAP
-    # (explode) over the pair pipeline, so its checkpoint inherits any
-    # user repartition width upstream (spread's) — partition count alone
-    # cannot see "small"; when the width is plausibly local (≤64) one
-    # tiny count job over the stored blocks decides from the data.
-    nparts = edges.rdd.getNumPartitions()
-    n_edges = edges.count() if nparts <= 64 else None
-    if low_latency is None:
-        low_latency = n_edges is not None and n_edges <= 200_000
-    if low_latency:
-        if n_edges is None:
-            n_edges = edges.count()
-        # round-shuffle width from the edge count: 1 for anything that
-        # fits a task comfortably, growing with the data, never a core
-        # count
-        nparts = max(1, min(nparts, n_edges // 50_000 + 1))
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    if low_latency:
-        conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        la = edges.select("a")
+    # The edge frame ends in a MAP (explode) over the pair pipeline, so
+    # its width is the upstream's (spread's): the edge count decides.
+    with graph_loop(edges, count_edges=True) as g:
+        edges = g.edges
         labels = (
-            (la.repartition(nparts, "a") if low_latency else la)
+            g.pin(edges.select("a"), "a")
             .distinct()
             .select(F.col("a").alias("node"), F.col("a").alias("root"))
             .persist()
@@ -438,22 +416,21 @@ def connected_components(
         prev_sum = None
         converged = False
         for i in range(max_iter):
-            nbr = edges.join(
-                F.broadcast(labels) if low_latency else labels,
-                edges.b == labels.node,
-            ).select(F.col("a").alias("node"), "root")
-            nl_u = labels.union(nbr)
-            new_labels = (
-                nl_u.repartition(nparts, "node") if low_latency else nl_u
-            ).groupBy("node").agg(F.min("root").alias("root"))
-            if low_latency or (i + 1) % checkpoint_every == 0:
+            nbr = edges.join(g.hint(labels), edges.b == labels.node).select(
+                F.col("a").alias("node"), "root"
+            )
+            new_labels = g.group(labels.union(nbr), "node").agg(
+                F.min("root").alias("root")
+            )
+            if g.small or (i + 1) % checkpoint_every == 0:
                 # Truncates the logical plan to a scan of materialized
                 # blocks, so plan depth stays O(checkpoint_every) regardless
                 # of rounds. Lazy: the convergence aggregate below
                 # materializes it in the same job (r11 — eager cost one
-                # extra job per checkpoint round). lowlat checkpoints EVERY
-                # round: the whole round is one job either way, and blocks
-                # beat re-running the propagation join.
+                # extra job per checkpoint round). A small graph
+                # checkpoints EVERY round: the whole round is one job
+                # either way, and blocks beat re-running the propagation
+                # join.
                 new_labels = new_labels.localCheckpoint(eager=False)
             else:
                 new_labels = new_labels.persist()
@@ -464,9 +441,6 @@ def connected_components(
                 converged = True
                 break
             prev_sum = cur_sum
-    finally:
-        if low_latency:
-            conf.set("spark.sql.adaptive.enabled", old_aqe)
     if not converged:
         # Truncated propagation would silently mislabel every node farther
         # than max_iter hops from its component min — at sf5 the synthetic
@@ -478,7 +452,7 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds; "
             "raise max_iter or use connected_components_lss (O(log n) rounds)"
         )
-    return labels
+    return g.result(labels)
 
 
 def connected_components_lss(
@@ -486,7 +460,6 @@ def connected_components_lss(
     left: str = "doc1",
     right: str = "doc2",
     max_iter: int = 40,
-    low_latency: bool | None = None,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star (Kiveris
     et al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
@@ -503,19 +476,7 @@ def connected_components_lss(
     same contract as ``connected_components`` (oracle-checked against the
     same recursive-CTE transitive closure in ``q_dedup_clusters_lss``).
 
-    Low-latency mode (r12, the pagerank recipe): on a SMALL canonical edge
-    set (``low_latency=None`` decides from the checkpointed edge RDD's
-    partition count — data-derived, never a core count) the round loop is
-    pure per-job fixed cost — AQE materializes every exchange of every
-    fingerprint materialization as its own stage job (~5-6 jobs/round on
-    rows that fit one partition). With a tiny graph the loop runs with AQE
-    off, every shuffle pinned to the edge RDD's own width, node-sized
-    aggregates broadcast-hinted into the joins, and the final subtract
-    proof as a broadcast anti-join — ONE fingerprint job per round. Large
-    graphs keep the AQE path (skew handling on the star joins matters more
-    than round latency there). The computation is all integer min-label
-    folding — physical layout cannot change a single output row."""
-    spark = pairs.sparkSession
+    Small graphs run the loop with AQE off: see ``session.graph_loop``."""
     e = pairs.select(F.col(left).alias("a"), F.col(right).alias("b")).filter(
         F.col("a") != F.col("b")
     )
@@ -524,37 +485,25 @@ def connected_components_lss(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # metadata-only: edges is already materialized, .rdd wraps stored blocks
-    nparts = edges.rdd.getNumPartitions()
-    if low_latency is None:
-        low_latency = nparts <= 4
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    if low_latency:
-        conf.set("spark.sql.adaptive.enabled", "false")
-
-    def _grp(df: DataFrame, *keys: str):
-        # lowlat: pin the exchange to the edge RDD's own width and let the
-        # groupBy reuse it (guide §2.4); AQE mode: AQE sizes it
-        return (
-            df.repartition(nparts, *keys) if low_latency else df
-        ).groupBy(*keys)
-
-    def _hint(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if low_latency else df
-
-    try:
+    if edges.rdd.getNumPartitions() == 0:
+        # No edge (AQE coalesced the empty distinct to no partition): no
+        # component and no round to run. The rounds would only fold empty
+        # frames, and their broadcast jobs race, so the stages an empty
+        # graph ran varied from call to call.
+        return edges.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
+    with graph_loop(edges) as g:
+        edges = g.edges
         # Node universe from the CHECKPOINTED canonical edges, not the raw
         # pairs input: every (a != b) pair contributes both endpoints to the
         # edge set, so the two are identical — and deriving it from
         # ``pairs`` re-ran the whole upstream pair pipeline (the MinHash
         # band self-join, in the curation callers) a second time just to
         # list vertices (r11, guide §2.4: one subtree, one computation).
-        nodes_u = edges.select(F.col("hi").alias("node")).union(
-            edges.select(F.col("lo").alias("node"))
-        )
-        nodes = (
-            nodes_u.repartition(nparts, "node") if low_latency else nodes_u
+        nodes = g.pin(
+            edges.select(F.col("hi").alias("node")).union(
+                edges.select(F.col("lo").alias("node"))
+            ),
+            "node",
         ).distinct()
         prev_sig: tuple | None = None
         converged = False
@@ -564,11 +513,11 @@ def connected_components_lss(
             sym = edges.select(
                 F.col("hi").alias("u"), F.col("lo").alias("v")
             ).union(edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
-            mins = _grp(sym, "u").agg(
+            mins = g.group(sym, "u").agg(
                 F.least(F.min("v"), F.col("u")).alias("m")
             )
             large = (
-                sym.join(_hint(mins), "u")
+                sym.join(g.hint(mins), "u")
                 .filter(F.col("v") > F.col("u"))
                 .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
                 .filter(F.col("hi") != F.col("lo"))
@@ -580,9 +529,9 @@ def connected_components_lss(
             # Small-star: every node rewires its smaller neighbors (and
             # itself) to the min of those; operates on the (child > parent)
             # edge list.
-            mins2 = _grp(large, "hi").agg(F.min("lo").alias("m"))
+            mins2 = g.group(large, "hi").agg(F.min("lo").alias("m"))
             rewired = (
-                large.join(_hint(mins2), "hi")
+                large.join(g.hint(mins2), "hi")
                 .filter(F.col("lo") != F.col("m"))
                 .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
             )
@@ -594,33 +543,33 @@ def connected_components_lss(
             # cost two (r11; the round loop is job-latency-bound at every
             # SF because each round's data volume shrinks while the fixed
             # job cost does not).
-            ne_u = rewired.union(self_edges).filter(F.col("hi") != F.col("lo"))
-            new_edges = (
-                ne_u.repartition(nparts, "hi", "lo") if low_latency else ne_u
+            new_edges = g.pin(
+                rewired.union(self_edges).filter(F.col("hi") != F.col("lo")),
+                "hi",
+                "lo",
             ).distinct().localCheckpoint(eager=False)
             # Convergence test in two tiers: a cheap 1-row (count, sum hi,
             # sum lo) fingerprint every round, and only when the fingerprint
             # matches the previous round's, the definitive set-equality
             # check — so steady-state rounds cost one aggregate, and the
             # exact proof is paid once at the end, never heuristically
-            # skipped. (lowlat runs the proof as a broadcast anti-join:
-            # same ⊆ test — both sides are distinct and the fingerprint
-            # already pins equal counts, so empty-anti ⟺ set equality.)
+            # skipped. (A small graph runs the proof as a broadcast
+            # anti-join: same ⊆ test — both sides are distinct and the
+            # fingerprint already pins equal counts, so empty-anti ⟺ set
+            # equality.)
             cur_sig = tuple(
                 new_edges.agg(
                     F.count("*"), F.sum("hi"), F.sum("lo")
                 ).first()
             )
             if cur_sig == prev_sig:
-                if low_latency:
-                    proof = (
-                        new_edges.join(
-                            F.broadcast(edges), ["hi", "lo"], "left_anti"
-                        ).count()
-                        == 0
+                if g.small:
+                    extra = new_edges.join(
+                        F.broadcast(edges), ["hi", "lo"], "left_anti"
                     )
                 else:
-                    proof = new_edges.subtract(edges).count() == 0
+                    extra = new_edges.subtract(edges)
+                proof = extra.count() == 0
             else:
                 proof = False
             prev_sig = cur_sig
@@ -635,18 +584,15 @@ def connected_components_lss(
         # Converged: depth-1 stars — every child row points at its
         # component min.
         child = edges.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
-        out = nodes.join(_hint(child), "node", "left").select(
+        out = nodes.join(g.hint(child), "node", "left").select(
             "node", F.coalesce("root", F.col("node")).alias("root")
         )
-        if low_latency:
-            # materialize while AQE is still off: the caller's action then
-            # reads stored blocks instead of re-planning the label join
+        if g.small:
+            # materialize inside the loop's session: the caller's action
+            # then reads stored blocks instead of re-planning the label join
             out = out.localCheckpoint(eager=False)
             out.count()
-    finally:
-        if low_latency:
-            conf.set("spark.sql.adaptive.enabled", old_aqe)
-    return out
+        return g.result(out)
 
 
 def _clusters_oracle() -> str:

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import load_table
 from projet_data_engineering_spark.registry import query
+from projet_data_engineering_spark.session import graph_loop
 
 DAMPING = 0.85
 PR_ITERS = 5
@@ -41,7 +42,6 @@ def pagerank(
     edges: DataFrame,
     damping: float = DAMPING,
     iters: int = PR_ITERS,
-    low_latency: bool | None = None,
 ) -> DataFrame:
     """Weighted PageRank over ``edges(src, dst, w)``; returns (node, rank).
 
@@ -73,18 +73,7 @@ def pagerank(
       in ONE union-aggregate (no per-round left join): nodes without
       in-edges carry a NULL contribution, so ``sum`` sees exactly the
       multiset the old ``groupBy(dst)`` + ``coalesce`` saw.
-    - **Low-latency mode for small graphs** (``low_latency=None`` decides
-      from the checkpointed edge RDD's partition count — data-derived,
-      never a core count): AQE materializes every exchange of every
-      materialization as its own ~100 ms stage job, which is pure fixed
-      cost on a round frame of a few rows (measured: 6–7 jobs/round on
-      the ≤25-node trade network; the whole loop was job-latency-bound).
-      With a tiny graph the loop instead runs with AQE off, shuffle width
-      pinned to the edge RDD's own partition count, and the |V|-sized
-      round frames broadcast-hinted — ONE job per round. Large graphs
-      (many edge partitions) keep the AQE path: there the per-exchange
-      stage jobs are noise against real shuffle work, and AQE's skew
-      handling on the rank join matters more than round latency.
+    - **Small graphs run the loop with AQE off**: see ``session.graph_loop``.
 
     The per-round arithmetic (sum(rank·w/ow), (1−d)/N + d·(c + dm/N))
     performs the identical IEEE operations in the identical order as the
@@ -92,45 +81,21 @@ def pagerank(
     the modes differ only in physical layout — so the 6dp-rounded oracle
     contract is unchanged. At 100 TB the edge table shuffles once per
     round on dst; nodes/ranks are proportional to |V| << |E|."""
-    spark = edges.sparkSession
     e = edges.select(
         F.col("src"), F.col("dst"), F.col("w").cast("double").alias("w")
     ).localCheckpoint(eager=True)
-    # metadata-only probe: e is ALREADY materialized (eager), so .rdd is a
-    # wrapper over stored blocks — no AQE finalization, no job
-    nparts = e.rdd.getNumPartitions()
-    if low_latency is None:
-        low_latency = nparts <= 4
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    if low_latency:
-        conf.set("spark.sql.adaptive.enabled", "false")
-
-    def _sized_agg(df: DataFrame, key: str):
-        # lowlat: pin the exchange to the edge RDD's own width instead of
-        # the global shuffle-partition default (200 near-empty tasks per
-        # exchange on a few-row frame); the groupBy reuses the repartition
-        # exchange (guide §2.4). AQE mode: let AQE size it.
-        return (
-            df.repartition(nparts, key) if low_latency else df
-        ).groupBy(key)
-
-    def _hint(df: DataFrame) -> DataFrame:
-        # lowlat ⇒ the graph is tiny ⇒ |V|-sized frames always broadcast;
-        # AQE mode decides from runtime sizes instead
-        return F.broadcast(df) if low_latency else df
-
-    try:
-        outw = _sized_agg(e, "src").agg(F.sum("w").alias("ow"))
+    with graph_loop(e) as g:
+        e = g.edges
+        outw = g.group(e, "src").agg(F.sum("w").alias("ow"))
         # (src, dst, w, ow): the contribution join's round-invariant side.
         # Lazy checkpoint — materialized once inside the first job that
         # computes contributions, read as blocks by every later round.
-        ew = e.join(_hint(outw), "src").localCheckpoint(eager=False)
+        ew = e.join(g.hint(outw), "src").localCheckpoint(eager=False)
         # Node universe + the (fixed) dangling flag in ONE exchange off
         # the checkpointed edges: a node is dangling iff it never appears
         # as src (outw never changes, so neither does is_d — the old loop
         # re-derived it per round via a left join + null filter).
-        nmeta = _sized_agg(
+        nmeta = g.group(
             e.select(
                 F.explode(
                     F.array(
@@ -147,19 +112,21 @@ def pagerank(
             ).select("x.node", "x.has_out"),
             "node",
         ).agg((~F.max("has_out")).alias("is_d")).localCheckpoint(eager=False)
-        nn = float(nmeta.count())  # bounded: |V| is a count, 1 row back
+        # bounded: |V| is a count, 1 row back. An empty graph has no node
+        # to rank: its rank frames stay empty, and 1/N must not divide by 0
+        nn = float(nmeta.count()) or 1.0
         ranks = nmeta.select(
             "node", "is_d", F.lit(1.0 / nn).alias("rank")
         )
         for i in range(iters):
             # 1-row bounded collect (the LSS fingerprint shape); this job
-            # also materializes the previous round's lazy checkpoint — in
-            # low-latency mode it IS the round's one job
+            # also materializes the previous round's lazy checkpoint — on
+            # a small graph it IS the round's one job
             dm = ranks.filter(F.col("is_d")).agg(
                 F.coalesce(F.sum("rank"), F.lit(0.0))
             ).first()[0]
             upd = (
-                ew.join(_hint(ranks), ew["src"] == ranks["node"])
+                ew.join(g.hint(ranks), ew["src"] == ranks["node"])
                 .select(
                     F.col("dst").alias("node"),
                     (F.col("rank") * F.col("w") / F.col("ow")).alias("c"),
@@ -170,7 +137,7 @@ def pagerank(
                 "node", F.lit(None).cast("double").alias("c"), "is_d"
             )
             ranks = (
-                _sized_agg(upd.unionByName(base), "node")
+                g.group(upd.unionByName(base), "node")
                 .agg(F.sum("c").alias("c"), F.max("is_d").alias("is_d"))
                 .select(
                     "node",
@@ -186,15 +153,12 @@ def pagerank(
                 )
             )
             ranks = ranks.localCheckpoint(eager=False)
-        if low_latency:
-            # materialize the last round while AQE is still off, so the
+        if g.small:
+            # materialize the last round inside the loop's session, so the
             # caller's action is a 1-job scan of stored blocks instead of
             # a fresh AQE re-plan of the round chain
             ranks.count()
-    finally:
-        if low_latency:
-            conf.set("spark.sql.adaptive.enabled", old_aqe)
-    return ranks.select("node", "rank")
+        return g.result(ranks).select("node", "rank")
 
 
 def _pagerank_oracle(iters: int = PR_ITERS, damping: float = DAMPING) -> str:

@@ -614,20 +614,6 @@ def q_logreg_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 PCA_ITERS = 3
 
 
-def _centered_dot() -> F.Column:
-    """(x − μ)·v as a strict left-to-right fold over columns ``x``/``mu``/
-    ``v`` (the engine-stable order the DuckDB twin replays)."""
-    return F.aggregate(
-        F.zip_with(
-            F.zip_with("x", "mu", lambda a, b: a - b),
-            "v",
-            lambda c, vv: c * vv,
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-
-
 def pca_state(emb: DataFrame, iters: int = PCA_ITERS, dim: int = DIM) -> DataFrame:
     """Train the top-principal-component model by POWER ITERATION and return
     the 1-row state frame (mu, v, eig) — the matrix-free distributed PCA

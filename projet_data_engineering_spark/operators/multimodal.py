@@ -19,7 +19,8 @@ stay metadata-only (px_sum None) — those genuinely need a codec library
 
 Scale notes:
 - payloads stay in executor memory exactly one Arrow batch at a time
-  (``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds peak memory);
+  (``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds peak memory;
+  ``bound_arrow_batches_for_payloads`` sizes it from the payload size);
 - decode is embarrassingly parallel — no shuffle anywhere in the family;
 - metadata-only queries (see ``q_binary_meta`` in textanalysis.py) never
   touch the payload bytes thanks to parquet column pruning.
@@ -1021,21 +1022,19 @@ def _decode_media(payload: bytes, want_pixels: bool = True) -> dict:
 
 
 def bound_arrow_batches_for_payloads(
-    spark, avg_payload_mb: float, target_batch_mb: float = 64.0
+    avg_payload_mb: float, target_batch_mb: float = 64.0
 ) -> int:
-    """Payload-size-bounded Arrow batching knob (the capacity lever
+    """Payload-size-bounded Arrow batching cap (the capacity lever
     evidence/BENCH_media_r06 calls for): Spark slices ``mapInPandas`` input
     by RECORD count (``spark.sql.execution.arrow.maxRecordsPerBatch``,
     default 10,000), so a corpus of ~1 MB payloads would materialize ~10 GB
     pandas frames per batch and OOM the Python worker long before the
-    decode loop is the problem. Sets the records cap so one batch carries
-    ~``target_batch_mb`` of payload bytes; returns the cap it set. Call
-    once per session before a decode pass over large binaries (the conf is
-    runtime-settable; it only affects Python-boundary batching, no plan
-    change)."""
-    records = max(1, int(target_batch_mb / max(avg_payload_mb, 1e-6)))
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", records)
-    return records
+    decode loop is the problem. Returns the records cap under which one
+    batch carries ~``target_batch_mb`` of payload bytes. The caller owns
+    the session: set the conf to this cap around a decode pass over large
+    binaries and restore it after (it only affects Python-boundary
+    batching, no plan change)."""
+    return max(1, int(target_batch_mb / max(avg_payload_mb, 1e-6)))
 
 
 def extract_features(media: DataFrame, want_pixels: bool = True) -> DataFrame:
@@ -1044,7 +1043,8 @@ def extract_features(media: DataFrame, want_pixels: bool = True) -> DataFrame:
     Column pruning upstream means only (media_id, kind, payload) cross the
     Python boundary; the returned frame is narrow (id + small feature vector),
     so downstream joins/aggregations are cheap regardless of payload size.
-    For large payloads, bound the per-batch byte footprint first with
+    For large payloads, bound the per-batch byte footprint first: set
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` to
     ``bound_arrow_batches_for_payloads`` (record-count batching × payload
     size is the executor-memory constraint at 100 TB).
 

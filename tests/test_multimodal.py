@@ -512,7 +512,9 @@ def test_bound_arrow_batches_for_payloads_caps_batch_rows(spark):
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         # 32 MB payloads, 64 MB target -> cap of 2 records per batch
-        assert bound_arrow_batches_for_payloads(spark, 32.0, 64.0) == 2
+        cap = bound_arrow_batches_for_payloads(32.0, 64.0)
+        assert cap == 2
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", cap)
         media = spark.createDataFrame(
             [(i, "image", bytearray(_bmp(4, 4))) for i in range(10)],
             "media_id bigint, kind string, payload binary",
