@@ -209,7 +209,6 @@ def crawl_frontier(
     respect_robots: bool = False,
     robots_url_fn: Callable[[str], str] | None = None,
     user_agent: str = "*",
-    round_stats: list | None = None,
 ) -> DataFrame:
     """S9 — breadth-first crawl as iterative DataFrame algebra.
 
@@ -250,10 +249,9 @@ def crawl_frontier(
     each round's frontier is checkpointed so the iteration doesn't stack
     lineage — same discipline as ``dedup.connected_components``.
 
-    ``round_stats``: optional list; when given, each BFS round appends
-    ``{depth, frontier_rows, fetch_s, expand_s}`` — frontier size, the
-    fetch job's wall, and the link-explode + visited-anti-join wall (the
-    per-depth cost split tools/bench_crawl.py records)."""
+    To see where a crawl's time goes, time it from outside with
+    ``perfbench.census.Census`` (tools/bench_crawl.py wraps the whole crawl
+    in one ``span``)."""
     fetch = fetch_fn or default_fetch
     if allowed_schemes is None:
         # '' (scheme-less seed names, as in the stub-fetch tests) is a seed
@@ -318,20 +316,11 @@ def crawl_frontier(
                 {"url": urls, "content": contents, "links": links}
             )
 
-    # Lazy checkpoint + count: ONE job materializes the frontier's blocks,
-    # truncates lineage AND returns the row count — which below doubles as
-    # the round-stats figure and the emptiness test. The previous
-    # eager-checkpoint + isEmpty (+ stats count) shape paid two to three
-    # jobs per BFS round for the same information; the round loop is
-    # job-latency-bound at every site size because the per-round data
-    # shrinks while the fixed job cost does not (r11, guide §1.2/§2.4).
     frontier = (
         seeds.select("url").filter(scheme_ok).distinct()
-    ).localCheckpoint(eager=False)
-    n_frontier = frontier.count()
+    ).localCheckpoint(eager=True)
     visited = None  # (url, content, depth)
     for depth in range(max_depth + 1):
-        t_round = time.perf_counter() if round_stats is not None else 0.0
         if min_delay_per_domain > 0:
             # one task per domain hash-bucket: a domain's queue never splits
             # across tasks, so the per-domain clock in fetch_batches is global
@@ -349,15 +338,6 @@ def crawl_frontier(
         ).localCheckpoint(eager=True)
         pages = fetched.select("url", "content", F.lit(depth).alias("depth"))
         visited = pages if visited is None else visited.union(pages)
-        if round_stats is not None:
-            t_fetch = time.perf_counter()
-            round_stats.append(
-                {
-                    "depth": depth,
-                    "frontier_rows": n_frontier,
-                    "fetch_s": round(t_fetch - t_round, 3),
-                }
-            )
         if depth == max_depth:
             break
         out_links = (
@@ -366,19 +346,18 @@ def crawl_frontier(
             .filter(scheme_ok)
             .distinct()
         )
-        # one job: materialize the next frontier's checkpoint and learn its
-        # size (emptiness test + stats) — fetched is already eagerly cached,
-        # so the anti-join's two reads of it (out_links, visited) cannot
-        # re-run the fetch
+        # Lazy checkpoint + count: ONE job materializes the next frontier's
+        # blocks, truncates lineage AND answers the emptiness test. The
+        # previous eager-checkpoint + isEmpty shape paid two jobs per BFS
+        # round for the same information; the round loop is
+        # job-latency-bound at every site size because the per-round data
+        # shrinks while the fixed job cost does not (r11, guide §1.2/§2.4).
+        # fetched is already eagerly cached, so the anti-join's two reads
+        # of it (out_links, visited) cannot re-run the fetch.
         frontier = out_links.join(
             visited.select("url"), "url", "left_anti"
         ).localCheckpoint(eager=False)
-        n_frontier = frontier.count()
-        if round_stats is not None:
-            round_stats[-1]["expand_s"] = round(
-                time.perf_counter() - t_fetch, 3
-            )
-        if n_frontier == 0:
+        if frontier.count() == 0:
             break
     return visited
 

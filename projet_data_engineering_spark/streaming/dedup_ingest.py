@@ -109,7 +109,6 @@ def dedup_ingest_batch(
     text_col: str = "text",
     threshold: float = 0.2,
     n_buckets: int = 64,
-    stage_seconds: dict | None = None,
     compact_max_deltas: int = 16,
 ) -> None:
     """One micro-batch of the streaming near-dup ingest (the foreachBatch
@@ -120,11 +119,10 @@ def dedup_ingest_batch(
     — the within-batch self-join, the served cross-corpus probe, and the
     state merge — where each previously re-ran the md5 shingle pipeline.
 
-    ``stage_seconds``: optional dict filled with per-stage wall seconds
-    ({sig, within, probe_verify, accept, write_accepted, write_state}) —
-    the instrumentation hook tools/bench_dedup_stage.py uses; when set,
-    decision frames are eagerly materialized at stage boundaries so the
-    split is real. None (the production default) adds no extra jobs.
+    To see where a call's time goes, time it from outside with
+    ``perfbench.census.Census``: a ``span`` around the call reports its
+    jobs, stages, tasks and busy vs driver seconds without changing the
+    plan it measures.
 
     State layout under ``state_path`` (self-describing — ``n_buckets`` is
     read from the stored manifest when the state exists, never trusted from
@@ -144,21 +142,7 @@ def dedup_ingest_batch(
 
     if batch.isEmpty():
         return
-    import time as _time
-
     spark = batch.sparkSession
-    t0 = _time.perf_counter()
-
-    def _mark(stage: str) -> None:
-        nonlocal t0
-        if stage_seconds is not None:
-            now = _time.perf_counter()
-            stage_seconds[stage] = now - t0
-            t0 = now
-
-    def _force(df: DataFrame) -> DataFrame:
-        # profiling only: pin a stage boundary so its wall is attributable
-        return df.localCheckpoint(eager=True) if stage_seconds is not None else df
 
     # spread() before the hash pass: a micro-batch often arrives as ONE
     # input partition (AQE coalesces the upstream join/write to a single
@@ -176,13 +160,9 @@ def dedup_ingest_batch(
         ws_b = batch.select(
             F.col(id_col), _wordset(text_col).alias("ws")
         ).localCheckpoint(eager=True)
-        _mark("sig")
-        drop_within = _force(
-            _verified_within_pairs(bands_b, ws_b, id_col, threshold).select(
-                F.col("doc2").alias(id_col)
-            )
-        )
-        _mark("within")
+        drop_within = _verified_within_pairs(
+            bands_b, ws_b, id_col, threshold
+        ).select(F.col("doc2").alias(id_col))
         has_state = path_exists(spark, f"{state_path}/stats")
         if has_state:
             n_buckets = int(
@@ -198,14 +178,12 @@ def dedup_ingest_batch(
                 bands=bands_b,
                 wordsets=ws_b,
             )
-            drop_cross = _force(
-                cross.filter(F.col("corpus_doc") != F.col("batch_doc"))
-                .select(F.col("batch_doc").alias(id_col))
-            )
+            drop_cross = cross.filter(
+                F.col("corpus_doc") != F.col("batch_doc")
+            ).select(F.col("batch_doc").alias(id_col))
             drops = drop_within.unionByName(drop_cross)
         else:
             drops = drop_within
-        _mark("probe_verify")
         # MATERIALIZE the decision before any write: every artifact below
         # must derive from one fixed accepted set, not re-read a state the
         # earlier writes are mutating. The broadcast here is legitimate
@@ -215,7 +193,6 @@ def dedup_ingest_batch(
         accepted = batch.join(
             F.broadcast(drops.distinct()), id_col, "left_anti"
         ).localCheckpoint(eager=True)
-        _mark("accept")
         if accepted.rdd.isEmpty():
             return
 
@@ -261,7 +238,6 @@ def dedup_ingest_batch(
         ).first()
         name = f"{int(sig['s']) % (2 ** 32):08x}_{int(sig['c'])}"
         write_log_delta(acc_rows, accepted_path, name)
-        _mark("write_accepted")
         write_log_delta(bands, f"{state_path}/bands", name)
         write_log_delta(wsets, f"{state_path}/wordsets", name)
         if not has_state:
@@ -270,7 +246,6 @@ def dedup_ingest_batch(
             spark.range(1).select(
                 F.lit(n_buckets).alias("n_buckets")
             ).write.mode("overwrite").parquet(f"{state_path}/stats")
-        _mark("write_state")
         # amortized maintenance: O(corpus) fold once per compact_max_deltas
         # batches; ``key`` heals any cross-batch exact re-commit
         compact_log(
@@ -285,7 +260,6 @@ def dedup_ingest_batch(
             spark, f"{state_path}/wordsets", "doc_bucket",
             key=id_col, max_deltas=compact_max_deltas,
         )
-        _mark("compact")
     finally:
         batch.unpersist()
 

@@ -66,7 +66,6 @@ def stack_ingest_batch(
     n_buckets: int = 16,
     threshold: float = 0.2,
     fail_after: str | None = None,
-    stage_seconds: dict | None = None,
 ) -> None:
     """One micro-batch through the whole serving stack (the foreachBatch
     body; callable directly so tests can drive kill-window scenarios).
@@ -83,41 +82,21 @@ def stack_ingest_batch(
     value — the property that makes the composition, not just the stages,
     idempotent).
 
-    ``stage_seconds``: optional dict the call fills with per-stage wall
-    seconds ({stage: sec}) — the instrumentation hook tools/bench_stack.py
-    uses for the sf1/sf10 per-stage throughput evidence; None (the
-    production default) adds no timing work."""
-    import time as _time
-
+    To see where a call's time goes, time it from outside with
+    ``perfbench.census.Census`` (tools/bench_stack.py wraps each batch in
+    one ``span``)."""
     if batch.isEmpty():
         return
-    t0 = _time.perf_counter()
-
-    def _mark(stage: str) -> None:
-        nonlocal t0
-        if stage_seconds is not None:
-            now = _time.perf_counter()
-            stage_seconds[stage] = now - t0
-            t0 = now
-
     spark = batch.sparkSession
     state = f"{base_path}/dedup_state"
     accepted_path = f"{base_path}/accepted"
-    dedup_sub: dict | None = {} if stage_seconds is not None else None
     dedup_ingest_batch(
         batch.select("doc_id", "text"),
         state,
         accepted_path,
         threshold=threshold,
         n_buckets=n_buckets,
-        stage_seconds=dedup_sub,
     )
-    _mark("dedup")
-    if dedup_sub:
-        # sub-stage split of the dominant stage (r11): rendered as
-        # dedup.<sub> rows in the bench evidence
-        for s, v in dedup_sub.items():
-            stage_seconds[f"dedup.{s}"] = v
     if fail_after == "dedup":
         raise InjectedCrash("after dedup")
     acc_batch = batch.join(
@@ -125,10 +104,6 @@ def stack_ingest_batch(
         "doc_id",
         "semi",
     ).localCheckpoint(eager=True)
-    # own timing bucket: this semi-join + eager checkpoint is a real job
-    # (re-reads the growing accepted store) that previously landed in the
-    # bm25 stage's number and skewed the per-stage evidence (review r10)
-    _mark("accept")
     vecs = acc_batch.select(
         F.col("doc_id").alias("vec_id"), "embedding"
     )
@@ -171,7 +146,6 @@ def stack_ingest_batch(
     for name, fn in (("bm25", s_bm25), ("ann", s_ann), ("pq", s_pq),
                      ("drift", s_drift)):
         fn()
-        _mark(name)
         if fail_after == name:
             raise InjectedCrash(f"after {name}")
 
@@ -230,11 +204,15 @@ def _stream_stack_oracle() -> str:
         JOIN embeddings e ON e.vec_id = d.doc_id
     ),
     {accept},
+    -- computed once: DuckDB 1.0 inlines a CTE at each reference, and with
+    -- the acceptance chain inlined under the bm25/drift joins the oracle
+    -- ran past DuckDB's default memory limit (12.5 GB) at sf0.01
+    acc AS MATERIALIZED (SELECT doc_id FROM accepted),
     adl AS (
         SELECT d.doc_id, CAST(d.doc_id % 3 AS INT) AS src_batch,
                list_filter(str_split_regex(lower(d.text), '[^a-z0-9]+'),
                            x -> x <> '') AS tokens
-        FROM src_docs d JOIN accepted a ON d.doc_id = a.doc_id
+        FROM src_docs d JOIN acc a ON d.doc_id = a.doc_id
     ),
     adl2 AS (SELECT doc_id, src_batch, len(tokens) AS dl, tokens FROM adl),
     stats AS (SELECT COUNT(*) AS n_docs, AVG(dl) AS avg_dl FROM adl2),
@@ -297,7 +275,7 @@ def _stream_stack_oracle() -> str:
         GROUP BY f.batch_id
     )
     SELECT 'accepted' AS part, doc_id AS k, CAST(doc_id % 3 AS DOUBLE) AS v
-    FROM accepted
+    FROM acc
     UNION ALL SELECT 'bm25' AS part, k, CAST(v AS DOUBLE) AS v FROM bm25
     UNION ALL SELECT 'drift' AS part, k, CAST(v AS DOUBLE) AS v FROM drift
     """

@@ -376,15 +376,14 @@ def test_pagerank_round_loop_is_job_lean(spark):
     trade network should cost a bounded number of jobs (was 88 at sf0.1
     before the checkpoint/fold overhaul) and the returned plan must read
     checkpointed blocks, not the fact join."""
+    from perfbench.census import Census
     from projet_data_engineering_spark.plans.explain import formatted_plan
 
-    sc = spark.sparkContext
-    st = sc.statusTracker()
-    before = set(st.getJobIdsForGroup(None) or [])
-    df = Q["q_pagerank"](spark, SF_DIR)
-    df.write.format("noop").mode("overwrite").save()
-    after = set(st.getJobIdsForGroup(None) or [])
-    n_jobs = len(after - before)
+    census = Census(spark)
+    with census.span("q_pagerank"):
+        df = Q["q_pagerank"](spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    n_jobs = census.calls[-1].jobs
     assert n_jobs <= 40, f"pagerank ran {n_jobs} jobs (round loop bloat?)"
     plan = formatted_plan(df)
     assert "Scan ExistingRDD" in plan  # rounds read checkpointed state

@@ -1264,6 +1264,7 @@ def test_spread_never_executes_shuffle_stages(spark):
     eagerly execute the shuffle stages as extra jobs before the caller's
     action. Shuffle-bearing frames come back unchanged with ZERO jobs
     run; scan-shaped under-parallel frames keep the repartition path."""
+    from perfbench.census import Census
     from projet_data_engineering_spark.io import spread
 
     shuffled = (
@@ -1271,11 +1272,12 @@ def test_spread_never_executes_shuffle_stages(spark):
         .groupBy((F.col("id") % 7).alias("g"))
         .count()
     )
-    st = spark.sparkContext.statusTracker()
-    before = set(st.getJobIdsForGroup(None) or [])
-    out = spread(shuffled, "g")
-    after = set(st.getJobIdsForGroup(None) or [])
-    assert after == before, "spread() ran jobs while probing a shuffle plan"
+    census = Census(spark)
+    with census.span("spread"):
+        out = spread(shuffled, "g")
+    assert census.calls[-1].jobs == 0, (
+        "spread() ran jobs while probing a shuffle plan"
+    )
     assert out is shuffled  # already cluster-parallel: returned unchanged
 
     # the original behavior is preserved for narrow scan-shaped frames:

@@ -302,22 +302,15 @@ def test_tfidf_builds_lazily_no_count_action(spark):
     aggregate: constructing the DataFrame must launch ZERO jobs (the old
     shape ran a driver-side d.count() — a full wasted corpus scan at 100 TB)
     and the corpus-size join must be a broadcast."""
+    from perfbench.census import Census
     from projet_data_engineering_spark.io import load_table
 
-    sc = spark.sparkContext
-    sc.setJobGroup("tfidf_baseline", "footer-read jobs inherent to a scan")
-    try:
+    census = Census(spark)
+    with census.span("baseline"):  # footer-read jobs inherent to a scan
         load_table(spark, SF_DIR, "documents")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    baseline = len(sc.statusTracker().getJobIdsForGroup("tfidf_baseline"))
-
-    sc.setJobGroup("tfidf_build", "plan construction must be lazy")
-    try:
+    with census.span("build"):  # plan construction must be lazy
         df = Q["q_tfidf_topterms"](spark, SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    built = len(sc.statusTracker().getJobIdsForGroup("tfidf_build"))
+    baseline, built = (c.jobs for c in census.calls)
     assert built <= baseline     # no count() job beyond the scan's own setup
     assert uses_broadcast_join(df)
 
@@ -343,22 +336,17 @@ def test_tpch_q11_threshold_folds_into_plan(spark):
     """The HAVING-fraction threshold is a broadcast 1-row aggregate, not a
     driver-side scalar: constructing the DataFrame launches no jobs beyond
     the scan's own footer reads."""
+    from perfbench.census import Census
     from projet_data_engineering_spark.io import load_table
 
-    sc = spark.sparkContext
-    sc.setJobGroup("q11_baseline", "footer reads")
-    try:
+    census = Census(spark)
+    with census.span("baseline"):  # footer reads
         for t in ("lineitem", "supplier", "nation"):
             load_table(spark, SF_DIR, t)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    baseline = len(sc.statusTracker().getJobIdsForGroup("q11_baseline"))
-    sc.setJobGroup("q11_build", "must be lazy")
-    try:
+    with census.span("build"):  # must be lazy
         df = Q["q_tpch_q11"](spark, SF_DIR)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("q11_build")) <= baseline
+    baseline, built = (c.jobs for c in census.calls)
+    assert built <= baseline
     assert uses_broadcast_join(df)
 
 def test_tpch_q21_one_fact_shuffle_no_self_joins(spark):

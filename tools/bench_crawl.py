@@ -3,10 +3,11 @@
 q_crawl_frontier proves correctness on a 400-page minisite; this tool
 proves the SCALE claim: a 100K-page file://-backed synthetic site crawled
 by the same ``crawl_frontier`` + ``urllib_fetch`` path (mapInPandas,
-politeness off), recording pages/s, per-depth fetch wall, and the
-visited-set anti-join (expand) cost per depth — the reference's Selenium
-loop does 99 pages in ~30 min (`scraper/main.py:84-136`); the claim worth
-proving is 1000x that.
+politeness off), recording pages/s and where the crawl's time went
+(jobs, stages, tasks, busy seconds inside Spark jobs and driver seconds,
+read by one ``perfbench.census.Census`` span around the whole crawl). The
+reference's Selenium loop does 99 pages in ~30 min
+(`scraper/main.py:84-136`); the claim worth proving is 1000x that.
 
 Site shape: rank r links to 10r+1..10r+10 (10-ary tree — frontier grows
 10x per depth, the worst case for per-round overhead) plus two modular
@@ -55,6 +56,7 @@ def main() -> int:
     max_depth = int(sys.argv[2]) if len(sys.argv) > 2 else 5
     out_json = sys.argv[3] if len(sys.argv) > 3 else None
 
+    from perfbench.census import Census
     from projet_data_engineering_spark.crawl import crawl_frontier, urllib_fetch
     from projet_data_engineering_spark.session import get_spark
 
@@ -67,17 +69,15 @@ def main() -> int:
         seeds = spark.createDataFrame(
             [(f"file://{root}/s0/0.html",)], ["url"]
         )
-        rounds: list[dict] = []
-        t0 = time.perf_counter()
-        visited = crawl_frontier(
-            seeds,
-            fetch_fn=urllib_fetch,
-            max_depth=max_depth,
-            round_stats=rounds,
-        )
-        n_pages = visited.count()
-        n_dead = visited.filter("content IS NULL").count()
-        wall = time.perf_counter() - t0
+        census = Census(spark)
+        with census.span("crawl"):
+            visited = crawl_frontier(
+                seeds, fetch_fn=urllib_fetch, max_depth=max_depth
+            )
+            n_pages = visited.count()
+            n_dead = visited.filter("content IS NULL").count()
+        c = census.calls[-1]
+        wall = c.wall_s
         out = {
             "metric": "crawl_frontier_scale",
             "site_pages": n,
@@ -86,7 +86,11 @@ def main() -> int:
             "dead_pages": n_dead,
             "wall_s": round(wall, 2),
             "pages_per_sec": round(n_pages / wall, 1),
-            "rounds": rounds,
+            "jobs": c.jobs,
+            "stages": c.stages,
+            "tasks": c.tasks,
+            "busy_s": round(c.busy_s, 2),
+            "driver_s": round(c.driver_s, 2),
         }
         print(json.dumps(out))
         if out_json:

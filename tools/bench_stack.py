@@ -7,8 +7,10 @@ IVF refresh → PQ refresh → drift monitor) over the big generated SFs
 micro-batches, and reports the three numbers the flagship serving claim
 rests on:
 
-- per-stage throughput (docs/s) per micro-batch — where the pipe's budget
-  actually goes, and whether any stage degrades as served STATE grows;
+- where each micro-batch's time goes — jobs, stages, tasks, busy
+  seconds (inside Spark jobs) and driver seconds (the rest of the wall),
+  read by ``perfbench.census.Census`` around the call — and whether any of
+  them degrades as served STATE grows;
 - state growth per batch — rows in each served artifact (dedup bands/
   wordsets, accepted corpus, postings/vocab/docstats, IVF lists, PQ codes)
   plus on-disk bytes of the whole stack root: the growth must be linear in
@@ -16,15 +18,10 @@ rests on:
   (a pair-state smell);
 - end-to-end freshness lag — wall seconds from batch arrival to all five
   served artifacts updated (availableNow drains batches sequentially, so
-  the lag IS the sum of stage walls for that batch).
+  the lag IS the batch's wall).
 
-Usage: python tools/bench_stack.py [sf_dir] [n_batches] [out_json] [--conc]
-Defaults: .localdata/sf1.0, 4 batches, print-only. ``--conc`` skips the
-per-stage instrumentation and reports end-to-end lag only. (It existed to
-measure a thread-concurrent stage path that r10 tried and REMOVED after
-it measured 0.62x on local[32] — `evidence/bench_stack_sf1_conc_r10.json`
-captures that run from the commit where the path existed; today both
-modes execute the same sequential stages.)
+Usage: python tools/bench_stack.py [sf_dir] [n_batches] [out_json]
+Defaults: .localdata/sf1.0, 4 batches, print-only.
 """
 
 from __future__ import annotations
@@ -32,7 +29,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -51,6 +47,9 @@ def _dir_bytes(path: str) -> int:
 
 
 def _state_rows(spark, base: str) -> dict:
+    """Rows in each served artifact; 0 for one not written yet."""
+    from projet_data_engineering_spark.io import read_log_table
+
     out = {}
     for key, sub in (
         ("dedup_bands", "dedup_state/bands"),
@@ -63,21 +62,12 @@ def _state_rows(spark, base: str) -> dict:
         ("pq_codes", "pq/codes"),
     ):
         p = f"{base}/{sub}"
-        try:
-            if not os.path.isdir(p):
-                out[key] = 0
-                continue
-            from projet_data_engineering_spark.io import read_log_table
-
-            out[key] = read_log_table(spark, p).count()
-        except Exception:
-            out[key] = 0
+        out[key] = read_log_table(spark, p).count() if os.path.isdir(p) else 0
     return out
 
 
 def main() -> int:
-    conc = "--conc" in sys.argv
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    args = sys.argv[1:]
     sf_dir = args[0] if args else ".localdata/sf1.0"
     n_batches = int(args[1]) if len(args) > 1 else 4
     out_json = args[2] if len(args) > 2 else None
@@ -85,6 +75,7 @@ def main() -> int:
     import shutil
     import tempfile
 
+    from perfbench.census import Census
     from projet_data_engineering_spark.io import load_table, spread
     from projet_data_engineering_spark.session import get_spark
     from projet_data_engineering_spark.streaming.stack import (
@@ -105,7 +96,6 @@ def main() -> int:
     result = {
         "sf_dir": sf_dir,
         "n_batches": n_batches,
-        "mode": "lag-only" if conc else "sequential-stages",
         "batches": [],
     }
     try:
@@ -116,26 +106,23 @@ def main() -> int:
             src.filter(F.col("doc_id") % n_batches == k).write.parquet(p)
             batch_paths.append(p)
         base = f"{root}/stack"
+        census = Census(spark)
         for k, p in enumerate(batch_paths):
             batch = spark.read.parquet(p)
             n_rows = batch.count()
-            stage_s: dict[str, float] = {}
-            t0 = time.perf_counter()
-            stack_ingest_batch(
-                batch, base, k,
-                stage_seconds=None if conc else stage_s,
-            )
-            lag = time.perf_counter() - t0
-            rows = _state_rows(spark, base)
+            with census.span(f"batch{k}"):
+                stack_ingest_batch(batch, base, k)
+            c = census.calls[-1]
             rec = {
                 "batch": k,
                 "rows_in": n_rows,
-                "freshness_lag_sec": round(lag, 2),
-                "stage_sec": {s: round(v, 2) for s, v in stage_s.items()},
-                "stage_docs_per_sec": {
-                    s: round(n_rows / v, 1) for s, v in stage_s.items() if v
-                },
-                "state_rows": rows,
+                "freshness_lag_sec": round(c.wall_s, 2),
+                "jobs": c.jobs,
+                "stages": c.stages,
+                "tasks": c.tasks,
+                "busy_s": round(c.busy_s, 2),
+                "driver_s": round(c.driver_s, 2),
+                "state_rows": _state_rows(spark, base),
                 "state_bytes": _dir_bytes(base),
             }
             result["batches"].append(rec)

@@ -3,10 +3,12 @@
 per-job overhead vs actual compute (guide §1 — decide WHERE the time goes
 before touching anything).
 
-For each named query: one untimed warm run, then a timed run that also
-diffs the status-tracker job/stage/task counts. A query whose wall is
-~(n_jobs x per-job floor) is JOB-BOUND — the fix is fewer passes/rounds,
-not faster per-row code.
+For each named query: one untimed warm run, then a timed run inside a
+``perfbench.census.Census`` span, which counts every job the run launched
+(streaming micro-batch jobs included), the stages and tasks it ran, and
+splits its wall into busy seconds (inside Spark jobs) and driver seconds.
+A query whose wall is ~(n_jobs x per-job floor) is JOB-BOUND — the fix is
+fewer passes/rounds, not faster per-row code.
 
 Usage: python tools/profile_queries.py [sf_dir] q_a q_b ...
 """
@@ -16,18 +18,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from perfbench.census import Census  # noqa: E402
 from projet_data_engineering_spark.session import get_spark  # noqa: E402
-
-
-def snap(sc):
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(None) or []
-    return set(jobs)
 
 
 def run(spark, fn, sf_dir):
@@ -38,41 +34,28 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:]
     spark = get_spark("profile")
-    sc = spark.sparkContext
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     # JVM warmup on the fact table
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).write.format(
         "noop"
     ).mode("overwrite").save()
+    census = Census(spark)
     out = {}
     for name in names:
         fn = qs[name]
         run(spark, fn, sf_dir)  # warm
-        st = sc.statusTracker()
-        before = set(st.getJobIdsForGroup(None) or [])
-        t0 = time.time()
-        run(spark, fn, sf_dir)
-        wall = time.time() - t0
-        after = set(st.getJobIdsForGroup(None) or [])
-        new_jobs = sorted(after - before)
-        n_stages = 0
-        n_tasks = 0
-        for j in new_jobs:
-            ji = st.getJobInfo(j)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = st.getStageInfo(sid)
-                if si is not None:
-                    n_stages += 1
-                    n_tasks += si.numTasks
+        with census.span(name):
+            run(spark, fn, sf_dir)
+        c = census.calls[-1]
         out[name] = {
-            "wall_s": round(wall, 3),
-            "jobs": len(new_jobs),
-            "stages": n_stages,
-            "tasks": n_tasks,
-            "ms_per_job": round(1000 * wall / max(len(new_jobs), 1), 1),
+            "wall_s": round(c.wall_s, 3),
+            "jobs": c.jobs,
+            "stages": c.stages,
+            "tasks": c.tasks,
+            "ms_per_job": round(1000 * c.wall_s / max(c.jobs, 1), 1),
+            "busy_s": round(c.busy_s, 3),
+            "driver_s": round(c.driver_s, 3),
         }
         print(name, json.dumps(out[name]))
         spark.catalog.clearCache()
