@@ -17,12 +17,96 @@ from __future__ import annotations
 
 import os
 import re
+import threading
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# (path, mtime_ns, size, is_events) -> StructType; see load_table docstring
-_SCHEMA_CACHE: dict = {}
+# (application id, path, what, listing) -> value; see listing_memo
+_LISTING_MEMO: dict = {}
+_LISTING_MEMO_LOCK = threading.Lock()
+_LISTING_MEMO_MAX = 256
+
+
+def path_listing(spark: SparkSession, path: str) -> tuple:
+    """``(name, mtime ms, length)`` of every direct child of ``path`` (of
+    ``path`` itself when it is a file), sorted — one Hadoop ``listStatus``,
+    no Spark job."""
+    fs, jvm = _fs_for(spark, path)
+    return tuple(
+        sorted(
+            (st.getPath().getName(), st.getModificationTime(), st.getLen())
+            for st in fs.listStatus(_hpath(jvm, path))
+        )
+    )
+
+
+def listing_memo(
+    spark: SparkSession, path: str, what: str, compute, listing=None
+):
+    """``compute()`` — a schema, or a small manifest value read from
+    ``path`` — memoized under ``path``'s listing (``path_listing``) and the
+    SparkContext.
+
+    Reading either costs a request Spark jobs that do not depend on the
+    query: ``spark.read.parquet`` infers the schema from a footer on every
+    call (one job), and a manifest read adds a ``first()``. Every build,
+    refresh, commit or compaction rewrites the listed directory — new
+    part-file names, or a swapped-in child directory with a new mtime — so
+    a value is never staler than the listing taken on this very call.
+    Never memoize a data scan's file list here: a scan lists its files
+    itself, on every read.
+
+    ``listing`` passes a ``path_listing`` the caller already took. A path
+    that cannot be listed is not memoized: ``compute()`` runs and raises
+    Spark's own error for it."""
+    if listing is None:
+        try:
+            listing = path_listing(spark, path)
+        except Py4JJavaError:
+            return compute()
+    key = (spark.sparkContext.applicationId, path, what, listing)
+    with _LISTING_MEMO_LOCK:
+        if key in _LISTING_MEMO:
+            return _LISTING_MEMO[key]
+    value = compute()
+    with _LISTING_MEMO_LOCK:
+        if len(_LISTING_MEMO) >= _LISTING_MEMO_MAX:
+            del _LISTING_MEMO[next(iter(_LISTING_MEMO))]  # oldest first
+        _LISTING_MEMO[key] = value
+    return value
+
+
+def read_parquet(
+    spark: SparkSession, path: str, leaves=None, listing=None
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema memoized by
+    ``listing_memo``. ``leaves`` reads only those partition directories
+    under ``path`` (``basePath`` keeps their partition columns)."""
+    schema = listing_memo(
+        spark, path, "schema", lambda: spark.read.parquet(path).schema, listing
+    )
+    reader = spark.read.schema(schema)
+    if leaves is None:
+        return reader.parquet(path)
+    return reader.option("basePath", path).parquet(*leaves)
+
+
+def literal_frame(spark: SparkSession, rows: list, names: list) -> DataFrame:
+    """A small constant frame built JVM-side: one ``inline`` over a literal
+    array of structs. ``spark.createDataFrame(list)`` is a Python-RDD scan
+    that starts Python workers to produce a handful of rows."""
+    return spark.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(*[F.lit(v).alias(n) for v, n in zip(r, names)])
+                    for r in rows
+                ]
+            )
+        )
+    )
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -38,28 +122,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session factory — to make the read work under any caller-supplied
     SparkSession (e.g. a harness that builds its own vanilla session).
 
-    Schema cache (r10): ``spark.read.parquet`` re-infers the schema from
-    the footer on EVERY call — a measured ~0.14 s constant per query
-    build on this box, i.e. most of the wall of any sub-second query
-    (the q_token_count anchor investigation). The inferred schema is
-    memoized per (resolved path, mtime, size) and replayed through
-    ``spark.read.schema(...)``, which skips footer inference; the mtime/
-    size key keeps an overwritten file from serving a stale schema."""
+    The schema is memoized (``read_parquet``): footer inference costs
+    ~0.14 s per call on this box, most of the wall of a sub-second query."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/{name}.parquet"
-    key = None
-    try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size, name == "events")
-    except OSError:
-        pass  # non-local / multi-file source: fall through, no cache
-    if key is not None and key in _SCHEMA_CACHE:
-        df = spark.read.schema(_SCHEMA_CACHE[key]).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        if key is not None:
-            _SCHEMA_CACHE[key] = df.schema
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":

@@ -27,7 +27,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from projet_data_engineering_spark.io import load_table, spread
+from projet_data_engineering_spark.io import (
+    listing_memo,
+    literal_frame,
+    load_table,
+    path_listing,
+    read_parquet,
+    spread,
+)
 from projet_data_engineering_spark.registry import query
 
 TOKEN_PATTERN = "[^a-z0-9]+"
@@ -231,8 +238,10 @@ def bm25_scores_fuzzy(
 
     stats = toks.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avg_dl"))
 
-    qt = spark.createDataFrame(
-        [(t.lower(), auto_fuzziness(t)) for t in query_terms], ["qterm", "fuzz"]
+    qt = literal_frame(
+        spark,
+        [(t.lower(), auto_fuzziness(t)) for t in query_terms],
+        ["qterm", "fuzz"],
     )
     exploded = toks.select(id_col, "dl", F.explode("tokens").alias("term"))
     vmatch = (
@@ -347,7 +356,9 @@ def q_term_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ES postings intersection, ``app/main.py:115-154``). The term table is tiny
     → broadcast hash join; the explode never leaves its stage."""
     d = load_table(spark, sf_dir, "documents")
-    terms = spark.createDataFrame([("spark",), ("join",), ("stream",), ("vector",)], ["term"])
+    terms = literal_frame(
+        spark, [("spark",), ("join",), ("stream",), ("vector",)], ["term"]
+    )
     # broadcast-join BEFORE distinct: the dedup shuffle then carries only
     # query-term matches instead of every (doc, token) pair in the corpus
     return (
@@ -624,17 +635,19 @@ def q_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_LAYOUT_VERSION = 2
 
 
-def _check_index_layout(stats: DataFrame, index_path: str, ctx: str) -> None:
+def _check_index_layout(stats, index_path: str, ctx: str) -> None:
     """Raise unless the stats manifest carries the current layout stamp.
+    ``stats`` is the manifest as a DataFrame, or its row as a dict
+    (``_index_stats``).
 
     An EMPTY stats manifest (a crash between the index dirs landing and the
     stats rows committing) must surface the rebuild diagnostic below, not a
     raw TypeError from ``first()`` returning None (r11 advice)."""
-    if "layout_version" in stats.columns:
-        row = stats.select("layout_version").first()
-        v = int(row[0]) if row is not None and row[0] is not None else 1
-    else:
-        v = 1
+    if isinstance(stats, DataFrame):
+        row = stats.first()
+        stats = None if row is None else row.asDict()
+    v = (stats or {}).get("layout_version")
+    v = 1 if v is None else int(v)
     if v != BM25_LAYOUT_VERSION:
         raise ValueError(
             f"{ctx}: index at {index_path} has layout_version={v}, this "
@@ -642,6 +655,50 @@ def _check_index_layout(stats: DataFrame, index_path: str, ctx: str) -> None:
             f"rebuild it with build_search_index (old vocab rows lack "
             f"term_len and would silently vanish from fuzzy serving)"
         )
+
+
+def _index_stats(spark: SparkSession, index_path: str) -> dict | None:
+    """The index's 1-row stats manifest as a dict (None when empty),
+    memoized on the manifest directory's listing — every build and
+    refresh rewrites it, so a changed index is re-read."""
+    path = f"{index_path}/stats"
+
+    def read() -> dict | None:
+        row = spark.read.parquet(path).first()
+        return None if row is None else row.asDict()
+
+    return listing_memo(spark, path, "row", read)
+
+
+def _bm25_score(
+    hits: DataFrame,
+    id_col: str,
+    key: str,
+    stats: dict,
+    k1: float,
+    b: float,
+) -> DataFrame:
+    """BM25 over index hits holding one row per (doc, ``key``) with its
+    ``tf`` and ``dl``, so a term's df is a plain row count. The corpus
+    stats enter as literals. Doc frequencies are broadcast; the only
+    non-trivial shuffle is the per-doc score sum over hit rows."""
+    dfc = hits.groupBy(key).agg(F.count("*").alias("df"))
+    df = F.col("df")
+    tf = F.col("tf")
+    return (
+        hits.join(F.broadcast(dfc), key)
+        .withColumn(
+            "idf", F.log(1.0 + (F.lit(stats["n_docs"]) - df + 0.5) / (df + 0.5))
+        )
+        .withColumn(
+            "term_score",
+            F.col("idf")
+            * (tf * (k1 + 1))
+            / (tf + k1 * (1 - b + b * F.col("dl") / F.lit(stats["avg_dl"]))),
+        )
+        .groupBy(id_col)
+        .agg(F.round(F.sum("term_score"), 4).alias("score"))
+    )
 
 
 def build_search_index(
@@ -680,8 +737,9 @@ def build_search_index(
       plus the layout manifest (``n_buckets``): serving derives its bucket
       pruning from the stored value, so a build/serve bucket-count mismatch
       (which would silently prune away valid postings) cannot happen.
-      Written LAST — stats is the first thing every serve path reads, so
-      its presence is the build's commit marker: a crash between artifact
+      Written LAST — every serve path reads its row (memoized on the
+      stats directory's listing) before any other artifact, so its
+      presence is the build's commit marker: a crash between artifact
       writes can never be observed as a half-built but servable index.
 
     At 100 TB this build is the once-per-reindex cost that every subsequent
@@ -763,16 +821,21 @@ def bm25_serve(
     scores. Passing ``n_buckets`` explicitly is allowed only as an assertion
     — it must equal the stored value or this raises. The bucket list is then
     computed driver-side with the same CRC-32 the build used (zlib and Spark
-    share the standard polynomial), so the bucket predicate is a literal
-    IN-list that reaches the parquet reader as a PartitionFilter: the scan
+    share the standard polynomial).
+
+    Only metadata is memoized: the stats row (n_docs, avg_dl, n_buckets
+    enter the plan as literals) and the postings schema, each keyed on its
+    directory's listing (``io.listing_memo``), so a warm request launches
+    no schema-inference, stats or partition-discovery job. The scan reads
+    just the probed ``term_bucket=`` directories that exist, listed afresh
+    on every call, and keeps the bucket IN-list as a PartitionFilter: it
     reads |query-term buckets| directories, not the index (plan-asserted in
-    ``test_search.py``). Doc frequencies fold per term from the pruned hits;
-    corpus stats are the stored 1-row table; both broadcast — the only
-    non-trivial shuffle is the per-doc score sum over hit rows."""
+    ``test_search.py``). (term, doc_id) is unique in the postings, so the
+    hits score directly (``_bm25_score``)."""
     import zlib
 
-    stats = spark.read.parquet(f"{index_path}/stats")
-    stored = stats.select("n_buckets").first()[0]
+    stats = _index_stats(spark, index_path)
+    stored = stats["n_buckets"]
     if n_buckets is not None and n_buckets != stored:
         raise ValueError(
             f"bm25_serve: caller asserted n_buckets={n_buckets} but the index "
@@ -784,30 +847,21 @@ def bm25_serve(
         if t not in terms:
             terms.append(t)
     buckets = sorted({zlib.crc32(t.encode("utf-8")) % n_buckets for t in terms})
+    postings = f"{index_path}/postings"
+    listing = path_listing(spark, postings)
+    present = {name for name, _mtime, _len in listing}
+    leaves = [
+        f"{postings}/term_bucket={bk}"
+        for bk in buckets
+        if f"term_bucket={bk}" in present
+    ]
     hits = (
-        spark.read.parquet(f"{index_path}/postings")
+        # no probed bucket on disk: read the root, which the filter prunes
+        read_parquet(spark, postings, leaves or None, listing)
         .filter(F.col("term_bucket").isin(buckets))
         .filter(F.col("term").isin(terms))
     )
-    stats = stats.select("n_docs", "avg_dl")
-    # (term, doc_id) is unique in the postings table, so df = plain count.
-    dfc = hits.groupBy("term").agg(F.count("*").alias("df"))
-    return (
-        hits.join(F.broadcast(dfc), "term")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avg_dl"))),
-        )
-        .groupBy(id_col)
-        .agg(F.round(F.sum("term_score"), 4).alias("score"))
-    )
+    return _bm25_score(hits, id_col, "term", stats, k1, b)
 
 
 def bm25_serve_fuzzy(
@@ -841,13 +895,20 @@ def bm25_serve_fuzzy(
     dictionary — cluster-sized like every other scan, with no 38× state
     to maintain in the streaming refresher.
 
-    The matched term->qterm map is a broadcast, and the postings scan is
-    pruned to the matched variants' buckets via a literal IN-list
-    PartitionFilter (bucket ids collected driver-side — bounded by
-    ``n_buckets``, never corpus-sized). All fuzzy variants of a query
-    term score as THAT term (tf sums variants, df counts docs with any
-    variant), identical semantics to the scan-path ``bm25_scores_fuzzy``
-    — asserted hash-identical by ``q_bm25_fuzzy_served``'s shared oracle.
+    The query terms are a JVM-side literal frame (``io.literal_frame``),
+    and the matched (term_bucket, term) -> qterm map joins the postings
+    as a broadcast in the same plan, so the expansion runs once, with no
+    checkpoint and no collect between jobs. Its banded ``term_len`` filter
+    already marks the broadcast side selective, which Spark's
+    PartitionPruning rule requires before it injects a dynamic partition
+    filter, so no extra marker is needed: the postings scan reads only
+    the matched variants' buckets (``dynamicpruningexpression`` in its
+    PartitionFilters, plan-asserted in ``test_search.py``). All fuzzy
+    variants of a query term score as THAT term (tf sums variants, df
+    counts docs with any variant), identical semantics to the scan-path
+    ``bm25_scores_fuzzy`` — asserted hash-identical by
+    ``q_bm25_fuzzy_served``'s shared oracle. Stats and schemas come from
+    the listing-keyed memo, as in ``bm25_serve``.
 
     Freshness contract: ``build_search_index`` writes stats (the serve
     entry point) last, and ``run_stream_index_refresh`` merges vocab
@@ -855,19 +916,19 @@ def bm25_serve_fuzzy(
     ⊇ the stored postings' terms — a fuzzy query can never miss a served
     posting; dictionary terms whose postings haven't landed yet simply
     match nothing."""
-    stats = spark.read.parquet(f"{index_path}/stats")
+    stats = _index_stats(spark, index_path)
     _check_index_layout(stats, index_path, "bm25_serve_fuzzy")
     qt = []
     for t in (t.lower() for t in query_terms):
         if t not in {q for q, _ in qt}:
             qt.append((t, auto_fuzziness(t)))
-    qterms = spark.createDataFrame(qt, ["qterm", "fuzz"])
+    qterms = literal_frame(spark, qt, ["qterm", "fuzz"])
     # literal length band from the query's OWN terms — reaches the vocab
     # reader as a pushed range filter over the term_len-sorted row groups
     lo = min(len(q) - f for q, f in qt)
     hi = max(len(q) + f for q, f in qt)
-    vexp = (
-        spark.read.parquet(f"{index_path}/vocab")
+    vmatch = (
+        read_parquet(spark, f"{index_path}/vocab")
         .filter(F.col("term_len").between(F.lit(lo), F.lit(hi)))
         .join(
             F.broadcast(qterms),
@@ -876,57 +937,21 @@ def bm25_serve_fuzzy(
         )
         # vocab terms are unique and the broadcast join emits each
         # (term, qterm) pair at most once — no dedup shuffle needed
-        .select("term", "qterm", "term_bucket")
+        .select("term_bucket", "term", "qterm")
     )
     if plans_out is not None:
-        # the dictionary expansion executes eagerly below (checkpoint), so
-        # its banded-scan plan is not part of the returned scoring frame's
-        # plan — surface it for the pushdown plan-assertions (same
-        # convention as incremental_dedup_pairs_served)
+        # the banded dictionary scan on its own, for the pushdown
+        # plan-assertions (same convention as
+        # incremental_dedup_pairs_served)
         plans_out["vmatch"] = (
-            vexp._jdf.queryExecution().executedPlan().toString()
+            vmatch._jdf.queryExecution().executedPlan().toString()
         )
-    # materialize ONCE (r12): vmatch has two consumers — the bucket
-    # collect below and the scoring join's broadcast — and without a
-    # checkpoint the second consumer re-ran the whole dictionary
-    # expansion (the 64-bucket-dir vocab scan ran ~3x per serve:
-    # measured 2x ~30-task scan jobs of pure re-expansion at sf0.1).
-    # The matched-variant set is query-bounded (|q| terms x edit-
-    # distance neighbors), never dictionary-sized — so the coalesce
-    # collapses every consumer to single-task reads while the scan
-    # itself (the |V|-proportional levenshtein pass) stays parallel
-    # in the checkpoint job's 26-32 split tasks.
-    vmatch = vexp.localCheckpoint(eager=True).coalesce(1)
-    # literal bucket list -> PartitionFilter on the postings scan; bounded
-    # by n_buckets regardless of how many variants matched
-    buckets = sorted(
-        int(r["term_bucket"])
-        for r in vmatch.select("term_bucket").distinct().collect()
+    hits = read_parquet(spark, f"{index_path}/postings").join(
+        F.broadcast(vmatch), ["term_bucket", "term"]
     )
-    hits = (
-        spark.read.parquet(f"{index_path}/postings")
-        .filter(F.col("term_bucket").isin(buckets))
-        .join(F.broadcast(vmatch.select("term", "qterm")), "term")
-    )
+    # rows are unique per (doc, qterm) after the variant sum
     tf = hits.groupBy(id_col, "dl", "qterm").agg(F.sum("tf").alias("tf"))
-    dfc = tf.groupBy("qterm").agg(F.countDistinct(id_col).alias("df"))
-    stats = stats.select("n_docs", "avg_dl")
-    return (
-        tf.join(F.broadcast(dfc), "qterm")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf",
-            F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-        .withColumn(
-            "term_score",
-            F.col("idf")
-            * (F.col("tf") * (k1 + 1))
-            / (F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.col("avg_dl"))),
-        )
-        .groupBy(id_col)
-        .agg(F.round(F.sum("term_score"), 4).alias("score"))
-    )
+    return _bm25_score(tf, id_col, "qterm", stats, k1, b)
 
 
 @query(

@@ -19,8 +19,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType
 
-from projet_data_engineering_spark.io import load_table
+from projet_data_engineering_spark.io import (
+    listing_memo,
+    load_table,
+    read_parquet,
+)
 from projet_data_engineering_spark.operators.ml import (
     DIM,
     kmeans_centroid_ctes,
@@ -316,6 +321,29 @@ def train_ann_quantizer(
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
+def _centroid_literal(spark: SparkSession, index_path: str) -> Column:
+    """The index's stored quantizer as one array<struct(cent_id, cv)>
+    literal, typed as stored — the ``cents`` column ``_ivf_scored_cents``
+    scores. Memoized on the centroids directory's listing
+    (``io.listing_memo``): every (re)build rewrites it."""
+    path = f"{index_path}/centroids"
+
+    def build() -> Column:
+        stored = spark.read.parquet(path).select("cent_id", "cv")
+        cents = F.array(
+            *[
+                F.struct(
+                    F.lit(r["cent_id"]).alias("cent_id"),
+                    F.array(*[F.lit(x) for x in r["cv"]]).alias("cv"),
+                )
+                for r in stored.collect()
+            ]
+        )
+        return cents.cast(ArrayType(stored.schema))
+
+    return listing_memo(spark, path, "cents", build)
+
+
 def ann_serve(
     spark: SparkSession,
     index_path: str,
@@ -325,24 +353,25 @@ def ann_serve(
     exclude_self: bool = True,
 ) -> DataFrame:
     """ANN top-k FROM the materialized IVF index, never scanning the
-    embedding corpus: (query_id, v) queries score the stored quantizer
-    (tiny table → 1-row broadcast artifact, same rounding/tiebreak as the
-    build), their union of probed list ids — ≤ |queries|·nprobe values, a
-    metadata-scale collect — prunes the assignments scan to those
-    partitions (PartitionFilters, plan-asserted in
-    ``test_dedup_similarity.py``), and exact cosine + per-query top-k runs
-    over the pruned lists only. Identical output to the in-query IVF path
+    embedding corpus: (query_id, v) queries score the stored quantizer —
+    a literal array memoized on the centroids directory's listing
+    (``_centroid_literal``), same rounding/tiebreak as the build — and
+    their probes join the assignments as a broadcast in one plan. The
+    probes' ``cent_id >= 0`` filter is a no-op (centroid ids are
+    non-negative) that marks the broadcast side selective, so Spark's
+    PartitionPruning rule injects a dynamic partition filter: the
+    assignments scan reads only the probed lists
+    (``dynamicpruningexpression`` in its PartitionFilters, plan-asserted
+    in ``test_dedup_similarity.py``), with no checkpoint and no collect
+    between jobs, and exact cosine + per-query top-k runs over the pruned
+    lists only. Identical output to the in-query IVF path
     (``q_ann_ivf_served`` shares ``q_ann_ivf``'s independent oracle)."""
     from pyspark.sql import Window
 
-    cents = (
-        spark.read.parquet(f"{index_path}/centroids")
-        .select(F.struct("cent_id", "cv").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
-        .localCheckpoint(eager=True)
-    )
     probes = (
-        queries.crossJoin(F.broadcast(cents))
+        queries.select(
+            "query_id", "v", _centroid_literal(spark, index_path).alias("cents")
+        )
         .select(
             "query_id",
             F.col("v").alias("qv"),
@@ -351,13 +380,11 @@ def ann_serve(
             ).alias("neg_id"),
         )
         .select("query_id", "qv", (-F.col("neg_id")).alias("cent_id"))
-        .localCheckpoint(eager=True)
     )
-    lists = [r[0] for r in probes.select("cent_id").distinct().collect()]
-    assigned = spark.read.parquet(f"{index_path}/assignments").filter(
-        F.col("cent_id").isin(lists)
+    assigned = read_parquet(spark, f"{index_path}/assignments")
+    scored = assigned.join(
+        F.broadcast(probes.filter(F.col("cent_id") >= 0)), "cent_id"
     )
-    scored = assigned.join(F.broadcast(probes), "cent_id")
     if exclude_self:
         scored = scored.filter(F.col("vec_id") != F.col("query_id"))
     scored = scored.select(

@@ -42,6 +42,7 @@ from projet_data_engineering_spark.io import (
     acquire_merge_lock,
     load_table,
     path_exists,
+    read_parquet,
     release_merge_lock,
     spread,
 )
@@ -266,7 +267,13 @@ def read_version(
     Delta/Iceberg add-column semantics. Compaction preserves this: the
     folded base's schema is the union over the folded prefix, so any
     still-readable AS-OF version sees the same columns pre- and
-    post-compaction (the equivalence law is pytest-pinned)."""
+    post-compaction (the equivalence law is pytest-pinned).
+
+    Each version directory is read with its schema memoized on the
+    directory's listing (``io.read_parquet``): a committed version changes
+    only when a compaction rewrites it, so a warm read launches no
+    schema-inference job (freshness pinned in
+    ``test_serve_freshness.py``)."""
     dirs = _version_dirs(spark, path)
     if not dirs:
         raise ValueError(f"no versioned table at {path}")
@@ -281,7 +288,7 @@ def read_version(
         vs = [v for v in vs if v <= version]
     scans = None
     for v in vs:
-        s = spark.read.parquet(f"{path}/{dirs[v]}").withColumn(
+        s = read_parquet(spark, f"{path}/{dirs[v]}").withColumn(
             "_v", F.lit(v)
         )
         scans = (
@@ -336,7 +343,7 @@ def read_versions_stacked(
     vmax = max(resolved)
     scans = None
     for v in [v for v in vs if v <= vmax]:
-        s = spark.read.parquet(f"{path}/{dirs[v]}").withColumn(
+        s = read_parquet(spark, f"{path}/{dirs[v]}").withColumn(
             "_v", F.lit(v)
         )
         scans = s if scans is None else scans.unionByName(s)
@@ -392,13 +399,13 @@ def read_changes(
         # no changes in range: schema-correct empty slice
         latest = sorted(dirs)[-1]
         return (
-            spark.read.parquet(f"{path}/{dirs[latest]}")
+            read_parquet(spark, f"{path}/{dirs[latest]}")
             .withColumn("_v", F.lit(latest))
             .limit(0)
         )
     scans = None
     for v in vs:
-        s = spark.read.parquet(f"{path}/{dirs[v]}").withColumn("_v", F.lit(v))
+        s = read_parquet(spark, f"{path}/{dirs[v]}").withColumn("_v", F.lit(v))
         scans = (
             s
             if scans is None
@@ -487,7 +494,7 @@ def _compact_locked(
         return
     scans = None
     for v in vs:
-        s = spark.read.parquet(f"{path}/{dirs[v]}").withColumn("_v", F.lit(v))
+        s = read_parquet(spark, f"{path}/{dirs[v]}").withColumn("_v", F.lit(v))
         scans = (
             s
             if scans is None

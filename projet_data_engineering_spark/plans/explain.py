@@ -119,3 +119,33 @@ def unbounded_global_windows(df: DataFrame) -> list[str]:
             bad.append(node.simpleString(10))
         stack.extend(children(node))
     return bad
+
+
+def scan_partitions_read(df: DataFrame) -> dict[str, int]:
+    """{scan location: partitions read} for every partitioned file scan of
+    ``df``'s EXECUTED plan, from the scans' ``number of partitions read``
+    metric — so partitions a dynamic partition filter pruned at run time
+    are not counted. Walks into adaptive query stages and reused
+    exchanges. Call after ``df`` has run, on test-scale data only."""
+    out: dict[str, int] = {}
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if name == "ReusedExchangeExec":
+            stack.append(node.child())
+            continue
+        metric = node.metrics().get("numPartitions")
+        if name == "FileSourceScanExec" and metric.isDefined():
+            loc = node.relation().location().rootPaths()
+            roots = ",".join(loc.apply(i).toString() for i in range(loc.size()))
+            out[roots] = int(metric.get().value())
+        cs = node.children()
+        stack.extend(cs.apply(i) for i in range(cs.size()))
+    return out

@@ -128,6 +128,19 @@ def test_bm25_served_matches_scan_path_and_prunes(spark, tmp_path):
         if p.name.startswith("term_bucket=")
     }
     assert len(on_disk) > 2
+    # the scan lists only the probed bucket directories, never the root
+    from projet_data_engineering_spark.plans.explain import (
+        scan_partitions_read,
+    )
+
+    probed = {
+        f"term_bucket={zlib.crc32(t.encode()) % 16}" for t in ("spark", "join")
+    }
+    scans = scan_partitions_read(served)
+    assert scans, plan
+    for roots in scans:
+        leaves = {r.rsplit("/", 1)[1] for r in roots.split(",")}
+        assert leaves <= probed, (leaves, probed)
     # serve-only plan touches no document column — the corpus is not in it
     assert "text#" not in plan
 
@@ -168,10 +181,16 @@ def test_bm25_fuzzy_served_matches_scan_path_and_prunes(spark, tmp_path):
     want = {r["doc_id"]: r["score"] for r in scan.collect()}
     assert got == want and got  # same docs, identical 4dp scores
 
-    # the postings scan carries a term_bucket PartitionFilter...
+    # the postings scan carries a term_bucket PartitionFilter — the
+    # matched variants prune it at run time (dynamic partition pruning)...
     plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan, plan
-    assert "term_bucket" in plan.split("PartitionFilters", 1)[1][:400], plan
+    post_scans = [
+        seg for seg in plan.split("FileScan")[1:] if "doc_id" in seg[:700]
+    ]
+    assert post_scans, plan
+    for seg in post_scans:
+        pf = seg.split("PartitionFilters", 1)[1][:400]
+        assert "dynamicpruningexpression(term_bucket" in pf, seg[:900]
     # ...and the corpus text column appears nowhere in the serve plan
     assert "text#" not in plan
 
@@ -272,9 +291,8 @@ def test_bm25_fuzzy_served_prunes_the_dictionary_scan(spark, tmp_path):
     served = bm25_serve_fuzzy(spark, idx, ["strem"], plans_out=plans)
     served.collect()
     plan = served._jdf.queryExecution().executedPlan().toString()
-    # r12: the dictionary expansion is checkpointed once (it had two
-    # consumers and re-ran per consumer), so its banded scan lives in the
-    # surfaced vmatch plan, not the scoring frame's plan
+    # the banded dictionary scan is also surfaced on its own, as the
+    # vmatch plan
     vocab_scans = [
         seg
         for seg in plans["vmatch"].split("FileScan")[1:]

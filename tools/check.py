@@ -25,6 +25,7 @@ import hashlib
 import math
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -76,6 +77,12 @@ def make_duckdb(sf_dir: str):
     from projet_data_engineering_spark import TABLES
 
     con = duckdb.connect()
+    # DuckDB's default limit is 80% of the machine's RAM, which one runaway
+    # oracle can fill before failing; a fixed cap turns that into a quick,
+    # contained failure, spilling to a per-process TMPDIR directory first
+    con.execute("SET memory_limit='3GB'")
+    spill = os.path.join(tempfile.gettempdir(), f"duckdb_spill_{os.getpid()}")
+    con.execute(f"SET temp_directory='{spill}'")
     # sharded big-SF sweeps run several check processes side by side; cap
     # each one's DuckDB thread pool so the shards share the machine fairly
     if os.environ.get("CHECK_DUCK_THREADS"):
