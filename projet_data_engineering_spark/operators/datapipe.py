@@ -1390,9 +1390,25 @@ def pack_sequences(
 ) -> DataFrame:
     """Token-budget sequence packing — the layout step that turns a curated
     corpus into fixed-size training windows (every LLM pretraining loader
-    does exactly this before batching).
+    does exactly this before batching). Whitespace token counts of
+    ``text_col`` feed :func:`pack_windows`."""
+    return pack_windows(
+        docs.select(
+            F.col(stream_col).alias("stream"),
+            F.col(id_col).alias("doc"),
+            F.size(F.split(F.col(text_col), " ")).alias("ntok"),
+        ),
+        budget,
+        shard_size,
+    )
 
-    Documents are laid out contiguously per (stream, shard) in ``id_col``
+
+def pack_windows(
+    laid: DataFrame, budget: int = PACK_BUDGET, shard_size: int = PACK_SHARD
+) -> DataFrame:
+    """Pack (stream, doc, ntok) rows into ``budget``-token windows.
+
+    Documents are laid out contiguously per (stream, shard) in ``doc``
     order; a document belongs to the context window its FIRST token lands in
     (cumulative tokens before it, integer-divided by ``budget`` — documents
     overflowing a boundary spill into the next window, the standard packed
@@ -1406,22 +1422,16 @@ def pack_sequences(
     ids are (shard, seq_in_shard) pairs: shard boundaries start fresh
     windows, which wastes at most one partial window per shard — the same
     deal every sharded pretraining layout accepts."""
-    ntok = F.size(F.split(F.col(text_col), " "))
     # integer division, not float-divide-then-cast: stays exact over the
     # full int64 id range (float division loses precision past 2^53)
-    shard = F.expr(f"{id_col} div {shard_size}")
+    shard = F.expr(f"doc div {shard_size}")
     w = (
         Window.partitionBy("stream", "shard")
         .orderBy("doc")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     laid = (
-        docs.select(
-            F.col(stream_col).alias("stream"),
-            F.col(id_col).alias("doc"),
-            shard.alias("shard"),
-            ntok.alias("ntok"),
-        )
+        laid.select("stream", "doc", shard.alias("shard"), "ntok")
         .withColumn(
             "cum_before", F.coalesce(F.sum("ntok").over(w), F.lit(0))
         )

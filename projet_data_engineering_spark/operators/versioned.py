@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import (
+    _fs_child_names,
     _fs_for,
     _hpath,
     acquire_merge_lock,
@@ -72,15 +73,6 @@ def _writer_lock(spark: SparkSession, path: str):
         release_merge_lock(spark, path, token)
 
 
-def _fs_list(spark: SparkSession, path: str) -> list[str]:
-    """Names of the direct children of ``path`` (empty if absent)."""
-    fs, jvm = _fs_for(spark, path)
-    hpath = _hpath(jvm, path)
-    if not fs.exists(hpath):
-        return []
-    return [s.getPath().getName() for s in fs.listStatus(hpath)]
-
-
 class InterruptedCompactionError(RuntimeError):
     """A completed-but-unpublished compaction tmp exists: the version
     prefix may be half-deleted, so any listing-based read would silently
@@ -107,7 +99,7 @@ def _version_dirs(
     WITHOUT ``_SUCCESS`` is harmless (crash — or a live compactor —
     mid-step-1: the prefix is untouched) and is ignored. Recovery itself
     passes ``check_compaction=False``."""
-    names = _fs_list(spark, path)
+    names = _fs_child_names(spark, path)
     if check_compaction:
         for name in names:
             m = _COMPACT_TMP.match(name)
@@ -442,7 +434,7 @@ def recover_compaction(spark: SparkSession, path: str) -> None:
 def _recover_locked(spark: SparkSession, path: str) -> None:
     """Recovery body — caller MUST hold the writer lock."""
     fs, jvm = _fs_for(spark, path)
-    for name in _fs_list(spark, path):
+    for name in _fs_child_names(spark, path):
         m = _COMPACT_TMP.match(name)
         if not m:
             continue

@@ -4,20 +4,22 @@ pretraining-data build the 100 TB story is ultimately about").
 
 Every stage exists individually as an oracle-checked query (q_curate,
 q_contamination, q_pii_redact, q_split_groupsafe, q_pack_sequences); this
-module is their COMPOSITION, with the plan fixes composition demands:
+module is their COMPOSITION, computed once:
 
-- **Near-dup labels are computed ONCE** and reused by both consumers — the
-  drop list (stage 1) and the leakage-safe split roots (stage 5). Run as
-  separate queries those two each pay the full MinHash → LSS component
-  pipeline; composed, the (node, root) relation is persisted and both reads
-  hit the materialization. At 100 TB the label computation IS the expensive
-  corpus shuffle, so halving it dominates everything else this file does.
-- **No data-dependent broadcast hints**: the drop list and relabel map ride
-  plain joins under AQE (SCALING.md "Drop-list anti-joins").
-- **Filters compose before heavy stages**: contamination probing and
-  sequence packing run on the ALREADY deduped+quality-floored survivor set,
-  not the raw corpus — the stage order is chosen so each successive pass
-  scans fewer rows (dedup/quality are cheap relative to n-gram explosion).
+- **One stored status frame.** ``curate_corpus`` runs the stage chain once
+  into a narrow per-document frame — (doc_id, source, n_tokens, root,
+  split, reached), no text — stored by a lineage-truncating
+  ``localCheckpoint``. The funnel is one explode of each document's reached
+  stages plus one groupBy, the train windows pack the stored token counts,
+  and the splits join the survivors back to the corpus text for redaction.
+  Each stage predicate is written once and no output replays the chain: at
+  100 TB the frame is tens of bytes per document, against one corpus-text
+  re-scan per output.
+- **Near-dup labels are computed ONCE**: one join feeds stages 1 and 5.
+- **No data-dependent broadcast hints**: the labels and the contaminated
+  list ride plain joins under AQE (SCALING.md "Drop-list anti-joins").
+- **Filters compose before heavy stages**: the 5-gram probe explodes only
+  the deduped + quality-floored, non-eval documents.
 
 Stage semantics (all identical to their standalone queries):
   1. near-dup removal  — MinHash-LSH candidates → LSS components → keep
@@ -28,17 +30,15 @@ Stage semantics (all identical to their standalone queries):
      probe set (q_contamination's relation; eval = doc_id % 97 == 0
      stand-in, excluded from the corpus as well);
   4. PII redaction     — email/phone regexp_replace, map-only, with the
-     per-doc scrub count audit column (q_pii_redact's patterns);
-  5. leakage-safe split — md5 bucket of the near-dup CLUSTER ROOT (reused
-     labels), 13/13/230 test/valid/train (q_split_groupsafe's rule);
+     per-doc scrub count audit column (q_pii_redact's patterns); it drops
+     nothing and changes no token count (neither pattern matches a space);
+  5. leakage-safe split — md5 bucket of the near-dup CLUSTER ROOT, 13/13/230
+     test/valid/train (q_split_groupsafe's rule);
   6. sequence packing   — token-budget windows over the train split
-     (datapipe.pack_sequences, one shuffle).
+     (datapipe.pack_windows, one shuffle).
 
-``curate_corpus`` returns the packed-window manifest plus a per-stage
-accounting DataFrame (docs/tokens surviving each stage — the tokens-in /
-tokens-out numbers SCALING.md publishes). ``tools/bench_curation.py`` runs
-it at big SF; ``tests/test_curation_pipeline.py`` pins stage-vs-standalone
-parity at test scale.
+``tools/bench_curation.py`` runs it at big SF and
+``tests/test_curation_pipeline.py`` pins stage-vs-standalone parity.
 
 Reference anchor: the reference curates per-document at ingest
 (``scraper/main.py:88`` seen-set, ``:263`` upsert); this is that loop as a
@@ -50,7 +50,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from projet_data_engineering_spark.operators.datapipe import pack_sequences
+from projet_data_engineering_spark.operators.datapipe import pack_windows
 from projet_data_engineering_spark.operators.dedup import (
     connected_components_lss,
     minhash_candidate_pairs,
@@ -63,6 +63,11 @@ from projet_data_engineering_spark.registry import query
 
 EMAIL_RE = r"[a-z0-9#_]+@[a-z]+[.][a-z]+"
 PHONE_RE = r"[+]1-555-[0-9]+"
+# The funnel stages in chain order. A document's ``reached`` is the index of
+# the last one it passed; redaction drops nothing, so a document that passes
+# decontamination ships into its split, the stage after the chain.
+CHAIN = ("0_raw", "1_dedup", "2_quality", "3_decontaminated", "4_redacted")
+SHIPPED = len(CHAIN)
 
 
 def curate_corpus(
@@ -75,47 +80,46 @@ def curate_corpus(
     source, n_chars). Returns a dict of DataFrames:
 
     - ``train_windows``: the packed-sequence manifest for the train split;
-    - ``splits``: (doc_id, root, split, redacted, n_pii, n_tokens) — the
-      curated, redacted, split-assigned corpus;
+    - ``splits``: (doc_id, source, n_chars, n_tokens, redacted, n_pii, root,
+      split) — the curated, redacted, split-assigned corpus;
     - ``funnel``: one row per stage with docs/tokens surviving — the
-      tokens-in/tokens-out audit.
+      tokens-in/tokens-out audit SCALING.md publishes;
+    - ``_labels`` (doc_id, root of its near-dup cluster, for every doc in a
+      candidate pair) and ``_contaminated`` (doc_id).
 
-    Nothing is collected driver-side except what the caller materializes;
-    the labels relation is persisted because two stages consume it."""
-    ntok = F.size(F.split(F.lower("text"), " "))
-    corpus = docs.select(
-        "doc_id", "text", "source", "n_chars", ntok.alias("n_tokens")
-    )
-
-    # ---- stage 1: near-dup labels, computed ONCE for stages 1 and 5 ----
-    labels = (
-        connected_components_lss(
-            minhash_candidate_pairs(docs, "doc_id", "text")
-        )
-        .withColumnRenamed("node", "doc_id")
-        .persist()
-    )
-    labels.count()  # materialize so neither consumer re-runs the LSS rounds
-    drop = labels.filter(F.col("doc_id") != F.col("root")).select("doc_id")
-    deduped = corpus.join(drop, "doc_id", "left_anti")
-
-    # ---- stage 2: quality floor (q_curate's score) ----
+    The chain runs here, eagerly, into the stored status frame; every
+    returned frame reads it. Nothing is cached for the caller to release:
+    the checkpoint's blocks are reclaimed once no frame references them, and
+    ``unpersist()`` on ``_labels`` / ``_contaminated`` is harmless."""
     toks = F.split(F.lower("text"), " ")
+    corpus = docs.select(
+        "doc_id", "text", "source", F.size(toks).alias("n_tokens")
+    )
+    labels = connected_components_lss(
+        minhash_candidate_pairs(docs, "doc_id", "text")
+    ).withColumnRenamed("node", "doc_id")
+
+    # ---- stages 1-2: near-dup roots, quality floor (q_curate's score) ----
     n_stop = stopword_hits(toks, STOPWORDS["en"])
     quality = F.least(F.col("n_tokens") / F.lit(50.0), F.lit(1.0)) * (
         0.5 + F.least(n_stop.cast("double") / F.col("n_tokens"), F.lit(0.5))
     )
-    quality_ok = deduped.withColumn("q", quality).filter(
-        F.col("q") >= min_quality
+    is_eval = F.col("doc_id") % eval_mod == 0
+    base = corpus.join(labels, "doc_id", "left").withColumn(
+        "root", F.coalesce("root", "doc_id")
+    ).withColumn(
+        "reached",
+        F.when(F.col("root") != F.col("doc_id"), 0)
+        # the eval probe itself passes no further than the quality floor
+        .when(quality >= min_quality, F.when(is_eval, 2).otherwise(SHIPPED))
+        .otherwise(1),
     )
 
     # ---- stage 3: decontamination vs the eval probe ----
-    t = F.split(F.lower("text"), " ")
     grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 4),
-        lambda i: F.array_join(F.slice(t, i, 5), " "),
+        F.sequence(F.lit(1), F.size(toks) - 4),
+        lambda i: F.array_join(F.slice(toks, i, 5), " "),
     )
-    is_eval = F.col("doc_id") % eval_mod == 0
     # eval grams from the RAW corpus (the benchmark suite is fixed; it does
     # not shrink because training docs were deduped). Bounded by
     # construction here only because the probe set is; see q_contamination's
@@ -126,44 +130,15 @@ def curate_corpus(
         .select(F.explode(grams).alias("gram"))
         .distinct()
     )
-    candidate = quality_ok.filter(~is_eval)
-    # Persisted like the labels relation, and for the same reason (r11):
-    # FIVE downstream consumers (clean + the funnel's decontaminated/
-    # redacted/split/window rows) sit on top of ``clean``, and without the
-    # pin each of them re-runs the 5-gram explode + gram join + distinct —
-    # the pipeline's second-most-expensive shuffle after the labels. The
-    # materialization is a doc_id list, O(contaminated docs), never
-    # corpus-sized.
-    contaminated = (
-        candidate.filter(F.col("n_tokens") >= 5)
+    hits = (
+        base.filter((F.col("reached") == SHIPPED) & (F.col("n_tokens") >= 5))
         .select("doc_id", F.explode(grams).alias("gram"))
         .join(eval_grams, "gram")
-        .select("doc_id")
+        .select("doc_id", F.lit(True).alias("hit"))
         .distinct()
-        .persist()
-    )
-    clean = candidate.join(contaminated, "doc_id", "left_anti")
-
-    # ---- stage 4: PII redaction (map-only) ----
-    n_pii = (
-        F.size(F.expr(f"regexp_extract_all(text, '{EMAIL_RE}', 0)"))
-        + F.size(F.expr(f"regexp_extract_all(text, '{PHONE_RE}', 0)"))
-    )
-    redacted = clean.select(
-        "doc_id",
-        "source",
-        "n_chars",
-        "n_tokens",
-        F.regexp_replace(
-            F.regexp_replace("text", EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
-        ).alias("redacted"),
-        n_pii.alias("n_pii"),
     )
 
-    # ---- stage 5: leakage-safe split on the REUSED cluster roots ----
-    keyed = redacted.join(labels, "doc_id", "left").withColumn(
-        "root", F.coalesce("root", "doc_id")
-    )
+    # ---- stage 5: leakage-safe split on the cluster roots ----
     bucket = F.conv(
         F.substring(F.md5(F.col("root").cast("string")), 1, 2), 16, 10
     ).cast("int")
@@ -172,56 +147,81 @@ def curate_corpus(
         .when(bucket < 26, "valid")
         .otherwise("train")
     )
-    splits = keyed.withColumn("split", split)
-
-    # ---- stage 6: pack the train split into context windows ----
-    train = splits.filter(F.col("split") == "train").withColumnRenamed(
-        "redacted", "text"
-    )
-    train_windows = pack_sequences(
-        train, "doc_id", "text", "source", budget=pack_budget
-    )
-
-    # ---- funnel accounting (tokens-in / tokens-out) ----
-    def _stage(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("stage"),
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+    status = (
+        base.join(hits, "doc_id", "left")
+        .select(
+            "doc_id",
+            "source",
+            "n_tokens",
+            "root",
+            split.alias("split"),
+            F.when(F.col("hit"), 2)
+            .otherwise(F.col("reached"))
+            .alias("reached"),
         )
+        .localCheckpoint(eager=True)
+    )
+    shipped = status.filter(F.col("reached") == SHIPPED)
 
+    # ---- stage 4: PII redaction (map-only) of the shipped docs' text ----
+    n_pii = (
+        F.size(F.expr(f"regexp_extract_all(text, '{EMAIL_RE}', 0)"))
+        + F.size(F.expr(f"regexp_extract_all(text, '{PHONE_RE}', 0)"))
+    )
+    text = docs.select("doc_id", "text", "n_chars")
+    splits = shipped.join(text, "doc_id").select(
+        "doc_id",
+        "source",
+        "n_chars",
+        "n_tokens",
+        F.regexp_replace(
+            F.regexp_replace("text", EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
+        ).alias("redacted"),
+        n_pii.alias("n_pii"),
+        "root",
+        "split",
+    )
+
+    # ---- stage 6: pack the train split's stored token counts ----
+    train_windows = pack_windows(
+        shipped.filter(F.col("split") == "train").select(
+            F.col("source").alias("stream"),
+            F.col("doc_id").alias("doc"),
+            F.col("n_tokens").alias("ntok"),
+        ),
+        budget=pack_budget,
+    )
+
+    # ---- funnel: every stage each document reached, counted once ----
+    names = F.array(*map(F.lit, CHAIN), F.concat(F.lit("5_split_"), "split"))
+    staged = status.select(
+        F.explode(F.slice(names, 1, F.col("reached") + 1)).alias("stage"),
+        "doc_id",
+        "n_tokens",
+    )
+    # one doc-less row per chain stage, so a stage no document reached still
+    # reports (0 docs, NULL tokens), as a global aggregate would
+    empty = docs.sparkSession.sql(  # a local relation: no job, no worker
+        "VALUES " + ", ".join(f"('{s}', NULL, NULL)" for s in CHAIN)
+    )
     funnel = (
-        _stage("0_raw", corpus)
-        .unionByName(_stage("1_dedup", deduped))
-        .unionByName(_stage("2_quality", quality_ok))
-        .unionByName(_stage("3_decontaminated", clean))
-        .unionByName(_stage("4_redacted", redacted))
-        .unionByName(
-            splits.groupBy("split")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            )
-            .select(
-                F.concat(F.lit("5_split_"), "split").alias("stage"),
-                "n_docs",
-                "n_tokens",
-            )
-        )
-        .unionByName(
+        staged.union(empty)
+        .groupBy("stage")
+        .agg(F.count("doc_id"), F.sum("n_tokens"))
+        .union(
             train_windows.agg(
-                F.lit("6_train_windows").alias("stage"),
-                F.count("*").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
+                F.lit("6_train_windows"), F.count("*"), F.sum("n_tokens")
             )
         )
+        .toDF("stage", "n_docs", "n_tokens")
     )
     return {
         "train_windows": train_windows,
         "splits": splits,
         "funnel": funnel,
-        "_labels": labels,  # caller unpersists when done
-        "_contaminated": contaminated,  # caller unpersists when done
+        "_labels": labels,
+        "_contaminated": status.filter((F.col("reached") == 2) & ~is_eval)
+        .select("doc_id"),
     }
 
 

@@ -9,18 +9,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import load_table, spread
-from projet_data_engineering_spark.recipes.curation import curate_corpus
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, curated
 
 
-def _run(spark):
-    docs = spread(load_table(spark, SF_DIR, "documents"), "doc_id")
-    return docs, curate_corpus(docs)
+def _docs(spark):
+    return spread(load_table(spark, SF_DIR, "documents"), "doc_id")
 
 
 def test_funnel_is_monotone_and_consistent(spark):
-    docs, out = _run(spark)
-    try:
+    docs = _docs(spark)
+    with curated(docs) as out:
         funnel = {
             r["stage"]: (r["n_docs"], r["n_tokens"])
             for r in out["funnel"].collect()
@@ -42,9 +40,6 @@ def test_funnel_is_monotone_and_consistent(spark):
         # packing conserves train tokens bit-for-bit
         train = funnel.get("5_split_train", (0, 0))
         assert funnel["6_train_windows"][1] == train[1]
-    finally:
-        out["_labels"].unpersist()
-        out["_contaminated"].unpersist()
 
 
 @pytest.mark.slow
@@ -53,8 +48,8 @@ def test_dedup_stage_matches_standalone_query(spark):
     standalone dedup-applied query) — same drop list, reused labels."""
     from projet_data_engineering_spark.operators.dedup import q_dedup_apply
 
-    docs, out = _run(spark)
-    try:
+    docs = _docs(spark)
+    with curated(docs) as out:
         standalone = {
             r["lang"]: r["n_docs"]
             for r in q_dedup_apply(spark, SF_DIR).collect()
@@ -63,9 +58,6 @@ def test_dedup_stage_matches_standalone_query(spark):
             r["stage"]: r["n_docs"] for r in out["funnel"].collect()
         }
         assert funnel["1_dedup"] == sum(standalone.values())
-    finally:
-        out["_labels"].unpersist()
-        out["_contaminated"].unpersist()
 
 
 def test_no_contaminated_doc_and_no_eval_doc_survives(spark):
@@ -76,8 +68,7 @@ def test_no_contaminated_doc_and_no_eval_doc_survives(spark):
         q_contamination,
     )
 
-    _, out = _run(spark)
-    try:
+    with curated(_docs(spark)) as out:
         shipped = {r["doc_id"] for r in out["splits"].collect()}
         flagged = {
             r["doc_id"] for r in q_contamination(spark, SF_DIR).collect()
@@ -85,9 +76,6 @@ def test_no_contaminated_doc_and_no_eval_doc_survives(spark):
         assert flagged, "test corpus should contain contamination"
         assert not (shipped & flagged)
         assert not any(d % 97 == 0 for d in shipped)
-    finally:
-        out["_labels"].unpersist()
-        out["_contaminated"].unpersist()
 
 
 def test_split_is_leakage_safe_on_cluster_roots(spark):
@@ -109,8 +97,7 @@ def test_split_is_leakage_safe_on_cluster_roots(spark):
             F.when(b < 13, "test").when(b < 26, "valid").otherwise("train")
         )
 
-    _, out = _run(spark)
-    try:
+    with curated(_docs(spark)) as out:
         assert (
             out["splits"].groupBy("root")
             .agg(F.countDistinct("split").alias("n"))
@@ -139,16 +126,12 @@ def test_split_is_leakage_safe_on_cluster_roots(spark):
             .filter("member_split <> ship_split")
         )
         assert mism.count() == 0
-    finally:
-        out["_labels"].unpersist()
-        out["_contaminated"].unpersist()
 
 
 def test_redaction_scrubs_planted_pii(spark):
     """Plant synthetic PII in the text column; the pipeline's redaction
     stage must scrub it and count it, doc for doc."""
-    docs = spread(load_table(spark, SF_DIR, "documents"), "doc_id")
-    planted = docs.withColumn(
+    planted = _docs(spark).withColumn(
         "text",
         F.concat(
             F.col("text"),
@@ -156,8 +139,7 @@ def test_redaction_scrubs_planted_pii(spark):
             (F.col("doc_id") % 10000).cast("string"),
         ),
     )
-    out = curate_corpus(planted)
-    try:
+    with curated(planted) as out:
         s = out["splits"]
         assert s.filter(F.col("n_pii") < 2).count() == 0
         assert (
@@ -171,6 +153,56 @@ def test_redaction_scrubs_planted_pii(spark):
             F.col("redacted").contains("<EMAIL>")
             & F.col("redacted").contains("<PHONE>")
         ).count() == s.count()
+
+
+def test_funnel_matches_the_oracle(spark):
+    """The funnel on the standard corpus, which has both near-dup clusters
+    and contaminated documents, equals the DuckDB transcription row for
+    row."""
+    from projet_data_engineering_spark.recipes.curation import _funnel_oracle
+    from tools.check import make_duckdb
+
+    con = make_duckdb(SF_DIR)
+    try:
+        want = sorted(con.execute(_funnel_oracle()).fetchall())
     finally:
-        out["_labels"].unpersist()
-        out["_contaminated"].unpersist()
+        con.close()
+    with curated(_docs(spark)) as out:
+        got = sorted(tuple(r) for r in out["funnel"].collect())
+    assert got == want
+
+
+def test_outputs_read_the_stored_status_frame(spark, tmp_path):
+    """After ``curate_corpus`` the windows write and the funnel collect read
+    the stored per-document frame: a couple of jobs each, and neither plan
+    scans the documents or explodes 5-grams again."""
+    from perfbench.census import Census
+
+    census = Census(spark)
+    with curated(_docs(spark)) as out:
+        with census.span("windows"):
+            out["train_windows"].write.parquet(str(tmp_path / "windows"))
+        with census.span("funnel"):
+            out["funnel"].collect()
+        windows, funnel = census.calls
+        assert windows.jobs <= 2
+        assert funnel.jobs <= 4
+        for df in (out["train_windows"], out["funnel"]):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "documents.parquet" not in plan
+            assert not any(
+                "Generate" in line and "array_join" in line
+                for line in plan.splitlines()
+            )
+
+
+def test_a_stage_no_document_reaches_still_has_a_funnel_row(spark):
+    """Like the oracle's per-stage global aggregates, a stage every document
+    is dropped before reports 0 docs and NULL tokens instead of vanishing."""
+    with curated(_docs(spark), min_quality=2.0) as out:
+        funnel = {r["stage"]: tuple(r)[1:] for r in out["funnel"].collect()}
+    assert funnel["1_dedup"][0] > 0
+    for stage in ("2_quality", "3_decontaminated", "4_redacted",
+                  "6_train_windows"):
+        assert funnel[stage] == (0, None)
+    assert not any(s.startswith("5_split_") for s in funnel)

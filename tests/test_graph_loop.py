@@ -18,11 +18,8 @@ from projet_data_engineering_spark.operators.dedup import (
     minhash_candidate_pairs,
 )
 from projet_data_engineering_spark.operators.graph import pagerank
-from projet_data_engineering_spark.recipes.curation import (
-    _funnel_oracle,
-    curate_corpus,
-)
-from tests.conftest import SF_DIR
+from projet_data_engineering_spark.recipes.curation import _funnel_oracle
+from tests.conftest import SF_DIR, curated
 
 AQE = "spark.sql.adaptive.enabled"
 PAIRS = "doc1 bigint, doc2 bigint"
@@ -71,12 +68,8 @@ def test_curate_corpus_without_near_duplicate_pairs_matches_the_oracle(
 
     docs = spread(load_table(spark, str(tmp_path), "documents"), "doc_id")
     assert minhash_candidate_pairs(docs, "doc_id", "text").count() == 0
-    out = curate_corpus(docs)
-    try:
+    with curated(docs) as out:
         got = sorted(tuple(r) for r in out["funnel"].collect())
-    finally:
-        out["_labels"].unpersist()
-        out["_contaminated"].unpersist()
     assert got == want
     assert ("1_dedup", *want[0][1:]) in got  # no document was dropped
 
