@@ -20,7 +20,7 @@ DuckDB), so every operator here is oracle-checkable bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import (
@@ -31,7 +31,7 @@ from projet_data_engineering_spark.io import (
 )
 from projet_data_engineering_spark.plans.hints import merge_if_large
 from projet_data_engineering_spark.registry import query
-from projet_data_engineering_spark.session import graph_loop
+from projet_data_engineering_spark.session import GraphLoop, graph_loop
 
 N_HASHES = 8
 BAND_SIZE = 2  # 8 hashes / 2 per band = 4 bands
@@ -455,6 +455,35 @@ def connected_components(
     return g.result(labels)
 
 
+def _stars(
+    edges: DataFrame, g: GraphLoop | None = None
+) -> tuple[DataFrame, bool]:
+    """(node, root, star) for every node of the canonical (hi, lo) edge
+    set, lazily checkpointed, and whether the whole set is one of depth-1
+    stars. ``root`` is the node's smallest ``lo`` (itself when it is no
+    ``hi``); ``star`` says it is no ``hi`` (a centre) or its one edge makes
+    it a leaf. One groupBy over both endpoints of every edge (pinned by
+    ``g`` on a small graph), then a 1-row check, the action that stores
+    this checkpoint and a lazy ``edges`` checkpoint together: no edge set
+    costs a job of its own to store. The empty graph is the zero-edge
+    star."""
+    ends = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("hi").alias("node"), F.col("lo").alias("up")),
+                F.struct(F.col("lo").alias("node"), F.lit(None).alias("up")),
+            )
+        ).alias("e")
+    ).select("e.node", "e.up")
+    grouped = g.group(ends, "node") if g else ends.groupBy("node")
+    stars = grouped.agg(
+        F.coalesce(F.min("up"), F.col("node")).alias("root"),
+        ((F.count("up") == 0) | (F.count("*") == 1)).alias("star"),
+    ).localCheckpoint(eager=False)
+    done = stars.agg(F.coalesce(F.bool_and("star"), F.lit(True))).first()[0]
+    return stars, done
+
+
 def connected_components_lss(
     pairs: DataFrame,
     left: str = "doc1",
@@ -468,131 +497,77 @@ def connected_components_lss(
     Min-label propagation converges in O(component diameter) rounds; the
     star algorithm converges in O(log n) rounds regardless of diameter, so a
     billion-node path-shaped component costs ~30 rounds instead of a
-    billion. Each round is two groupBy-min + join passes over the (always
-    shrinking) edge set; edges are kept canonical as (hi, lo) with hi > lo,
-    and every round is localCheckpoint-ed so lineage stays constant-depth.
+    billion. Each round is one join with the stored node roots and one
+    window-min over the edge set; edges are kept canonical as (hi, lo) with
+    hi > lo, and every round is localCheckpoint-ed so lineage stays
+    constant-depth.
+
+    **Convergence is structural.** The edge set is done exactly when it is
+    a set of depth-1 stars: every ``hi`` has one ``lo`` and no node is both
+    a ``hi`` and a ``lo``. Each centre is then the minimum of its component
+    (a leaf is larger than its centre, and the rounds keep the components),
+    which is the unique fixpoint of the rounds, so the stored per-node
+    roots of that edge set ARE the labels: ``(hi → lo) ∪ (lo → lo)``. The
+    check is the one aggregate that materializes each edge set; no round
+    repeats to confirm a fixpoint. An input that is already a set of stars
+    (the common near-dup graph: a few docs around one keeper) runs no
+    round at all, and neither does the empty graph.
 
     Returns (node, root) for every node in ``pairs``, root = component min —
     same contract as ``connected_components`` (oracle-checked against the
     same recursive-CTE transitive closure in ``q_dedup_clusters_lss``).
 
-    Small graphs run the loop with AQE off: see ``session.graph_loop``."""
+    Small graphs run the rounds with AQE off: see ``session.graph_loop``."""
     e = pairs.select(F.col(left).alias("a"), F.col(right).alias("b")).filter(
         F.col("a") != F.col("b")
     )
     edges = (
         e.select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    if edges.rdd.getNumPartitions() == 0:
-        # No edge (AQE coalesced the empty distinct to no partition): no
-        # component and no round to run. The rounds would only fold empty
-        # frames, and their broadcast jobs race, so the stages an empty
-        # graph ran varied from call to call.
-        return edges.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
+    stars, done = _stars(edges)
+    if done:
+        return stars.select("node", "root")
     with graph_loop(edges) as g:
         edges = g.edges
-        # Node universe from the CHECKPOINTED canonical edges, not the raw
-        # pairs input: every (a != b) pair contributes both endpoints to the
-        # edge set, so the two are identical — and deriving it from
-        # ``pairs`` re-ran the whole upstream pair pipeline (the MinHash
-        # band self-join, in the curation callers) a second time just to
-        # list vertices (r11, guide §2.4: one subtree, one computation).
-        nodes = g.pin(
-            edges.select(F.col("hi").alias("node")).union(
-                edges.select(F.col("lo").alias("node"))
-            ),
-            "node",
-        ).distinct()
-        prev_sig: tuple | None = None
-        converged = False
+        roots = g.bind(stars)
         for _ in range(max_iter):
-            # Large-star: every node attaches its larger neighbors to the
-            # min of its full neighborhood (including itself).
-            sym = edges.select(
-                F.col("hi").alias("u"), F.col("lo").alias("v")
-            ).union(edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
-            mins = g.group(sym, "u").agg(
-                F.least(F.min("v"), F.col("u")).alias("m")
+            # Large-star: every node attaches its larger neighbours to the
+            # min of its neighbourhood (itself included). That min is the
+            # node's root in the stored stars (its larger neighbours never
+            # lower it), so the step is one join, no aggregate.
+            large = edges.join(
+                g.hint(roots.select(F.col("node").alias("lo"), "root")), "lo"
+            ).select("hi", F.col("root").alias("lo"))
+            # Small-star: every node rewires its smaller neighbours (and
+            # itself) to the min of those: one window per ``hi`` over the
+            # (child > parent) edge list, so ``large`` is read once. No
+            # distinct on ``large``: the min is duplicate-blind and the new
+            # edge set re-distincts.
+            small = g.pin(large, "hi").select(
+                "hi", "lo", F.min("lo").over(Window.partitionBy("hi")).alias("m")
             )
-            large = (
-                sym.join(g.hint(mins), "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("hi"), F.col("m").alias("lo"))
-                .filter(F.col("hi") != F.col("lo"))
-                # No distinct here: mins2's groupBy-min is duplicate-blind
-                # and new_edges re-distincts — dropping it saves one full
-                # shuffle per round (set semantics restored at the round
-                # boundary).
-            )
-            # Small-star: every node rewires its smaller neighbors (and
-            # itself) to the min of those; operates on the (child > parent)
-            # edge list.
-            mins2 = g.group(large, "hi").agg(F.min("lo").alias("m"))
-            rewired = (
-                large.join(g.hint(mins2), "hi")
-                .filter(F.col("lo") != F.col("m"))
-                .select(F.col("lo").alias("hi"), F.col("m").alias("lo"))
-            )
-            self_edges = mins2.select("hi", F.col("m").alias("lo"))
-            # LAZY checkpoint, materialized by the fingerprint aggregate
-            # below: the agg job computes the round's edge set once, caches
-            # its blocks and truncates lineage AND returns the 1-row
-            # fingerprint — one job per round where eager-checkpoint + agg
-            # cost two (r11; the round loop is job-latency-bound at every
-            # SF because each round's data volume shrinks while the fixed
-            # job cost does not).
-            new_edges = g.pin(
-                rewired.union(self_edges).filter(F.col("hi") != F.col("lo")),
+            edges = g.pin(
+                small.select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col("lo").alias("hi"), "m"),
+                            F.struct("hi", "m"),
+                        )
+                    ).alias("e")
+                )
+                .select("e.hi", F.col("e.m").alias("lo"))
+                .filter(F.col("hi") != F.col("lo")),
                 "hi",
                 "lo",
             ).distinct().localCheckpoint(eager=False)
-            # Convergence test in two tiers: a cheap 1-row (count, sum hi,
-            # sum lo) fingerprint every round, and only when the fingerprint
-            # matches the previous round's, the definitive set-equality
-            # check — so steady-state rounds cost one aggregate, and the
-            # exact proof is paid once at the end, never heuristically
-            # skipped. (A small graph runs the proof as a broadcast
-            # anti-join: same ⊆ test — both sides are distinct and the
-            # fingerprint already pins equal counts, so empty-anti ⟺ set
-            # equality.)
-            cur_sig = tuple(
-                new_edges.agg(
-                    F.count("*"), F.sum("hi"), F.sum("lo")
-                ).first()
-            )
-            if cur_sig == prev_sig:
-                if g.small:
-                    extra = new_edges.join(
-                        F.broadcast(edges), ["hi", "lo"], "left_anti"
-                    )
-                else:
-                    extra = new_edges.subtract(edges)
-                proof = extra.count() == 0
-            else:
-                proof = False
-            prev_sig = cur_sig
-            edges = new_edges
-            if proof:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_lss did not converge in {max_iter} rounds"
-            )
-        # Converged: depth-1 stars — every child row points at its
-        # component min.
-        child = edges.select(F.col("hi").alias("node"), F.col("lo").alias("root"))
-        out = nodes.join(g.hint(child), "node", "left").select(
-            "node", F.coalesce("root", F.col("node")).alias("root")
-        )
-        if g.small:
-            # materialize inside the loop's session: the caller's action
-            # then reads stored blocks instead of re-planning the label join
-            out = out.localCheckpoint(eager=False)
-            out.count()
-        return g.result(out)
+            roots, done = _stars(edges, g)
+            if done:
+                return g.result(roots.select("node", "root"))
+    raise RuntimeError(
+        f"connected_components_lss did not converge in {max_iter} rounds"
+    )
 
 
 def _clusters_oracle() -> str:

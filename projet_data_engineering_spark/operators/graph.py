@@ -66,7 +66,7 @@ def pagerank(
       dangling-mass aggregate in the same job (the LSS discipline): one
       small job per round instead of eager-checkpoint + broadcast jobs.
     - **The dangling mass and N are 1-row bounded aggregates collected to
-      the driver** (the LSS fingerprint ``.first()`` shape) and re-enter
+      the driver** (the LSS star check's ``.first()`` shape) and re-enter
       the plan as literals — a broadcast-crossJoin of the same 1-row
       frame costs an extra broadcast-exchange job per round for identical
       bits. The update itself folds contributions and the node universe
@@ -119,7 +119,7 @@ def pagerank(
             "node", "is_d", F.lit(1.0 / nn).alias("rank")
         )
         for i in range(iters):
-            # 1-row bounded collect (the LSS fingerprint shape); this job
+            # 1-row bounded collect (the LSS star-check shape); this job
             # also materializes the previous round's lazy checkpoint — on
             # a small graph it IS the round's one job
             dm = ranks.filter(F.col("is_d")).agg(

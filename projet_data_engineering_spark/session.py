@@ -95,6 +95,11 @@ class GraphLoop:
         AQE decides from runtime sizes."""
         return F.broadcast(df) if self.small else df
 
+    def bind(self, df: DataFrame) -> DataFrame:
+        """Another materialized frame of the caller's, as a frame of the
+        session the loop runs in."""
+        return _rebind(df, self.edges.sparkSession) if self.small else df
+
     def result(self, df: DataFrame) -> DataFrame:
         """The loop's output as a frame of the caller's session. Call it on
         materialized output (a checkpoint): only the planning session
@@ -105,7 +110,7 @@ class GraphLoop:
 @contextmanager
 def graph_loop(edges: DataFrame, count_edges: bool = False) -> Iterator[GraphLoop]:
     """Scope of an iterative graph loop (connected components, PageRank)
-    over ``edges``, an eagerly checkpointed edge frame.
+    over ``edges``, a checkpointed edge frame whose blocks are stored.
 
     **Small graphs run with AQE off.** Every round of such a loop is a
     handful of tiny exchanges, and AQE runs every exchange of every
@@ -113,8 +118,8 @@ def graph_loop(edges: DataFrame, count_edges: bool = False) -> Iterator[GraphLoo
     on graphs that fit one partition, all fixed cost. With AQE off, every
     round shuffle pinned to one width (:meth:`GraphLoop.pin`) and the
     node-sized frames broadcast (:meth:`GraphLoop.hint`), a round is one
-    job for its convergence aggregate plus one per broadcast frame (2 jobs
-    in CC and PageRank, 3 in LSS). Large graphs keep AQE: there the stage
+    job for its convergence aggregate plus one per broadcast frame: 2 jobs
+    in each of CC, LSS and PageRank. Large graphs keep AQE: there the stage
     jobs are noise against real shuffle work, and skew handling on the
     round joins matters more than round latency. The loops fold integer
     labels or replay the same IEEE operations in the same order, so the
@@ -135,8 +140,9 @@ def graph_loop(edges: DataFrame, count_edges: bool = False) -> Iterator[GraphLoo
     every query planned there meanwhile, by any thread, plan without it,
     and a loop that raised would have to restore it. The child is a clone
     of the caller's session (every other setting kept) with AQE off; the
-    edge frame is re-bound into it JVM-side, and the loop returns its
-    materialized output through :meth:`GraphLoop.result`. A large graph
+    edge frame is re-bound into it JVM-side (another stored frame through
+    :meth:`GraphLoop.bind`), and the loop returns its materialized output
+    through :meth:`GraphLoop.result`. A large graph
     runs in the caller's session, with no child."""
     spark = edges.sparkSession
     nparts = edges.rdd.getNumPartitions()

@@ -11,8 +11,9 @@ batch would re-read the corpus. Here the coarse quantizer (trained once, on
 a bootstrap sample — exactly how a production IVF index is built) stays
 FIXED, and each micro-batch is:
 
-    1. assigned to its nearest stored centroid (broadcast 1-row artifact,
-       same rounding/tiebreak Column algebra as ``build_ann_index``);
+    1. assigned to its nearest stored centroid (the quantizer as one
+       memoized literal, same rounding/tiebreak Column algebra as
+       ``build_ann_index``);
     2. merged into ``{index}/assignments`` keyed on vec_id, partitioned by
        cent_id — ``io.merge_upsert_partitioned``, so a batch touching k
        inverted lists rewrites k list directories, not the index, and a
@@ -38,6 +39,7 @@ from projet_data_engineering_spark.io import (
     path_exists,
 )
 from projet_data_engineering_spark.operators.similarity import (
+    _centroid_literal,
     _ivf_scored_cents,
     as_double,
 )
@@ -50,15 +52,15 @@ def assign_to_stored_centroids(
 ) -> DataFrame:
     """(vec_id, embedding) → (vec_id, v, cent_id) against the index's stored
     quantizer — identical argmax/tiebreak algebra to ``build_ann_index``, so
-    a streamed assignment equals what a full rebuild would compute."""
-    cents = (
-        spark.read.parquet(f"{index_path}/centroids")
-        .select(F.struct("cent_id", "cv").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
-        .localCheckpoint(eager=True)
-    )
-    b = vecs.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    return b.crossJoin(F.broadcast(cents)).select(
+    a streamed assignment equals what a full rebuild would compute. The
+    quantizer is the serve path's literal (``_centroid_literal``), memoized
+    on the centroids listing: it is frozen after the bootstrap, so only the
+    first refresh batch of a process runs a job to read it."""
+    return vecs.select(
+        "vec_id",
+        as_double(F.col("embedding")).alias("v"),
+        _centroid_literal(spark, index_path).alias("cents"),
+    ).select(
         "vec_id",
         "v",
         (-_ivf_scored_cents(1)[0]["neg_id"]).alias("cent_id"),

@@ -4,6 +4,8 @@ Each stage is oracle-checked on its own as a registered query; these tests
 pin that the COMPOSITION computes the same relations and that the funnel
 accounting is self-consistent."""
 
+from contextlib import ExitStack
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -172,19 +174,46 @@ def test_funnel_matches_the_oracle(spark):
     assert got == want
 
 
+def _star_docs(spark, path):
+    """The test corpus without the documents of any candidate pair, plus
+    copies of two others under new ids: its near-dup graph is two one-edge
+    stars."""
+    from projet_data_engineering_spark.operators.dedup import (
+        minhash_candidate_pairs,
+    )
+
+    docs = _docs(spark)
+    paired = minhash_candidate_pairs(docs, "doc_id", "text").select(
+        F.explode(F.array("doc1", "doc2")).alias("doc_id")
+    )
+    alone = docs.join(paired, "doc_id", "left_anti")
+    top = docs.agg(F.max("doc_id")).first()[0]
+    copies = alone.orderBy("doc_id").limit(2).withColumn(
+        "doc_id", F.col("doc_id") + top + 1
+    )
+    alone.unionByName(copies).write.parquet(f"{path}/documents.parquet")
+    return spread(load_table(spark, str(path), "documents"), "doc_id")
+
+
 def test_outputs_read_the_stored_status_frame(spark, tmp_path):
     """After ``curate_corpus`` the windows write and the funnel collect read
     the stored per-document frame: a couple of jobs each, and neither plan
-    scans the documents or explodes 5-grams again."""
+    scans the documents or explodes 5-grams again. The standard corpus's
+    near-dup graph is no set of stars, so ``curate_corpus`` itself runs
+    component rounds; its ceiling holds in a session's first build too."""
     from perfbench.census import Census
 
+    docs = _docs(spark)
     census = Census(spark)
-    with curated(_docs(spark)) as out:
+    with ExitStack() as stack:
+        with census.span("curate"):
+            out = stack.enter_context(curated(docs))
         with census.span("windows"):
             out["train_windows"].write.parquet(str(tmp_path / "windows"))
         with census.span("funnel"):
             out["funnel"].collect()
-        windows, funnel = census.calls
+        curate, windows, funnel = census.calls
+        assert curate.jobs <= 18
         assert windows.jobs <= 2
         assert funnel.jobs <= 4
         for df in (out["train_windows"], out["funnel"]):
@@ -194,6 +223,30 @@ def test_outputs_read_the_stored_status_frame(spark, tmp_path):
                 "Generate" in line and "array_join" in line
                 for line in plan.splitlines()
             )
+
+
+def test_a_star_shaped_corpus_curates_without_a_component_round(
+    spark, tmp_path, monkeypatch
+):
+    """A near-dup graph that is already a set of stars is its own cluster
+    labelling, so the build runs no connected-components round."""
+    from perfbench.census import Census
+    from projet_data_engineering_spark.operators import dedup
+
+    def no_loop(*args, **kwargs):
+        raise AssertionError("a star-shaped graph entered the round loop")
+
+    monkeypatch.setattr(dedup, "graph_loop", no_loop)
+    docs = _star_docs(spark, tmp_path)
+    census = Census(spark)
+    with ExitStack() as stack:
+        with census.span("curate"):
+            out = stack.enter_context(curated(docs))
+        labels = {tuple(r) for r in out["_labels"].collect()}
+    (curate,) = census.calls
+    # two (copy -> original) labels and the two originals' own
+    assert len(labels) == 4 and sum(d == r for d, r in labels) == 2
+    assert curate.jobs <= 14
 
 
 def test_a_stage_no_document_reaches_still_has_a_funnel_row(spark):

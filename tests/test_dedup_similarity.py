@@ -213,6 +213,63 @@ def test_lss_components_match_label_propagation(spark):
     assert plan.count("Join") <= 2, plan
 
 
+def _component_minima(edges: list[tuple[int, int]]) -> set[tuple[int, int]]:
+    """(node, smallest node of its component) for every endpoint of a
+    non-loop edge: a pure-Python union-find, sharing no code with Spark."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            parent[find(a)] = find(b)
+    comp_min: dict[int, int] = {}
+    for v in list(parent):
+        r = find(v)
+        comp_min[r] = min(comp_min.get(r, v), v)
+    return {(v, comp_min[find(v)]) for v in parent}
+
+
+def _lss(spark, edges, **kwargs) -> set[tuple[int, int]]:
+    from projet_data_engineering_spark.operators.dedup import (
+        connected_components_lss,
+    )
+
+    pairs = spark.createDataFrame(edges, "doc1 bigint, doc2 bigint")
+    return {
+        (r["node"], r["root"])
+        for r in connected_components_lss(pairs, **kwargs).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        [(100, 101), (100, 102), (103, 100)],
+        # no node is both hi and lo, yet hi 3 has two lo: not converged
+        [(3, 1), (3, 2)],
+        [(i, i + 1) for i in range(20)],
+        [(1, 2), (10, 11), (11, 12), (2, 1)],
+        [],
+    ],
+    ids=["star", "fan-in", "21-chain", "two-components-dup-edge", "empty"],
+)
+def test_lss_components_match_union_find_on_fixed_shapes(spark, edges):
+    """The star test that ends the large-star/small-star loop stops on the
+    component minima, on the shapes it could stop early on."""
+    assert _lss(spark, edges) == _component_minima(edges)
+
+
+def test_lss_refuses_to_return_unconverged_labels(spark):
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        _lss(spark, [(i, i + 1) for i in range(20)], max_iter=1)
+
+
 @pytest.mark.slow
 def test_lss_components_match_union_find_on_random_graphs(spark):
     """Property check: on random graphs, large-star/small-star labels must
@@ -221,40 +278,13 @@ def test_lss_components_match_union_find_on_random_graphs(spark):
     hypothesis shrinking (each example costs Spark jobs)."""
     import random
 
-    from projet_data_engineering_spark.operators.dedup import (
-        connected_components_lss,
-    )
-
     rng = random.Random(42)
     for _ in range(6):
         n = rng.randint(2, 40)
         m = rng.randint(1, 60)
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
-
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            parent[find(a)] = find(b)
-        touched = {v for e in edges for v in e}
-        comp_min: dict[int, int] = {}
-        for v in touched:
-            r = find(v)
-            comp_min[r] = min(comp_min.get(r, v), v)
-        expected = {(v, comp_min[find(v)]) for v in touched}
-
-        pairs = spark.createDataFrame(
-            [Row(doc1=a, doc2=b) for a, b in edges]
-        )
-        got = {(r["node"], r["root"])
-               for r in connected_components_lss(pairs).collect()}
-        assert got == expected, edges
+        assert _lss(spark, edges) == _component_minima(edges), edges
 
 
 def test_dup_spans_content_anchoring_is_shift_invariant(spark):

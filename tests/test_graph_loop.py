@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql.classic.dataframe import DataFrame
 
+from perfbench.census import Census
 from projet_data_engineering_spark.io import load_table, spread
+from projet_data_engineering_spark.operators import dedup
 from projet_data_engineering_spark.operators.dedup import (
     _minhash_oracle,
     connected_components,
@@ -109,3 +111,33 @@ def test_small_graph_loop_leaves_the_caller_session_adaptive(
     assert spark.conf.get(AQE) == "true"
     # the loops' outputs are frames of the caller's session
     assert ranks.sparkSession is spark
+
+
+@pytest.mark.parametrize(
+    "edges, roots, loops, ceiling",
+    [
+        ([(5, 1), (1, 6), (7, 1), (9, 2)], {1, 2}, 0, 4),
+        ([(i, i + 1) for i in range(8)], {0}, 1, 10),
+    ],
+    ids=["star", "chain"],
+)
+def test_star_shaped_pairs_run_no_component_round(
+    spark, monkeypatch, edges, roots, loops, ceiling
+):
+    """A pair set that is already a set of depth-1 stars is its own
+    labelling: LSS checks that in one aggregate and returns, with no round
+    and no child session. A chain still loops, two jobs a round."""
+    entered = []
+    loop = dedup.graph_loop
+
+    def counted(*args, **kwargs):
+        entered.append(args)
+        return loop(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "graph_loop", counted)
+    census = Census(spark)
+    with census.span("lss"):
+        labels = connected_components_lss(spark.createDataFrame(edges, PAIRS))
+    assert {r["root"] for r in labels.collect()} == roots
+    assert len(entered) == loops
+    assert census.calls[0].jobs <= ceiling
