@@ -263,14 +263,14 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     next to q_rollup/q_cube. At 100 TB this halves the cost vs. two separate
     group-bys unioned: the expand happens after the scan, before the
     exchange, and partial aggregation still applies."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_gsets")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS total
-        FROM orders_gsets
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

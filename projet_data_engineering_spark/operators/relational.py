@@ -1063,21 +1063,23 @@ def q_sql_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     (RewriteCorrelatedScalarSubquery) — the per-customer re-scan a naive
     executor would do never happens; the plan is two hash aggregates and a
     broadcast of the 1-row global average (SURVEY.md §4: decorrelation is
-    built-in, nothing hand-written)."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_v")
+    built-in, nothing hand-written). The tables are bound as DataFrame
+    arguments, which PySpark registers under unique view names for the
+    analysis only, so no session-wide name is shared between callers."""
     return spark.sql(
         """
         SELECT c.c_custkey, c.c_name,
-               ROUND((SELECT SUM(o.o_totalprice) FROM orders_v o
+               ROUND((SELECT SUM(o.o_totalprice) FROM {orders} o
                       WHERE o.o_custkey = c.c_custkey), 2) AS total_spend
-        FROM customer_v c
-        WHERE (SELECT SUM(o.o_totalprice) FROM orders_v o
+        FROM {customer} c
+        WHERE (SELECT SUM(o.o_totalprice) FROM {orders} o
                WHERE o.o_custkey = c.c_custkey)
               > (SELECT AVG(cust_total) FROM (
                      SELECT SUM(o_totalprice) AS cust_total
-                     FROM orders_v GROUP BY o_custkey))
-        """
+                     FROM {orders} GROUP BY o_custkey))
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 

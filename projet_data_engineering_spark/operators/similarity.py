@@ -283,18 +283,7 @@ def build_ann_index(
     kmeans_centroids(embeddings, k=k, iters=iters).select(
         F.col("cid").alias("cent_id"), F.col("ce").alias("cv")
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    cents = (
-        spark.read.parquet(f"{path}/centroids")
-        .select(F.struct("cent_id", "cv").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
-        .localCheckpoint(eager=True)
-    )
-    b = embeddings.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    assigned = b.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        (-_ivf_scored_cents(1)[0]["neg_id"]).alias("cent_id"),
-    )
+    assigned = assign_to_stored_centroids(spark, path, embeddings)
     assigned.repartition("cent_id").write.partitionBy("cent_id").mode(
         "overwrite"
     ).parquet(f"{path}/assignments")
@@ -342,6 +331,28 @@ def _centroid_literal(spark: SparkSession, index_path: str) -> Column:
         return cents.cast(ArrayType(stored.schema))
 
     return listing_memo(spark, path, "cents", build)
+
+
+def assign_to_stored_centroids(
+    spark: SparkSession, index_path: str, vecs: DataFrame
+) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, v, cent_id) against the index's stored
+    quantizer: argmax cosine, ties toward the lowest centroid id. The one
+    assignment path of the IVF index — ``build_ann_index`` fills the
+    inverted lists with it and ``streaming.ann_refresh`` assigns each
+    micro-batch with it, so a streamed assignment equals what a full
+    rebuild computes. The quantizer is the serve path's literal
+    (``_centroid_literal``), memoized on the centroids listing: a build
+    reads it once, and a frozen quantizer is read once per process."""
+    return vecs.select(
+        "vec_id",
+        as_double(F.col("embedding")).alias("v"),
+        _centroid_literal(spark, index_path).alias("cents"),
+    ).select(
+        "vec_id",
+        "v",
+        (-_ivf_scored_cents(1)[0]["neg_id"]).alias("cent_id"),
+    )
 
 
 def ann_serve(

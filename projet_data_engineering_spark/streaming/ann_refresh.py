@@ -11,9 +11,9 @@ batch would re-read the corpus. Here the coarse quantizer (trained once, on
 a bootstrap sample — exactly how a production IVF index is built) stays
 FIXED, and each micro-batch is:
 
-    1. assigned to its nearest stored centroid (the quantizer as one
-       memoized literal, same rounding/tiebreak Column algebra as
-       ``build_ann_index``);
+    1. assigned to its nearest stored centroid by
+       ``similarity.assign_to_stored_centroids``, the path
+       ``build_ann_index`` fills the lists with;
     2. merged into ``{index}/assignments`` keyed on vec_id, partitioned by
        cent_id — ``io.merge_upsert_partitioned``, so a batch touching k
        inverted lists rewrites k list directories, not the index, and a
@@ -39,32 +39,10 @@ from projet_data_engineering_spark.io import (
     path_exists,
 )
 from projet_data_engineering_spark.operators.similarity import (
-    _centroid_literal,
-    _ivf_scored_cents,
-    as_double,
+    assign_to_stored_centroids,
 )
 from projet_data_engineering_spark.registry import query
 from projet_data_engineering_spark.streaming.fixtures import stamp_batch_mtime
-
-
-def assign_to_stored_centroids(
-    spark: SparkSession, index_path: str, vecs: DataFrame
-) -> DataFrame:
-    """(vec_id, embedding) → (vec_id, v, cent_id) against the index's stored
-    quantizer — identical argmax/tiebreak algebra to ``build_ann_index``, so
-    a streamed assignment equals what a full rebuild would compute. The
-    quantizer is the serve path's literal (``_centroid_literal``), memoized
-    on the centroids listing: it is frozen after the bootstrap, so only the
-    first refresh batch of a process runs a job to read it."""
-    return vecs.select(
-        "vec_id",
-        as_double(F.col("embedding")).alias("v"),
-        _centroid_literal(spark, index_path).alias("cents"),
-    ).select(
-        "vec_id",
-        "v",
-        (-_ivf_scored_cents(1)[0]["neg_id"]).alias("cent_id"),
-    )
 
 
 def ann_refresh_batch(

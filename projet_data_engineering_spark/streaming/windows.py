@@ -541,7 +541,8 @@ def index_refresh_batch(
         ).partitionBy("term_bucket").mode("overwrite").parquet(
             vocab_path
         )
-    if path_exists(spark, postings_path):
+    had_postings = path_exists(spark, postings_path)
+    if had_postings:
         merge_upsert_partitioned(
             spark, postings_path, postings, "_pk", "term_bucket"
         )
@@ -552,6 +553,12 @@ def index_refresh_batch(
     docstats = toks.select(id_col, "dl")
     if path_exists(spark, docstats_path):
         old = spark.read.parquet(docstats_path)
+        merged = merge_upsert(old, docstats, id_col)
+    elif had_postings:
+        # A batch-built index stores doc lengths only in its postings rows:
+        # seed docstats from them (this batch's rows have landed too), so
+        # the stats keep the batch's documents.
+        old = spark.read.parquet(postings_path).select(id_col, "dl").distinct()
         merged = merge_upsert(old, docstats, id_col)
     else:
         merged = docstats
@@ -602,7 +609,10 @@ def run_stream_index_refresh(
        ``{index_path}/docstats`` keyed on the doc id (idempotent for the
        same reason), then rewrites the 1-row ``{index_path}/stats`` from
        docstats — stats are derived state recomputed from idempotent state,
-       so they can never double-count a replayed batch.
+       so they can never double-count a replayed batch. ``build_search_index``
+       writes no docstats, so the first refresh seeds them from the stored
+       postings' distinct ``(doc_id, dl)``: a refresh onto a batch-built
+       index keeps the batch's documents in ``n_docs`` and ``avg_dl``.
 
     ``search.bm25_serve`` reads the refreshed index unchanged (including the
     persisted ``n_buckets`` layout manifest in the stats row). Parity with a

@@ -1,0 +1,87 @@
+"""What one shared session carries from request to request: the classes a
+request compiled, which its repeats reuse instead of compiling again (the
+generated-class cache holds the engine's working set), and no temp view
+that a query registered."""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+
+from projet_data_engineering_spark.io import load_table, spread
+from projet_data_engineering_spark.operators.relational import (
+    q_join_multi,
+    q_tpch_q1,
+)
+from projet_data_engineering_spark.operators.sampling import (
+    q_percentile_sampled,
+)
+from projet_data_engineering_spark.operators.search import (
+    bm25_serve,
+    build_search_index,
+)
+from projet_data_engineering_spark.operators.similarity import (
+    ann_serve,
+    as_double,
+    build_ann_index,
+)
+from tests.conftest import SF_DIR, curated
+
+
+def _compiles(spark) -> int:
+    """Classes compiled so far in this JVM (every session shares them)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    return metrics.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_rounds_compile_no_classes(spark, tmp_path):
+    docs = spread(load_table(spark, SF_DIR, "documents"), "doc_id")
+    emb = load_table(spark, SF_DIR, "embeddings")
+    bm25, ann = str(tmp_path / "bm25"), str(tmp_path / "ann")
+    build_search_index(docs, "doc_id", "text", bm25, n_buckets=16)
+    build_ann_index(emb, ann)
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"),
+        as_double(F.col("embedding")).alias("v"),
+    )
+
+    def build_round(i: int) -> None:
+        with curated(docs) as out:
+            out["train_windows"].write.parquet(str(tmp_path / f"win{i}"))
+            out["funnel"].collect()
+
+    def serve_round() -> None:
+        q_tpch_q1(spark, SF_DIR).collect()
+        q_join_multi(spark, SF_DIR).collect()
+        q_percentile_sampled(spark, SF_DIR).collect()
+        bm25_serve(spark, bm25, ["spark", "data"]).collect()
+        ann_serve(spark, ann, queries).collect()
+
+    build_round(0)
+    serve_round()
+    warm = _compiles(spark)
+    build_round(1)
+    serve_round()
+    # With a 100-entry cache the second pass recompiles ~185 of its ~270
+    # classes. A few may still be new: adaptive execution can re-plan a
+    # join around whichever stage finished first, and the first run of
+    # such a plan variant compiles it (0-2 classes seen per pass).
+    assert _compiles(spark) - warm <= 10
+
+
+def test_sql_queries_register_no_session_views(spark):
+    """Queries written in SQL bind their tables as DataFrame arguments, so
+    they leave the session's temp views as they found them."""
+    from projet_data_engineering_spark.operators.analytic import (
+        q_grouping_sets,
+    )
+    from projet_data_engineering_spark.operators.relational import (
+        q_sql_correlated,
+    )
+
+    def views() -> set:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    for q in (q_sql_correlated, q_grouping_sets):
+        before = views()
+        q(spark, SF_DIR).collect()
+        assert views() == before, q.__name__

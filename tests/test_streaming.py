@@ -533,10 +533,25 @@ def test_stream_index_refresh_bootstraps_from_batch_build(spark, tmp_path):
     )
 
     everything = initial.unionByName(late)
-    # NOTE: the batch build wrote stats over `initial` only; the refresher
-    # recomputes stats from docstats, which the stream bootstrap seeds only
-    # with streamed docs' lengths — so assert on the POSTINGS layer (exact
-    # tf/df reconstruction), where bootstrap compatibility lives.
+    # the stats row covers the batch-built documents too: the first refresh
+    # seeds docstats from the stored postings
+    scratch = str(tmp_path / "scratch")
+    build_search_index(everything, "doc_id", "text", scratch, n_buckets=16)
+    assert (
+        spark.read.parquet(f"{idx}/stats").collect()
+        == spark.read.parquet(f"{scratch}/stats").collect()
+    )
+    terms = ["spark", "join"]
+    served = {
+        r["doc_id"]: r["score"]
+        for r in bm25_serve(spark, idx, terms, n_buckets=16).collect()
+    }
+    scanned = {
+        r["doc_id"]: r["score"]
+        for r in bm25_scores(everything, "doc_id", "text", terms).collect()
+    }
+    assert served == scanned and served
+
     got = {
         (r["term"], r["doc_id"], r["dl"], r["tf"])
         for r in spark.read.parquet(f"{idx}/postings")

@@ -19,6 +19,7 @@ from pyspark.sql.types import (
 from projet_data_engineering_spark.operators.similarity import (
     ann_serve,
     as_double,
+    assign_to_stored_centroids,
     build_ann_index,
     train_ann_quantizer,
 )
@@ -157,7 +158,7 @@ def test_stream_ann_refresh_bootstraps_from_first_batch(spark, tmp_path):
     # streamed assignments equal what the frozen quantizer computes directly
     expect = {
         r["vec_id"]: r["cent_id"]
-        for r in ar.assign_to_stored_centroids(
+        for r in assign_to_stored_centroids(
             spark,
             idx,
             b0.filter("vec_id <> 3").unionByName(b1).unionByName(moved),

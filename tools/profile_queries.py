@@ -8,7 +8,10 @@ For each named query: one untimed warm run, then a timed run inside a
 (streaming micro-batch jobs included), the stages and tasks it ran, and
 splits its wall into busy seconds (inside Spark jobs) and driver seconds.
 A query whose wall is ~(n_jobs x per-job floor) is JOB-BOUND — the fix is
-fewer passes/rounds, not faster per-row code.
+fewer passes/rounds, not faster per-row code. ``codegen_compiles`` and
+``codegen_ms`` are the classes the counted run generated and compiled and
+the time spent compiling them; a warm run should compile none, since the
+session's class cache holds them (``session.get_spark``).
 
 Usage: python tools/profile_queries.py [sf_dir] q_a q_b ...
 """
@@ -30,6 +33,20 @@ def run(spark, fn, sf_dir):
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
 
+def codegen(spark) -> tuple[int, float]:
+    """(classes compiled, ms spent compiling) so far in this JVM. The count
+    is that of CodegenMetrics' compilation-time histogram; the time is
+    CodeGenerator's running nanosecond total, because the histogram keeps
+    a 1028-value sample of whole milliseconds, whose sum is no total."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    return (
+        metrics.METRIC_COMPILATION_TIME().getCount(),
+        generator.CodeGenerator.compileTime() / 1e6,
+    )
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:]
@@ -45,8 +62,10 @@ def main() -> int:
     for name in names:
         fn = qs[name]
         run(spark, fn, sf_dir)  # warm
+        compiles0, ms0 = codegen(spark)
         with census.span(name):
             run(spark, fn, sf_dir)
+        compiles1, ms1 = codegen(spark)
         c = census.calls[-1]
         out[name] = {
             "wall_s": round(c.wall_s, 3),
@@ -56,6 +75,8 @@ def main() -> int:
             "ms_per_job": round(1000 * c.wall_s / max(c.jobs, 1), 1),
             "busy_s": round(c.busy_s, 3),
             "driver_s": round(c.driver_s, 3),
+            "codegen_compiles": compiles1 - compiles0,
+            "codegen_ms": round(ms1 - ms0, 1),
         }
         print(name, json.dumps(out[name]))
         spark.catalog.clearCache()
