@@ -1424,24 +1424,23 @@ def pack_windows(
     deal every sharded pretraining layout accepts."""
     # integer division, not float-divide-then-cast: stays exact over the
     # full int64 id range (float division loses precision past 2^53)
-    shard = F.expr(f"doc div {shard_size}")
-    w = (
-        Window.partitionBy("stream", "shard")
-        .orderBy("doc")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     laid = (
-        laid.select("stream", "doc", shard.alias("shard"), "ntok")
-        .withColumn(
-            "cum_before", F.coalesce(F.sum("ntok").over(w), F.lit(0))
+        laid.selectExpr(
+            "stream", "doc", f"doc div {shard_size} AS shard", "ntok"
         )
-        .withColumn("seq_id", F.expr(f"cum_before div {budget}"))
+        .selectExpr(
+            "*",
+            "coalesce(sum(ntok) OVER (PARTITION BY stream, shard ORDER BY doc"
+            " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+            " AS cum_before",
+        )
+        .selectExpr("*", f"cum_before div {budget} AS seq_id")
     )
     return laid.groupBy("stream", "shard", "seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("ntok").cast("bigint").alias("n_tokens"),
-        F.min("doc").alias("first_doc"),
-        F.max("doc").alias("last_doc"),
+        F.expr("count(*) AS n_docs"),
+        F.expr("CAST(sum(ntok) AS BIGINT) AS n_tokens"),
+        F.expr("min(doc) AS first_doc"),
+        F.expr("max(doc) AS last_doc"),
     )
 
 

@@ -20,7 +20,7 @@ DuckDB), so every operator here is oracle-checkable bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import (
@@ -37,19 +37,14 @@ N_HASHES = 8
 BAND_SIZE = 2  # 8 hashes / 2 per band = 4 bands
 
 
-def _shingles(tokens: Column) -> Column:
-    """Distinct word 3-grams. element_at is 1-based; caller guarantees
-    size(tokens) >= 3 so indices stay in range under ANSI mode."""
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.size(tokens) - 2),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(tokens, i),
-                F.element_at(tokens, i + 1),
-                F.element_at(tokens, i + 2),
-            ),
-        )
+def _shingles(tokens: str) -> str:
+    """Distinct word 3-grams of the SQL array ``tokens``, as SQL text.
+    element_at is 1-based; caller guarantees size(tokens) >= 3 so indices
+    stay in range under ANSI mode."""
+    return (
+        f"array_distinct(transform(sequence(1, size({tokens}) - 2), "
+        f"i -> concat_ws(' ', element_at({tokens}, i), "
+        f"element_at({tokens}, i + 1), element_at({tokens}, i + 2))))"
     )
 
 
@@ -60,51 +55,37 @@ def minhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame
     slices; minhash k = lexicographic min of slice k over the shingle set.
     min over a uniform hash is a valid Jaccard-preserving minhash, and hex
     strings compare identically in Spark and DuckDB. Narrow map-only stage;
-    hashing cost is 2 md5 per shingle instead of 8.
+    hashing cost is 2 md5 per shingle instead of 8. Every expression is one
+    SQL string, built JVM-side (SCALING.md "Building expressions").
     """
-    toks = F.split(F.lower(F.col(text_col)), " ")
-    base = docs.filter(F.size(toks) >= 3).select(
-        F.col(id_col), _shingles(toks).alias("sh")
+    toks = f"split(lower(`{text_col}`), ' ')"
+    hashed = [
+        f"transform(sh, s -> md5(concat('{seed}|', s))) AS m{seed}"
+        for seed in range((N_HASHES + 3) // 4)
+    ]
+    mins = [
+        f"array_min(transform(m{k // 4}, "
+        f"m -> substring(m, {(k % 4) * 8 + 1}, 8))) AS h{k}"
+        for k in range(N_HASHES)
+    ]
+    return (
+        docs.where(f"size({toks}) >= 3")
+        .selectExpr(f"`{id_col}`", f"{_shingles(toks)} AS sh")
+        .selectExpr(f"`{id_col}`", "sh", *hashed)
+        .selectExpr(f"`{id_col}`", *mins)
     )
-    n_seeds = (N_HASHES + 3) // 4
-    for seed in range(n_seeds):
-        prefix = f"{seed}|"
-
-        def _hash(s, _p=prefix):
-            return F.md5(F.concat(F.lit(_p), s))
-
-        # transform() lambda must accept exactly one positional arg (a second
-        # would receive the element index) — hence the named helper.
-        base = base.withColumn(
-            f"m{seed}", F.transform(F.col("sh"), lambda s: _hash(s))
-        )
-
-    def slice_min(k: int) -> Column:
-        off = (k % 4) * 8
-
-        def _slice(m, _off=off):
-            return F.substring(m, _off + 1, 8)
-
-        return F.array_min(
-            F.transform(F.col(f"m{k // 4}"), lambda m: _slice(m))
-        ).alias(f"h{k}")
-
-    return base.select(id_col, *[slice_min(k) for k in range(N_HASHES)])
 
 
 def lsh_bands(sig: DataFrame, id_col: str) -> DataFrame:
     """Explode signatures into (id, band_idx, band_val) — bucket key rows."""
-    n_bands = N_HASHES // BAND_SIZE
-    bands = F.array(
-        *[
-            F.concat_ws(
-                "|", *[F.col(f"h{b * BAND_SIZE + r}") for r in range(BAND_SIZE)]
-            )
-            for b in range(n_bands)
-        ]
+    bands = ", ".join(
+        "concat_ws('|', "
+        + ", ".join(f"h{b * BAND_SIZE + r}" for r in range(BAND_SIZE))
+        + ")"
+        for b in range(N_HASHES // BAND_SIZE)
     )
-    return sig.select(
-        id_col, F.posexplode(bands).alias("band_idx", "band_val")
+    return sig.selectExpr(
+        f"`{id_col}`", f"posexplode(array({bands})) AS (band_idx, band_val)"
     )
 
 
@@ -466,21 +447,18 @@ def _stars(
     ``g`` on a small graph), then a 1-row check, the action that stores
     this checkpoint and a lazy ``edges`` checkpoint together: no edge set
     costs a job of its own to store. The empty graph is the zero-edge
-    star."""
-    ends = edges.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("hi").alias("node"), F.col("lo").alias("up")),
-                F.struct(F.col("lo").alias("node"), F.lit(None).alias("up")),
-            )
-        ).alias("e")
-    ).select("e.node", "e.up")
+    star. A centre's ``up`` is ``nullif(lo, lo)``: a NULL of the node
+    column's type, whatever that type is."""
+    ends = edges.selectExpr(
+        "inline(array(struct(hi AS node, lo AS up), "
+        "struct(lo AS node, nullif(lo, lo) AS up)))"
+    )
     grouped = g.group(ends, "node") if g else ends.groupBy("node")
     stars = grouped.agg(
-        F.coalesce(F.min("up"), F.col("node")).alias("root"),
-        ((F.count("up") == 0) | (F.count("*") == 1)).alias("star"),
+        F.expr("coalesce(min(up), node) AS root"),
+        F.expr("count(up) = 0 OR count(*) = 1 AS star"),
     ).localCheckpoint(eager=False)
-    done = stars.agg(F.coalesce(F.bool_and("star"), F.lit(True))).first()[0]
+    done = stars.selectExpr("coalesce(bool_and(star), true)").first()[0]
     return stars, done
 
 
@@ -518,11 +496,10 @@ def connected_components_lss(
     same recursive-CTE transitive closure in ``q_dedup_clusters_lss``).
 
     Small graphs run the rounds with AQE off: see ``session.graph_loop``."""
-    e = pairs.select(F.col(left).alias("a"), F.col(right).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
     edges = (
-        e.select(F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo"))
+        pairs.selectExpr(f"`{left}` AS a", f"`{right}` AS b")
+        .where("a != b")
+        .selectExpr("greatest(a, b) AS hi", "least(a, b) AS lo")
         .distinct()
         .localCheckpoint(eager=False)
     )
@@ -538,27 +515,21 @@ def connected_components_lss(
             # node's root in the stored stars (its larger neighbours never
             # lower it), so the step is one join, no aggregate.
             large = edges.join(
-                g.hint(roots.select(F.col("node").alias("lo"), "root")), "lo"
-            ).select("hi", F.col("root").alias("lo"))
+                g.hint(roots.selectExpr("node AS lo", "root")), "lo"
+            ).selectExpr("hi", "root AS lo")
             # Small-star: every node rewires its smaller neighbours (and
             # itself) to the min of those: one window per ``hi`` over the
             # (child > parent) edge list, so ``large`` is read once. No
             # distinct on ``large``: the min is duplicate-blind and the new
             # edge set re-distincts.
-            small = g.pin(large, "hi").select(
-                "hi", "lo", F.min("lo").over(Window.partitionBy("hi")).alias("m")
+            small = g.pin(large, "hi").selectExpr(
+                "hi", "lo", "min(lo) OVER (PARTITION BY hi) AS m"
             )
             edges = g.pin(
-                small.select(
-                    F.explode(
-                        F.array(
-                            F.struct(F.col("lo").alias("hi"), "m"),
-                            F.struct("hi", "m"),
-                        )
-                    ).alias("e")
-                )
-                .select("e.hi", F.col("e.m").alias("lo"))
-                .filter(F.col("hi") != F.col("lo")),
+                small.selectExpr(
+                    "inline(array(struct(lo AS hi, m AS lo), "
+                    "struct(hi, m AS lo)))"
+                ).where("hi != lo"),
                 "hi",
                 "lo",
             ).distinct().localCheckpoint(eager=False)
@@ -1347,7 +1318,7 @@ def semdedup_flags(
         dot_unrolled,
     )
 
-    b = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    b = emb.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     # k is the scale knob, so the model stays bounded (k rows) however big
     # the corpus: collect it and assign against LITERAL centroids — plain
     # codegen arithmetic per (row, candidate), no HOF lambdas, no per-row

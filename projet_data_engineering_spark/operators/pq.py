@@ -249,7 +249,7 @@ def pq_encode_with(emb: DataFrame, books: BooksLocal) -> DataFrame:
     :func:`pq_encode_arrow` (vectorized numpy over mapInPandas), which
     beats all JVM forms; this JVM form keeps the exact-arithmetic oracle
     contract."""
-    v = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    v = emb.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     structs = [
         F.array_min(_cands(books, m, F.col("v"))).alias(f"s{m}")
         for m in range(PQ_M)
@@ -482,7 +482,7 @@ def adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", *[f"c{m + 1}" for m in range(PQ_M)]
     )
 
-    v = e.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    v = e.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     qrows = v.filter(F.col("vec_id") < PQ_NQ).collect()  # bounded panel
 
     def dtab_lit(qv: list[float], m: int) -> Column:
@@ -584,7 +584,7 @@ def q_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB you measure recall on a sampled panel, then serve from
     codes."""
     e = load_table(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    v = e.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     q = v.filter(F.col("vec_id") < PQ_NQ).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -659,7 +659,7 @@ def q_ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids against the vector table: corpus scan stays compressed, exact reads
     are point lookups."""
     e = load_table(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    v = e.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     scored = adc_scored(spark, sf_dir)
     ws = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
     shortlist = (
@@ -836,7 +836,7 @@ def pq_serve(
         .filter(F.col("rn") <= shortlist)
         .select("query_id", "vec_id")
     )
-    v = originals.select("vec_id", as_double(F.col("embedding")).alias("v"))
+    v = originals.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     q = queries.select("query_id", F.col("v").alias("qv"))
     reranked = (
         short.join(v, "vec_id")
@@ -873,7 +873,7 @@ def q_pq_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_pq_index(e, path)
         queries = e.filter(F.col("vec_id") < PQ_NQ).select(
             F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("v"),
+            F.expr(f"{as_double('embedding')} AS v"),
         )
         out = pq_serve(spark, path, queries, e)
         rows = out.collect()  # materialize before the tempdir is removed

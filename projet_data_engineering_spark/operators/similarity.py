@@ -13,6 +13,10 @@ the ``embeddings`` table. Two tiers:
 
 Floats are cast to double before any arithmetic (exact widening) and scores
 rounded to 4 dp on both engines so fold-order ulps can't flip the hash.
+
+``as_double``, ``dot``, ``cosine`` and ``_ivf_scored_cents`` return SQL
+text, so a whole score is one ``selectExpr`` string, parsed JVM-side in one
+py4j call (SCALING.md "Building expressions").
 """
 
 from __future__ import annotations
@@ -39,18 +43,34 @@ IVF_K = 8
 IVF_ITERS = 2
 
 
-def as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
+def as_double(vec: str) -> str:
+    """SQL text: the SQL array ``vec`` with every element cast to double."""
+    return f"transform({vec}, x -> CAST(x AS DOUBLE))"
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+def dot(a: str, b: str) -> str:
+    """SQL text: the dot product of two SQL double arrays, folded left to
+    right from 0.0."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D,"
+        " (acc, p) -> acc + p)"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def cosine(a: str, b: str) -> str:
+    return f"{dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))"
+
+
+def _top(
+    scored: DataFrame, k: int, key: str = "query_id", id_col: str = "vec_id"
+) -> DataFrame:
+    """``scored`` with its per-``key`` ``rank`` (score desc, then id), top
+    ``k`` kept."""
+    return scored.selectExpr(
+        "*",
+        f"row_number() OVER (PARTITION BY {key} ORDER BY score DESC,"
+        f" {id_col} ASC) AS rank",
+    ).where(f"rank <= {k}")
 
 
 def sign_bucket(vec: Column, n_bits: int = 8) -> Column:
@@ -74,24 +94,15 @@ def knn_brute_force(
     """Exact top-k per query: broadcast the (small) query set against the
     corpus, rank per query. Corpus-side data never moves; the only shuffle is
     the per-query top-k, which TakeOrdered-style keeps at k rows/partition."""
-    from pyspark.sql import Window
-
-    e = embeddings.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("ev")
-    )
-    q = queries.select(
-        F.col(query_id_col), as_double(F.col(vec_col)).alias("qv")
-    )
+    e = embeddings.selectExpr(id_col, f"{as_double(vec_col)} AS ev")
+    q = queries.selectExpr(query_id_col, f"{as_double(vec_col)} AS qv")
     scored = (
         e.crossJoin(F.broadcast(q))
-        .withColumn("score", F.round(cosine(F.col("ev"), F.col("qv")), 4))
-        .filter(F.col(query_id_col) != F.col(id_col))
+        .selectExpr("*", f"round({cosine('ev', 'qv')}, 4) AS score")
+        .where(f"{query_id_col} != {id_col}")
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "rank")
+    return _top(scored, k, query_id_col, id_col).select(
+        query_id_col, id_col, "score", "rank"
     )
 
 
@@ -120,16 +131,12 @@ def q_embed_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-20 neighbors of vector 0 — the ANN exactness
     baseline. Deterministic order: rounded score desc, then id."""
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == 0).select(
-        as_double(F.col("embedding")).alias("qv")
-    )
+    qv = e.where("vec_id = 0").selectExpr(f"{as_double('embedding')} AS qv")
     return (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", as_double(F.col("embedding")).alias("ev"))
+        e.where("vec_id != 0")
+        .selectExpr("vec_id", f"{as_double('embedding')} AS ev")
         .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id", F.round(cosine(F.col("ev"), F.col("qv")), 4).alias("score")
-        )
+        .selectExpr("vec_id", f"round({cosine('ev', 'qv')}, 4) AS score")
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(20)
     )
@@ -171,37 +178,23 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     The scale path: bucket assignment is a map-only stage; persisting the
     corpus partitioned by bucket turns each query into a partition-pruned
     scan + broadcast join."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
     b = e.select(
         "vec_id",
-        as_double(F.col("embedding")).alias("v"),
+        F.expr(f"{as_double('embedding')} AS v"),
         sign_bucket(F.col("embedding"), n_bits=4).alias("bucket"),
     )
-    q = (
-        b.filter(F.col("vec_id") < 3)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("bucket"),
-        )
+    q = b.where("vec_id < 3").selectExpr(
+        "vec_id AS query_id", "v AS qv", "bucket"
     )
     scored = (
         b.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("v"), F.col("qv")), 4).alias("score"),
+        .where("vec_id != query_id")
+        .selectExpr(
+            "query_id", "vec_id", f"round({cosine('v', 'qv')}, 4) AS score"
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    return _top(scored, 5).select("query_id", "vec_id", "score", "rank")
 
 
 def _ivf_cent_artifact(e: DataFrame) -> DataFrame:
@@ -212,12 +205,8 @@ def _ivf_cent_artifact(e: DataFrame) -> DataFrame:
     load it, here it trains inline in the same plan."""
     return (
         kmeans_centroids(e, k=IVF_K, iters=IVF_ITERS)
-        .select(
-            F.struct(
-                F.col("cid").alias("cent_id"), F.col("ce").alias("cv")
-            ).alias("c")
-        )
-        .agg(F.collect_list("c").alias("cents"))
+        .selectExpr("struct(cid AS cent_id, ce AS cv) AS c")
+        .agg(F.expr("collect_list(c) AS cents"))
         # 1-row artifact, EAGERLY materialized: every later broadcast that
         # references the quantizer builds from the stored row instantly
         # instead of re-deriving the whole training inside a broadcast-build
@@ -226,24 +215,44 @@ def _ivf_cent_artifact(e: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_scored_cents(nprobe: int) -> Column:
-    """Per-vector scored centroid list over a broadcast ``cents`` artifact:
-    struct(cos, -cent_id), descending, so element 1 is the argmax with ties
-    toward the LOWEST centroid id; only the probe depth is kept."""
-    return F.slice(
-        F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.col("cents"),
-                    lambda c: F.struct(
-                        F.round(cosine(F.col("v"), c["cv"]), 4).alias("cos"),
-                        (-c["cent_id"]).alias("neg_id"),
-                    ),
-                )
-            )
-        ),
-        1,
-        nprobe,
+def _ivf_scored_cents(nprobe: int) -> str:
+    """SQL text: the per-vector scored centroid list of ``v`` over a
+    ``cents`` artifact: struct(cos, -cent_id), descending, so element 1 is
+    the argmax with ties toward the LOWEST centroid id; only the probe
+    depth is kept."""
+    scored = (
+        f"transform(cents, c -> struct(round({cosine('v', 'c.cv')}, 4) AS cos,"
+        " -c.cent_id AS neg_id))"
+    )
+    return f"slice(reverse(array_sort({scored})), 1, {nprobe})"
+
+
+def _ivf_probe_scores(b: DataFrame, cents: DataFrame) -> DataFrame:
+    """(query_id, vec_id, score) of the in-plan IVF tier over ``b`` (vec_id,
+    v): every vector's centroid list is scored ONCE against the broadcast
+    ``cents`` artifact and stored; the assignment (top-1) and the probes of
+    queries 0-2 (top-2) both read that one materialization, and each probe
+    scores the vectors assigned to its centroids."""
+    scored = (
+        b.crossJoin(F.broadcast(cents))
+        .selectExpr("vec_id", "v", f"{_ivf_scored_cents(2)} AS top2")
+        .localCheckpoint(eager=True)  # the materialized assignment table —
+        # at 100 TB this is a parquet write partitioned by cent_id
+    )
+    assigned = scored.selectExpr("vec_id", "-top2[0].neg_id AS cent_id", "v")
+    probes = (
+        scored.where("vec_id < 3")
+        .selectExpr(
+            "vec_id AS query_id", "v AS qv", "explode(top2.neg_id) AS neg_id"
+        )
+        .selectExpr("query_id", "qv", "-neg_id AS cent_id")
+    )
+    return (
+        assigned.join(F.broadcast(probes), "cent_id")
+        .where("vec_id != query_id")
+        .selectExpr(
+            "query_id", "vec_id", f"round({cosine('v', 'qv')}, 4) AS score"
+        )
     )
 
 
@@ -280,16 +289,16 @@ def build_ann_index(
     (``evidence/bench_search_serving_r06.json`` shows the same economics
     for BM25)."""
     spark = embeddings.sparkSession
-    kmeans_centroids(embeddings, k=k, iters=iters).select(
-        F.col("cid").alias("cent_id"), F.col("ce").alias("cv")
+    kmeans_centroids(embeddings, k=k, iters=iters).selectExpr(
+        "cid AS cent_id", "ce AS cv"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     assigned = assign_to_stored_centroids(spark, path, embeddings)
     assigned.repartition("cent_id").write.partitionBy("cent_id").mode(
         "overwrite"
     ).parquet(f"{path}/assignments")
-    spark.range(1).select(
-        F.lit(k).alias("k"), F.lit(iters).alias("iters")
-    ).write.mode("overwrite").parquet(f"{path}/stats")
+    spark.range(1).selectExpr(f"{k} AS k", f"{iters} AS iters").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/stats")
 
 
 def train_ann_quantizer(
@@ -302,33 +311,34 @@ def train_ann_quantizer(
     centroid algebra to ``build_ann_index``, so an index populated by
     streamed assignments converges to the scratch-built one exactly."""
     spark = embeddings.sparkSession
-    kmeans_centroids(embeddings, k=k, iters=iters).select(
-        F.col("cid").alias("cent_id"), F.col("ce").alias("cv")
+    kmeans_centroids(embeddings, k=k, iters=iters).selectExpr(
+        "cid AS cent_id", "ce AS cv"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-    spark.range(1).select(
-        F.lit(k).alias("k"), F.lit(iters).alias("iters")
-    ).write.mode("overwrite").parquet(f"{path}/stats")
+    spark.range(1).selectExpr(f"{k} AS k", f"{iters} AS iters").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/stats")
 
 
 def _centroid_literal(spark: SparkSession, index_path: str) -> Column:
     """The index's stored quantizer as one array<struct(cent_id, cv)>
     literal, typed as stored — the ``cents`` column ``_ivf_scored_cents``
-    scores. Memoized on the centroids directory's listing
-    (``io.listing_memo``): every (re)build rewrites it."""
+    scores. One SQL string, parsed JVM-side in one py4j call (one call per
+    element cost 180-240 ms for 8 x 64 doubles). Memoized on the centroids
+    directory's listing (``io.listing_memo``): every (re)build rewrites
+    it."""
     path = f"{index_path}/centroids"
 
     def build() -> Column:
         stored = spark.read.parquet(path).select("cent_id", "cv")
-        cents = F.array(
-            *[
-                F.struct(
-                    F.lit(r["cent_id"]).alias("cent_id"),
-                    F.array(*[F.lit(x) for x in r["cv"]]).alias("cv"),
-                )
-                for r in stored.collect()
-            ]
+        # each double as its shortest round-trip repr plus D, which parses
+        # back to the same bits (unsuffixed, 0.5 would parse as DECIMAL)
+        cents = ", ".join(
+            f"struct({r['cent_id']} AS cent_id,"
+            f" array({', '.join(f'{x!r}D' for x in r['cv'])}) AS cv)"
+            for r in stored.collect()
         )
-        return cents.cast(ArrayType(stored.schema))
+        typed = ArrayType(stored.schema).simpleString()
+        return F.expr(f"CAST(array({cents}) AS {typed})")
 
     return listing_memo(spark, path, "cents", build)
 
@@ -346,12 +356,10 @@ def assign_to_stored_centroids(
     reads it once, and a frozen quantizer is read once per process."""
     return vecs.select(
         "vec_id",
-        as_double(F.col("embedding")).alias("v"),
+        F.expr(f"{as_double('embedding')} AS v"),
         _centroid_literal(spark, index_path).alias("cents"),
-    ).select(
-        "vec_id",
-        "v",
-        (-_ivf_scored_cents(1)[0]["neg_id"]).alias("cent_id"),
+    ).selectExpr(
+        "vec_id", "v", f"-{_ivf_scored_cents(1)}[0].neg_id AS cent_id"
     )
 
 
@@ -377,40 +385,27 @@ def ann_serve(
     between jobs, and exact cosine + per-query top-k runs over the pruned
     lists only. Identical output to the in-query IVF path
     (``q_ann_ivf_served`` shares ``q_ann_ivf``'s independent oracle)."""
-    from pyspark.sql import Window
-
     probes = (
         queries.select(
             "query_id", "v", _centroid_literal(spark, index_path).alias("cents")
         )
-        .select(
+        .selectExpr(
             "query_id",
-            F.col("v").alias("qv"),
-            F.explode(
-                _ivf_scored_cents(nprobe).getField("neg_id")
-            ).alias("neg_id"),
+            "v AS qv",
+            f"explode({_ivf_scored_cents(nprobe)}.neg_id) AS neg_id",
         )
-        .select("query_id", "qv", (-F.col("neg_id")).alias("cent_id"))
+        .selectExpr("query_id", "qv", "-neg_id AS cent_id")
     )
     assigned = read_parquet(spark, f"{index_path}/assignments")
     scored = assigned.join(
-        F.broadcast(probes.filter(F.col("cent_id") >= 0)), "cent_id"
+        F.broadcast(probes.where("cent_id >= 0")), "cent_id"
     )
     if exclude_self:
-        scored = scored.filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        F.round(cosine(F.col("v"), F.col("qv")), 4).alias("score"),
+        scored = scored.where("vec_id != query_id")
+    scored = scored.selectExpr(
+        "query_id", "vec_id", f"round({cosine('v', 'qv')}, 4) AS score"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    return _top(scored, topk).select("query_id", "vec_id", "score", "rank")
 
 
 # Shared by q_ann_ivf (in-plan index) and q_ann_ivf_served (materialized
@@ -470,46 +465,12 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     you train on a sample), no shuffle anywhere before the probe join. At
     100 TB the persisted assignment becomes a table written partitioned by
     ``cent_id``, turning each probe into a partition-pruned scan."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
-    b = e.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    cents = _ivf_cent_artifact(e)
-    # ONE corpus scan: (vec_id, v, top-2 centroid ids), persisted and shared
+    b = e.selectExpr("vec_id", f"{as_double('embedding')} AS v")
+    # ONE corpus scan: (vec_id, v, top-2 centroid ids), stored and shared
     # by the assignment and the probe branch (previously two full scans).
-    scored = (
-        b.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", _ivf_scored_cents(2).alias("top2"))
-        .localCheckpoint(eager=True)  # the materialized assignment table —
-        # at 100 TB this is a parquet write partitioned by cent_id
-    )
-    assigned = scored.select(
-        "vec_id", (-F.col("top2")[0]["neg_id"]).alias("cent_id"), "v"
-    )
-    probes = (
-        scored.filter(F.col("vec_id") < 3)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.explode(F.col("top2.neg_id")).alias("neg_id"),
-        )
-        .select("query_id", "qv", (-F.col("neg_id")).alias("cent_id"))
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(cosine(F.col("v"), F.col("qv")), 4).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "vec_id", "score", "rank")
-    )
+    scored = _ivf_probe_scores(b, _ivf_cent_artifact(e))
+    return _top(scored, 5).select("query_id", "vec_id", "score", "rank")
 
 
 @query("q_ann_ivf_served", oracle=_IVF_ORACLE)
@@ -528,9 +489,8 @@ def q_ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="ann_index_")
     try:
         build_ann_index(e, path)
-        queries = e.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("v"),
+        queries = e.where("vec_id < 3").selectExpr(
+            "vec_id AS query_id", f"{as_double('embedding')} AS v"
         )
         out = ann_serve(spark, path, queries, nprobe=2, topk=5)
         # Materialize before the index directory is removed: the returned
@@ -613,26 +573,19 @@ def q_embed_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     each of the O(block²) pairs costs a single dot product instead of three —
     the standard precompute for any pairwise-cosine stage at scale."""
     e = load_table(spark, sf_dir, "embeddings")
-    v = as_double(F.col("embedding"))
-    norm = F.sqrt(dot(v, v))
-    t = e.select(
-        "vec_id",
-        "label",
-        F.transform(v, lambda x: x / norm).alias("nv"),
+    v = as_double("embedding")
+    t = e.selectExpr(
+        "vec_id", "label", f"transform({v}, x -> x / sqrt({dot(v, v)})) AS nv"
     )
     a, b = t.alias("a"), t.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
+        a.join(b, F.expr("a.label = b.label AND a.vec_id < b.vec_id"))
+        .selectExpr(
+            "a.vec_id AS v1",
+            "b.vec_id AS v2",
+            f"round({dot('a.nv', 'b.nv')}, 4) AS cos",
         )
-        .select(
-            F.col("a.vec_id").alias("v1"),
-            F.col("b.vec_id").alias("v2"),
-            F.round(dot(F.col("a.nv"), F.col("b.nv")), 4).alias("cos"),
-        )
-        .filter(F.col("cos") >= 0.30)
+        .where("cos >= 0.30D")
     )
 
 
@@ -672,7 +625,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash). Map-only array lambdas, zero shuffles, no UDFs; q_max <= 127
     doubles as the code-range invariant."""
     e = load_table(spark, sf_dir, "embeddings")
-    v = as_double(F.col("embedding"))
+    v = F.expr(as_double("embedding"))
     scale = F.aggregate(
         F.transform(v, lambda x: F.abs(x)),
         F.lit(0.0),
@@ -804,64 +757,33 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus cost is one scan per side, and the truth side is the
     expensive one (which is the point: you compute it on the sample, not
     the fleet)."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
     b = e.select(
         "vec_id",
-        as_double(F.col("embedding")).alias("v"),
+        F.expr(f"{as_double('embedding')} AS v"),
         sign_bucket(F.col("embedding"), n_bits=4).alias("bucket"),
     ).persist()  # every ranking pass reads it
-    q = b.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("bucket").alias("qbucket"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("vec_id")
+    q = b.where("vec_id < 3").selectExpr(
+        "vec_id AS query_id", "v AS qv", "bucket AS qbucket"
     )
 
     def top5(scored):
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 5)
-            .select("query_id", "vec_id")
-        )
+        return _top(scored, 5).select("query_id", "vec_id")
 
-    score = F.round(cosine(F.col("v"), F.col("qv")), 4).alias("score")
+    score = f"round({cosine('v', 'qv')}, 4) AS score"
     truth = top5(
         b.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", score)
+        .where("vec_id != query_id")
+        .selectExpr("query_id", "vec_id", score)
     )
     ann_lsh = top5(
         b.join(F.broadcast(q), b["bucket"] == q["qbucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", score)
+        .where("vec_id != query_id")
+        .selectExpr("query_id", "vec_id", score)
     )
-    # IVF tier: same shared-scan shape as q_ann_ivf, trained quantizer
-    cents = _ivf_cent_artifact(e)
-    scored_c = (
-        b.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", _ivf_scored_cents(2).alias("top2"))
-        .localCheckpoint(eager=True)  # see q_ann_ivf: materialized assignment
-    )
-    assigned = scored_c.select(
-        "vec_id", (-F.col("top2")[0]["neg_id"]).alias("cent_id"), "v"
-    )
-    probes = (
-        scored_c.filter(F.col("vec_id") < 3)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.explode(F.col("top2.neg_id")).alias("neg_id"),
-        )
-        .select("query_id", "qv", (-F.col("neg_id")).alias("cent_id"))
-    )
+    # IVF tier: the same shared-scan path as q_ann_ivf, trained quantizer
     ann_ivf = top5(
-        assigned.join(F.broadcast(probes), "cent_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", score)
+        _ivf_probe_scores(b, _ivf_cent_artifact(e))
     )
 
     def recall_of(ann: DataFrame, method: str) -> DataFrame:
@@ -1009,17 +931,12 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm = bm_top.select("doc_id", F.row_number().over(wb).alias("lex_rank"))
 
     e = load_table(spark, sf_dir, "embeddings")
-    qv = e.filter(F.col("vec_id") == 0).select(
-        as_double(F.col("embedding")).alias("qv")
-    )
+    qv = e.where("vec_id = 0").selectExpr(f"{as_double('embedding')} AS qv")
     ann_top = (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", as_double(F.col("embedding")).alias("ev"))
+        e.where("vec_id != 0")
+        .selectExpr("vec_id", f"{as_double('embedding')} AS ev")
         .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(cosine(F.col("ev"), F.col("qv")), 4).alias("score"),
-        )
+        .selectExpr("vec_id", f"round({cosine('ev', 'qv')}, 4) AS score")
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(HYBRID_TOPK)
     )

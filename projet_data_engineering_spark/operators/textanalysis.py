@@ -26,8 +26,11 @@ def tokens(col: Column) -> Column:
     return F.split(F.lower(col), " ")
 
 
-def stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
-    return F.size(F.filter(toks, lambda t: t.isin(*words)))
+def stopword_hits(toks: str, words: tuple[str, ...]) -> str:
+    """SQL text: how many elements of the SQL array ``toks`` are in
+    ``words``."""
+    listed = ", ".join(f"'{w}'" for w in words)
+    return f"size(filter({toks}, t -> t IN ({listed})))"
 
 
 def _lang_case_sql() -> str:
@@ -125,19 +128,15 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword density (boilerplate/word-salad scores low) — the heuristic
     filter tier of a C4/Gopher-style cleaning pipeline."""
     d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    n_stop = stopword_hits(toks, STOPWORDS["en"])
-    return d.select(
+    n_tokens = "size(split(lower(text), ' '))"
+    n_stop = stopword_hits("split(lower(text), ' ')", STOPWORDS["en"])
+    return d.selectExpr(
         "doc_id",
-        n_tokens.alias("n_tokens"),
-        F.round(F.col("n_chars") / n_tokens, 4).alias("avg_token_len"),
-        F.round(n_stop / n_tokens, 4).alias("stop_ratio"),
-        F.round(
-            F.least(n_tokens / F.lit(50.0), F.lit(1.0))
-            * (0.5 + F.least(n_stop / n_tokens, F.lit(0.5))),
-            4,
-        ).alias("quality"),
+        f"{n_tokens} AS n_tokens",
+        f"round(n_chars / {n_tokens}, 4) AS avg_token_len",
+        f"round({n_stop} / {n_tokens}, 4) AS stop_ratio",
+        f"round(least({n_tokens} / 50.0D, 1.0D)"
+        f" * (least({n_stop} / {n_tokens}, 0.5D) + 0.5D), 4) AS quality",
     )
 
 
@@ -411,21 +410,21 @@ def q_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop = labels.filter(F.col("node") != F.col("root")).select(
         F.col("node").alias("doc_id")
     )
-    toks = F.split(F.lower("text"), " ")
-    n_tokens = F.size(toks)
-    n_stop = stopword_hits(toks, STOPWORDS["en"])
-    quality = F.least(n_tokens / F.lit(50.0), F.lit(1.0)) * (
-        0.5 + F.least(n_stop.cast("double") / n_tokens, F.lit(0.5))
+    n_tokens = "size(split(lower(text), ' '))"
+    n_stop = stopword_hits("split(lower(text), ' ')", STOPWORDS["en"])
+    quality = (
+        f"least({n_tokens} / 50.0D, 1.0D)"
+        f" * (least(CAST({n_stop} AS DOUBLE) / {n_tokens}, 0.5D) + 0.5D)"
     )
     return (
         d.join(drop, "doc_id", "left_anti")
-        .select("lang", n_tokens.alias("n_tokens"), quality.alias("q"))
-        .filter(F.col("q") >= 0.5)
+        .selectExpr("lang", f"{n_tokens} AS n_tokens", f"{quality} AS q")
+        .where("q >= 0.5D")
         .groupBy("lang")
         .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-            F.round(F.avg("q"), 4).alias("avg_quality"),
+            F.expr("count(*) AS n_docs"),
+            F.expr("sum(n_tokens) AS total_tokens"),
+            F.expr("round(avg(q), 4) AS avg_quality"),
         )
     )
 

@@ -91,9 +91,12 @@ def curate_corpus(
     returned frame reads it. Nothing is cached for the caller to release:
     the checkpoint's blocks are reclaimed once no frame references them, and
     ``unpersist()`` on ``_labels`` / ``_contaminated`` is harmless."""
-    toks = F.split(F.lower("text"), " ")
-    corpus = docs.select(
-        "doc_id", "text", "source", F.size(toks).alias("n_tokens")
+    # Every expression below is one SQL string, built JVM-side in one py4j
+    # call; the Column API costs 3-8 calls per node (SCALING.md "Building
+    # expressions"). Doubles carry a ``D`` suffix: ``50.0`` parses as DECIMAL.
+    toks = "split(lower(text), ' ')"
+    corpus = docs.selectExpr(
+        "doc_id", "text", "source", f"size({toks}) AS n_tokens"
     )
     labels = connected_components_lss(
         minhash_candidate_pairs(docs, "doc_id", "text")
@@ -101,24 +104,31 @@ def curate_corpus(
 
     # ---- stages 1-2: near-dup roots, quality floor (q_curate's score) ----
     n_stop = stopword_hits(toks, STOPWORDS["en"])
-    quality = F.least(F.col("n_tokens") / F.lit(50.0), F.lit(1.0)) * (
-        0.5 + F.least(n_stop.cast("double") / F.col("n_tokens"), F.lit(0.5))
+    quality = (
+        "least(n_tokens / 50.0D, 1.0D)"
+        f" * (least(CAST({n_stop} AS DOUBLE) / n_tokens, 0.5D) + 0.5D)"
     )
-    is_eval = F.col("doc_id") % eval_mod == 0
-    base = corpus.join(labels, "doc_id", "left").withColumn(
-        "root", F.coalesce("root", "doc_id")
-    ).withColumn(
-        "reached",
-        F.when(F.col("root") != F.col("doc_id"), 0)
-        # the eval probe itself passes no further than the quality floor
-        .when(quality >= min_quality, F.when(is_eval, 2).otherwise(SHIPPED))
-        .otherwise(1),
+    is_eval = f"doc_id % {eval_mod} = 0"
+    base = (
+        corpus.join(labels, "doc_id", "left")
+        .withColumn("root", F.expr("coalesce(root, doc_id)"))
+        .withColumn(
+            "reached",
+            F.expr(
+                "CASE WHEN root != doc_id THEN 0"
+                # the eval probe itself passes no further than the quality
+                # floor
+                f" WHEN {quality} >= {float(min_quality)!r}D"
+                f" THEN CASE WHEN {is_eval} THEN 2 ELSE {SHIPPED} END"
+                " ELSE 1 END"
+            ),
+        )
     )
 
     # ---- stage 3: decontamination vs the eval probe ----
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 4),
-        lambda i: F.array_join(F.slice(toks, i, 5), " "),
+    grams = (
+        f"transform(sequence(1, size({toks}) - 4), "
+        f"i -> array_join(slice({toks}, i, 5), ' '))"
     )
     # eval grams from the RAW corpus (the benchmark suite is fixed; it does
     # not shrink because training docs were deduped). Bounded by
@@ -126,76 +136,72 @@ def curate_corpus(
     # docstring for the 100 TB contract (fixed benchmark suite -> broadcast;
     # this composition keeps the hint-free join and lets AQE decide).
     eval_grams = (
-        corpus.filter(is_eval & (F.col("n_tokens") >= 5))
-        .select(F.explode(grams).alias("gram"))
+        corpus.where(f"{is_eval} AND n_tokens >= 5")
+        .selectExpr(f"explode({grams}) AS gram")
         .distinct()
     )
     hits = (
-        base.filter((F.col("reached") == SHIPPED) & (F.col("n_tokens") >= 5))
-        .select("doc_id", F.explode(grams).alias("gram"))
+        base.where(f"reached = {SHIPPED} AND n_tokens >= 5")
+        .selectExpr("doc_id", f"explode({grams}) AS gram")
         .join(eval_grams, "gram")
-        .select("doc_id", F.lit(True).alias("hit"))
+        .selectExpr("doc_id", "true AS hit")
         .distinct()
     )
 
     # ---- stage 5: leakage-safe split on the cluster roots ----
-    bucket = F.conv(
-        F.substring(F.md5(F.col("root").cast("string")), 1, 2), 16, 10
-    ).cast("int")
-    split = (
-        F.when(bucket < 13, "test")
-        .when(bucket < 26, "valid")
-        .otherwise("train")
+    bucket = (
+        "CAST(conv(substring(md5(CAST(root AS STRING)), 1, 2), 16, 10) AS INT)"
     )
     status = (
         base.join(hits, "doc_id", "left")
-        .select(
+        .selectExpr(
             "doc_id",
             "source",
             "n_tokens",
             "root",
-            split.alias("split"),
-            F.when(F.col("hit"), 2)
-            .otherwise(F.col("reached"))
-            .alias("reached"),
+            f"CASE WHEN {bucket} < 13 THEN 'test'"
+            f" WHEN {bucket} < 26 THEN 'valid' ELSE 'train' END AS split",
+            "CASE WHEN hit THEN 2 ELSE reached END AS reached",
         )
         .localCheckpoint(eager=True)
     )
-    shipped = status.filter(F.col("reached") == SHIPPED)
+    shipped = status.where(f"reached = {SHIPPED}")
 
     # ---- stage 4: PII redaction (map-only) of the shipped docs' text ----
+    # the patterns hold no backslash or quote, so they are SQL literals as-is
     n_pii = (
-        F.size(F.expr(f"regexp_extract_all(text, '{EMAIL_RE}', 0)"))
-        + F.size(F.expr(f"regexp_extract_all(text, '{PHONE_RE}', 0)"))
+        f"size(regexp_extract_all(text, '{EMAIL_RE}', 0))"
+        f" + size(regexp_extract_all(text, '{PHONE_RE}', 0))"
+    )
+    redacted = (
+        f"regexp_replace(regexp_replace(text, '{EMAIL_RE}', '<EMAIL>'),"
+        f" '{PHONE_RE}', '<PHONE>')"
     )
     text = docs.select("doc_id", "text", "n_chars")
-    splits = shipped.join(text, "doc_id").select(
+    splits = shipped.join(text, "doc_id").selectExpr(
         "doc_id",
         "source",
         "n_chars",
         "n_tokens",
-        F.regexp_replace(
-            F.regexp_replace("text", EMAIL_RE, "<EMAIL>"), PHONE_RE, "<PHONE>"
-        ).alias("redacted"),
-        n_pii.alias("n_pii"),
+        f"{redacted} AS redacted",
+        f"{n_pii} AS n_pii",
         "root",
         "split",
     )
 
     # ---- stage 6: pack the train split's stored token counts ----
     train_windows = pack_windows(
-        shipped.filter(F.col("split") == "train").select(
-            F.col("source").alias("stream"),
-            F.col("doc_id").alias("doc"),
-            F.col("n_tokens").alias("ntok"),
+        shipped.where("split = 'train'").selectExpr(
+            "source AS stream", "doc_id AS doc", "n_tokens AS ntok"
         ),
         budget=pack_budget,
     )
 
     # ---- funnel: every stage each document reached, counted once ----
-    names = F.array(*map(F.lit, CHAIN), F.concat(F.lit("5_split_"), "split"))
-    staged = status.select(
-        F.explode(F.slice(names, 1, F.col("reached") + 1)).alias("stage"),
+    names = ", ".join(f"'{s}'" for s in CHAIN)
+    staged = status.selectExpr(
+        f"explode(slice(array({names}, concat('5_split_', split)), 1,"
+        " reached + 1)) AS stage",
         "doc_id",
         "n_tokens",
     )
@@ -207,10 +213,10 @@ def curate_corpus(
     funnel = (
         staged.union(empty)
         .groupBy("stage")
-        .agg(F.count("doc_id"), F.sum("n_tokens"))
+        .agg(F.expr("count(doc_id)"), F.expr("sum(n_tokens)"))
         .union(
-            train_windows.agg(
-                F.lit("6_train_windows"), F.count("*"), F.sum("n_tokens")
+            train_windows.selectExpr(
+                "'6_train_windows'", "count(*)", "sum(n_tokens)"
             )
         )
         .toDF("stage", "n_docs", "n_tokens")
@@ -220,7 +226,7 @@ def curate_corpus(
         "splits": splits,
         "funnel": funnel,
         "_labels": labels,
-        "_contaminated": status.filter((F.col("reached") == 2) & ~is_eval)
+        "_contaminated": status.where(f"reached = 2 AND NOT ({is_eval})")
         .select("doc_id"),
     }
 

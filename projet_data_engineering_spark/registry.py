@@ -34,261 +34,37 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# Names with a GREEN driver-side correctness row in round 1
-# (CORRECTNESS_r01.json). A budget-limited checker walks ``queries()`` in
-# order and may truncate, so these proven names go LAST: the front of the
-# walk is spent on (a) queries that erred in r1 (all fixed — each one
-# re-checked flips a red row green) and (b) queries with no driver evidence
-# yet. Within each group, registration order is preserved.
-_R1_GREEN = {
-    "q_tpch_q4", "q_tpch_q13", "q_tpch_q17", "q_tpch_q18", "q_tpch_q10",
-    "q_tpch_q14", "q_grouping_sets", "q_window_range", "q_join_nullsafe",
-    "q_snapshot_diff", "q_sample_stratified", "q_union_evolve",
+# The external driver checks the first 50 names of ``queries()``. The
+# queries whose code changed since its last check (r12) lead the walk, so a
+# truncated check re-verifies them first; every other query follows in
+# registration order.
+CHANGED_SINCE_DRIVER_CHECK = (
+    # the curation build and the stages it composes
+    "q_curate", "q_curation_funnel", "q_text_quality", "q_pack_sequences",
+    "q_split_groupsafe", "q_contamination_fuzzy",
+    # the near-dup family: SQL-text MinHash, star-checked LSS components
     "q_dedup_exact", "q_dedup_minhash", "q_dedup_simhash", "q_dedup_jaccard",
-    "q_dedup_clusters", "q_dedup_apply", "q_md5_key", "q_string_clean",
-    "q_split", "q_array_join", "q_contains", "q_replace", "q_duration_parse",
-    "q_regex_first_int", "q_cast_rating", "q_case_when", "q_blacklist_default",
-    "q_substring", "q_timestamp", "q_concat", "q_posexplode", "q_datediff",
-    "q_media_features", "q_filter_isin", "q_project", "q_filter_neq",
-    "q_coalesce", "q_filter_range", "q_filter_prefix", "q_count",
-}
-
-# Names with a GREEN driver-side correctness row in round 2
-# (CORRECTNESS_r02.json, 50/50 green — includes the 8 round-1 reds, all
-# fixed). Together with _R1_GREEN these cover 92 of the registry; the
-# remaining never-driver-checked names lead the walk so a budget-limited
-# round-3 sweep lands on queries with no driver evidence yet.
-_R2_GREEN = {
-    "q_gap_fill", "q_ewma", "q_zscore", "q_winsorized_mean", "q_map_funcs",
-    "q_json_extract", "q_regex_extract_all", "q_hof_arrays",
-    "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
-    "q_cohort_retention", "q_ntile", "q_search_boolean", "q_term_join",
-    "q_search_fuzzy", "q_bm25_topk", "q_search_fridge", "q_bm25_multifield",
-    "q_bm25_fuzzy", "q_posting_lists", "q_embed_knn", "q_ann_lsh",
-    "q_ann_ivf", "q_embed_knn_arrow", "q_embed_dup_pairs", "q_salted_agg",
-    "q_join_salted", "q_lang_id", "q_text_quality", "q_token_count",
-    "q_fingerprint", "q_binary_meta", "q_ngrams", "q_tfidf_topterms",
-    "q_curate", "q_contamination", "q_pii_redact", "q_repetition",
-    "q_domain_mix", "q_avg", "q_mode", "q_value_counts", "q_value_counts_num",
-    "q_count_distinct", "q_should_score", "q_tpch_q1", "q_topk", "q_limit",
-    "q_first",
-}
-
-_PROVEN = _R1_GREEN | _R2_GREEN
-
-# Names the driver checked in round 3 (CORRECTNESS_r03.json: 47 hash-green +
-# 3 rows-only-by-design approximate ops). With r1+r2 this brings driver
-# evidence to 142 of the 160 registered queries; the 18 never-checked
-# round-3 extensions (graph/datapipe/ml) now lead the walk.
-_R3_GREEN = {
-    "q_window_rank", "q_window_lag", "q_window_frame", "q_join_inner",
-    "q_join_multi", "q_join_left", "q_join_semi", "q_join_anti",
-    "q_upsert_merge", "q_dedup", "q_union", "q_intersect", "q_except",
-    "q_except_all", "q_tpch_q3", "q_tpch_q6", "q_rollup", "q_cube",
-    "q_pivot", "q_percentile", "q_join_asof", "q_join_range",
-    "q_sql_correlated", "q_try_cast", "q_string_agg", "q_histogram",
-    "q_unpivot", "q_stats", "q_tpch_q7", "q_tpch_q8", "q_tpch_q9",
-    "q_tpch_q15", "q_tpch_q19", "q_tpch_q22", "q_funnel", "q_map_enrich",
-    "q_media_resize", "q_media_frame_sample", "q_tpch_q5", "q_tpch_q2",
-    "q_tpch_q11", "q_tpch_q12", "q_tpch_q16", "q_tpch_q20", "q_tpch_q21",
-    "q_sample_bottomk", "q_dedup_clusters_lss", "q_approx_distinct",
-    "q_sample", "q_percentile_approx",
-}
-
-
-# Names the driver checked in round 4 (CORRECTNESS_r04.json: 50/50 green).
-# Cumulatively r1-r4 covers all 170 queries registered through round 4; any
-# round-5 additions are the only unchecked names and lead the walk.
-_R4_GREEN = {
-    "q_embed_quantize", "q_ann_recall", "q_dup_spans", "q_split_groupsafe",
-    "q_dedup_incremental", "q_bpe_pairs", "q_url_dedup", "q_media_decode",
-    "q_pagerank", "q_triangle_count", "q_degree_hist", "q_simhash_pairs",
-    "q_scd2", "q_sessionize", "q_profile", "q_train_test_split", "q_pmi",
-    "q_doc_logprob", "q_incremental_agg", "q_sample_weighted",
-    "q_token_count_bpe", "q_anomaly_mad", "q_entropy", "q_heavy_hitters",
-    "q_ngram_jaccard_pairs", "q_pack_sequences", "q_temporal_join", "q_kmeans",
-}
-
-
-# Names the driver checked in round 5 (CORRECTNESS_r05.json: 49 hash-green +
-# q_bpe_encode rows-only by design). Cumulatively r1-r5 covers all 174
-# registered queries.
-_R5_GREEN = {
-    "q_ann_ivf", "q_ann_recall", "q_array_join", "q_blacklist_default",
-    "q_bm25_served", "q_boilerplate", "q_bpe_encode", "q_case_when",
-    "q_cast_rating", "q_coalesce", "q_contains", "q_count", "q_curate",
-    "q_dedup_apply", "q_dedup_clusters", "q_dedup_clusters_lss",
-    "q_dedup_exact", "q_dedup_jaccard", "q_dedup_minhash", "q_dedup_simhash",
-    "q_duration_parse", "q_filter_isin", "q_filter_neq", "q_filter_prefix",
-    "q_filter_range", "q_grouping_sets", "q_join_nullsafe", "q_lang_id",
-    "q_md5_key", "q_media_container_meta", "q_media_decode",
-    "q_pack_sequences", "q_project", "q_regex_first_int", "q_replace",
-    "q_sample_stratified", "q_snapshot_diff", "q_split", "q_split_groupsafe",
-    "q_string_clean", "q_tpch_q10", "q_tpch_q13", "q_tpch_q14", "q_tpch_q17",
-    "q_tpch_q18", "q_tpch_q4", "q_union_evolve", "q_url_dedup",
-    "q_window_range", "q_zscore",
-}
-
-
-# Names the driver checked in round 6 (CORRECTNESS_r06.json: 50/50 green —
-# the r5-verdict-demanded stale cohort plus the r6 served-index additions).
-# Cumulatively r1-r6 covers all 177 registered queries.
-_R6_GREEN = {
-    "q_ann_ivf_served", "q_ann_lsh", "q_avg", "q_binary_meta", "q_bm25_fuzzy",
-    "q_bm25_multifield", "q_bm25_served", "q_bm25_topk", "q_cohort_retention",
-    "q_concat", "q_contamination", "q_count_distinct", "q_datediff",
-    "q_dedup_incremental_served", "q_domain_mix", "q_embed_dup_pairs",
-    "q_embed_knn", "q_embed_knn_arrow", "q_fingerprint", "q_first",
-    "q_join_salted", "q_limit", "q_media_decode", "q_media_features", "q_mode",
-    "q_ngrams", "q_ntile", "q_pii_redact", "q_posexplode", "q_posting_lists",
-    "q_repetition", "q_salted_agg", "q_search_boolean", "q_search_fridge",
-    "q_search_fuzzy", "q_should_score", "q_stream_dedup_ingest",
-    "q_stream_session", "q_stream_sliding", "q_stream_tumbling", "q_substring",
-    "q_term_join", "q_text_quality", "q_tfidf_topterms", "q_timestamp",
-    "q_token_count", "q_topk", "q_tpch_q1", "q_value_counts",
-    "q_value_counts_num",
-}
-
-
-# Names the driver checked in round 7 (CORRECTNESS_r07.json: 50/50 green —
-# the r7 additions (trained-model tier, served dedup/PQ, curation funnel)
-# plus the r7-changed cohort). Cumulatively r1-r7 covers all 212 queries
-# registered through round 7.
-_R7_GREEN = {
-    "q_ann_pq", "q_ann_pq_rerank", "q_bloom_join", "q_bm25_fuzzy",
-    "q_bm25_fuzzy_served", "q_chunk_windows", "q_constraint_audit",
-    "q_containment_pairs", "q_contamination_fuzzy", "q_curate",
-    "q_curation_funnel", "q_dedup_apply", "q_dedup_canonical",
-    "q_dedup_incremental_served", "q_dedup_recall", "q_domain_resample",
-    "q_domain_temperature", "q_drift_psi", "q_dsir_select", "q_dsir_weights",
-    "q_ewma", "q_gap_fill", "q_gopher_rules", "q_hof_arrays",
-    "q_hybrid_search", "q_json_extract", "q_k_anonymity", "q_label_prop",
-    "q_logreg", "q_logreg_auc", "q_logreg_confusion", "q_map_funcs",
-    "q_pca_power", "q_pca_project", "q_pq_encode", "q_pq_recall",
-    "q_pq_served", "q_regex_extract_all", "q_semdedup", "q_shuffle_shard",
-    "q_stream_ann_refresh", "q_stream_dedup_ingest", "q_stream_drift",
-    "q_stream_pq_refresh", "q_token_budget", "q_vocab_coverage",
-    "q_window_frame", "q_window_lag", "q_window_rank", "q_winsorized_mean",
-}
-
-# Names the driver checked in round 8 (CORRECTNESS_r08.json: 48 hash-green
-# + q_approx_distinct/q_sample rows-only by design — the r8 sketch/MVCC/
-# PQ-arrow additions plus the r8-changed cohort). Cumulatively r1-r8
-# covers all 222 queries registered through round 8.
-_R8_GREEN = {
-    "q_semdedup", "q_bpe_encode", "q_pq_encode", "q_pq_encode_arrow",
-    "q_ann_pq", "q_pq_recall", "q_ann_pq_rerank", "q_pq_served",
-    "q_stream_pq_refresh", "q_posting_lists", "q_bm25_served",
-    "q_bm25_fuzzy_served", "q_dsir_weights", "q_dsir_select", "q_cms_counts",
-    "q_stream_cms", "q_kmv_distinct", "q_percentile_sampled",
-    "q_cms_join_size", "q_stream_kmv", "q_time_travel", "q_table_cdc",
-    "q_stream_versioned", "q_sample_bottomk", "q_join_inner", "q_join_multi",
-    "q_join_left", "q_join_semi", "q_join_anti", "q_upsert_merge", "q_dedup",
-    "q_union", "q_intersect", "q_except", "q_except_all", "q_tpch_q3",
-    "q_tpch_q6", "q_rollup", "q_cube", "q_pivot", "q_percentile",
-    "q_approx_distinct", "q_join_asof", "q_join_range", "q_sql_correlated",
-    "q_try_cast", "q_string_agg", "q_histogram", "q_unpivot", "q_sample",
-}
-
-# Names the driver checked in round 9 (CORRECTNESS_r09.json: 49
-# hash-green + q_percentile_approx rows-only by design — the r9-changed
-# cohort plus the stalest TPC-H/stream names). Cumulatively r1-r9 covers
-# all 224 queries registered through round 9.
-_R9_GREEN = {
-    "q_dedup_minhash", "q_dedup_jaccard", "q_dedup_clusters",
-    "q_dedup_apply", "q_dedup_canonical", "q_ngram_jaccard_pairs",
-    "q_containment_pairs", "q_dedup_recall", "q_curate",
-    "q_curation_funnel", "q_stream_ann_refresh", "q_stream_cms",
-    "q_dedup_clusters_lss", "q_kmv_distinct", "q_percentile_sampled",
-    "q_cms_join_size", "q_stream_kmv", "q_stream_dedup_ingest",
-    "q_stream_drift", "q_stream_pq_refresh", "q_bm25_served",
-    "q_bm25_fuzzy_served", "q_stream_stack", "q_time_travel",
-    "q_time_travel_evolve", "q_table_cdc", "q_stream_versioned",
-    "q_stats", "q_percentile_approx", "q_tpch_q7", "q_tpch_q8",
-    "q_tpch_q9", "q_tpch_q15", "q_tpch_q19", "q_tpch_q22", "q_funnel",
-    "q_map_enrich", "q_media_resize", "q_media_frame_sample", "q_tpch_q5",
-    "q_tpch_q2", "q_tpch_q11", "q_tpch_q12", "q_tpch_q16", "q_tpch_q20",
-    "q_tpch_q21", "q_dup_spans", "q_dedup_incremental", "q_kmeans",
-    "q_simhash_pairs",
-}
-
-# Names the driver checked in round 10 (CORRECTNESS_r10.json: 50/50
-# green, all hash-matched — the r10-changed cohort led the sample).
-# Cumulatively r1-r10 covers all 227 registered queries.
-_R10_GREEN = {
-    "q_ann_ivf", "q_ann_recall", "q_anomaly_mad", "q_bm25_fuzzy_served",
-    "q_bm25_served", "q_boilerplate", "q_bpe_pairs", "q_coalesce",
-    "q_count", "q_crawl_frontier", "q_dedup_exact", "q_dedup_simhash",
-    "q_degree_hist", "q_doc_logprob", "q_embed_quantize", "q_entropy",
-    "q_filter_isin", "q_filter_neq", "q_filter_prefix", "q_filter_range",
-    "q_heavy_hitters", "q_incremental_agg", "q_lang_id", "q_media_audio",
-    "q_media_pixels", "q_pack_sequences", "q_pagerank", "q_pmi",
-    "q_profile", "q_project", "q_sample_weighted", "q_scd2", "q_sessionize",
-    "q_split_groupsafe", "q_stream_dedup_ingest", "q_stream_stack",
-    "q_stream_versioned", "q_table_cdc", "q_temporal_join", "q_time_travel",
-    "q_time_travel_evolve", "q_token_count", "q_token_count_bpe",
-    "q_tpch_q13", "q_tpch_q17", "q_tpch_q18", "q_tpch_q4",
-    "q_train_test_split", "q_triangle_count", "q_upsert_merge",
-}
-
-# Queries whose code, oracle, or executed plan changed in round 11, plus
-# the stale rows-only trio (VERDICT r10 item 6: q_approx_distinct and
-# q_sample last have driver rows from r8, q_percentile_approx from r9 —
-# resample them so "latest row green" stays fresh registry-wide). The
-# changed cohort: the media metadata tier (want_pixels gating — container
-# walk/resize/frame-sample no longer attempt entropy decode; pixel/audio
-# rows re-prove the full-decode path plus the new 4:2:0/4:2:2 chroma
-# arms), every MVCC query (single writer-lock acquisition per micro-batch
-# + prep/commit split), the streaming dedup single-signature-pass rework
-# (stack + stream dedup + the served probe's precomputed-bands path),
-# the crawl frontier's fetch-once checkpoint fix, and the BM25 layout
-# check's empty-manifest guard. Their older driver evidence no longer
-# describes the current code, so they walk FIRST.
-_R11_CHANGED = {
-    "q_approx_distinct", "q_sample", "q_percentile_approx",
-    "q_media_container_meta", "q_media_resize", "q_media_frame_sample",
-    "q_media_pixels", "q_media_audio", "q_media_decode", "q_media_features",
-    "q_stream_versioned", "q_time_travel", "q_time_travel_evolve",
-    "q_table_cdc", "q_upsert_merge",
-    "q_stream_stack", "q_stream_dedup_ingest", "q_dedup_incremental_served",
-    "q_crawl_frontier", "q_bm25_served", "q_bm25_fuzzy_served",
-}
-
-_TIERS = (
-    (10, _R10_GREEN),
-    (9, _R9_GREEN),
-    (8, _R8_GREEN),
-    (7, _R7_GREEN),
-    (6, _R6_GREEN),
-    (5, _R5_GREEN),
-    (4, _R4_GREEN),
-    (3, _R3_GREEN),
-    (2, _R2_GREEN),
-    (1, _R1_GREEN),
+    "q_dedup_clusters", "q_dedup_clusters_lss", "q_dedup_apply",
+    "q_dedup_canonical", "q_dedup_incremental", "q_dedup_incremental_served",
+    "q_dedup_recall", "q_semdedup", "q_stream_dedup_ingest",
+    # the ANN family: SQL-text scoring, one-call quantizer literal
+    "q_ann_ivf", "q_ann_ivf_served", "q_ann_lsh", "q_ann_pq",
+    "q_ann_pq_rerank", "q_ann_recall", "q_embed_knn", "q_embed_dup_pairs",
+    "q_embed_quantize", "q_hybrid_search", "q_pq_encode", "q_pq_recall",
+    "q_stream_ann_refresh", "q_stream_pq_refresh",
+    # the serve paths (listing-keyed metadata memo), and the rest changed
+    # since r12
+    "q_bm25_served", "q_bm25_fuzzy_served", "q_pq_served",
+    "q_time_travel_evolve", "q_pagerank", "q_stream_stack",
+    "q_crawl_frontier",
 )
 
 
-def _latest_evidence(name: str) -> int:
-    """Most recent round whose CORRECTNESS file verified ``name`` (0 =
-    never driver-checked)."""
-    for rnd, tier in _TIERS:
-        if name in tier:
-            return rnd
-    return 0
-
-
 def _ordered(names: list[str]) -> list[str]:
-    """Walk order for a budget-limited (50 queries/round) driver sweep —
-    VERDICT r8 item 8 (continued each round): round-11-changed names
-    (plus the stale rows-only trio) first — their old evidence describes
-    code that no longer runs — then everything else STALEST driver
-    evidence first (never-checked, then latest=r1, r2, ... r10).
-    Python's stable sort preserves registration order within each
-    tier."""
-    first = [n for n in names if n in _R11_CHANGED]
-    rest = [n for n in names if n not in _R11_CHANGED]
-    rest.sort(key=_latest_evidence)
-    return first + rest
+    """Walk order: :data:`CHANGED_SINCE_DRIVER_CHECK`, then registration
+    order."""
+    first = [n for n in CHANGED_SINCE_DRIVER_CHECK if n in names]
+    return first + [n for n in names if n not in first]
 
 
 def all_queries() -> dict[str, QueryFn]:
@@ -305,18 +81,9 @@ _LOADED = False
 
 
 def _load_all() -> None:
-    """Import every operator module so decorators run.
-
-    Import order IS registration order IS the order a budget-limited checker
-    walks ``queries()``: families with the least accumulated driver-side
-    correctness evidence are imported first so a truncated sweep still covers
-    them (round-1 sweep stopped after analytic/dedup/etl/multimodal and the
-    head of relational — those now go last). The round-3 extension modules
-    (graph, datapipe, ml) import after everything else: their queries are
-    new and unproven, but the ~50 queries queued ahead of them have waited
-    since round 1/2 for driver evidence — a budget-limited sweep reaches
-    those first, and the extensions carry committed full-sweep evidence
-    (evidence/CHECK_r03_*) until a later round's budget reaches them."""
+    """Import every operator module so decorators run. Import order is
+    registration order: the walk order after
+    :data:`CHANGED_SINCE_DRIVER_CHECK`."""
     global _LOADED
     if _LOADED:
         return

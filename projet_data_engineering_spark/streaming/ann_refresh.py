@@ -156,7 +156,7 @@ def q_stream_ann_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_ann_refresh(stream, idx, f"{root}/chk")
         queries = e.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("v"),
+            F.expr(f"{as_double('embedding')} AS v"),
         )
         out = ann_serve(spark, idx, queries, nprobe=2, topk=5)
         rows = out.collect()

@@ -142,7 +142,7 @@ def q_stream_pq_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_stream_pq_refresh(stream, idx, f"{root}/chk")
         queries = e.filter(F.col("vec_id") < PQ_NQ).select(
             F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("v"),
+            F.expr(f"{as_double('embedding')} AS v"),
         )
         out = pq_serve(spark, idx, queries, load_table(spark, sf_dir, "embeddings"))
         rows = out.collect()

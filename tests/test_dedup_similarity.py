@@ -473,7 +473,7 @@ def test_ann_served_matches_inplan_ivf_and_prunes(spark, tmp_path):
     build_ann_index(e, idx)
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
-        as_double(F.col("embedding")).alias("v"),
+        F.expr(f"{as_double('embedding')} AS v"),
     )
     served = ann_serve(spark, idx, queries, nprobe=2, topk=5)
     got = {tuple(r) for r in served.collect()}

@@ -140,9 +140,9 @@ def test_semdedup_drops_a_planted_duplicate(spark):
     )
     # run the same pipeline shape on the augmented frame
     aug = e.unionByName(clone)
-    b = aug.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    assigned = b.crossJoin(F.broadcast(_ivf_cent_artifact(aug))).select(
-        "vec_id", "v", (-_ivf_scored_cents(1)[0]["neg_id"]).alias("cent_id")
+    b = aug.selectExpr("vec_id", f"{as_double('embedding')} AS v")
+    assigned = b.crossJoin(F.broadcast(_ivf_cent_artifact(aug))).selectExpr(
+        "vec_id", "v", f"-{_ivf_scored_cents(1)}[0].neg_id AS cent_id"
     )
     a, c = assigned.alias("a"), assigned.alias("b")
     dups = (
@@ -151,7 +151,7 @@ def test_semdedup_drops_a_planted_duplicate(spark):
             (F.col("a.cent_id") == F.col("b.cent_id"))
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
-        .filter(F.round(cosine(F.col("a.v"), F.col("b.v")), 4) >= dd.SEMDEDUP_TAU)
+        .where(f"round({cosine('a.v', 'b.v')}, 4) >= {dd.SEMDEDUP_TAU!r}D")
         .select(F.col("b.vec_id").alias("vec_id"))
         .distinct()
     )

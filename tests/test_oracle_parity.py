@@ -28,6 +28,19 @@ def test_every_query_has_callable():
     assert set(ORACLES) <= set(QUERIES)
 
 
+def test_changed_queries_lead_the_driver_walk():
+    """Every name on the changed-since-last-check list is registered, the
+    list fits the 50 names the external driver checks, and ``queries()``
+    walks it first."""
+    from projet_data_engineering_spark.registry import (
+        CHANGED_SINCE_DRIVER_CHECK as changed,
+    )
+
+    assert set(changed) <= set(QUERIES)
+    assert len(set(changed)) == len(changed) <= 50
+    assert list(QUERIES)[: len(changed)] == list(changed)
+
+
 # The heavyweight composed/streaming parametrizations run in the FULL
 # lane only (pytest.ini fast-lane contract, r12): each is >12 s of
 # end-to-end stream/index machinery, and the driver's own oracle gate

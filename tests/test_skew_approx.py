@@ -84,8 +84,8 @@ def test_ivf_neighbors_subset_of_bruteforce_universe(spark):
     approximate — but must never fabricate scores)."""
     from projet_data_engineering_spark.operators.similarity import as_double, cosine
 
-    e = load_table(spark, SF_DIR, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("v")
+    e = load_table(spark, SF_DIR, "embeddings").selectExpr(
+        "vec_id", f"{as_double('embedding')} AS v"
     )
     a, b = e.alias("a"), e.alias("b")
     all_pairs = {
@@ -94,7 +94,7 @@ def test_ivf_neighbors_subset_of_bruteforce_universe(spark):
         .select(
             F.col("a.vec_id").alias("q"),
             F.col("b.vec_id").alias("v"),
-            F.round(cosine(F.col("a.v"), F.col("b.v")), 4).alias("s"),
+            F.expr(f"round({cosine('a.v', 'b.v')}, 4) AS s"),
         )
         .collect()
     }

@@ -60,7 +60,7 @@ def _queries(spark, n_q=3):
         [(i, _vec(i)) for i in range(n_q)], SCHEMA
     ).select(
         F.col("vec_id").alias("query_id"),
-        as_double(F.col("embedding")).alias("v"),
+        F.expr(f"{as_double('embedding')} AS v"),
     )
 
 

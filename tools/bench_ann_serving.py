@@ -45,7 +45,7 @@ def main() -> int:
     n_vecs = e.count()
     queries = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"),
-        as_double(F.col("embedding")).alias("v"),
+        F.expr(f"{as_double('embedding')} AS v"),
     ).localCheckpoint(eager=True)
     path = tempfile.mkdtemp(prefix="ann_bench_idx_")
     try:

@@ -75,17 +75,17 @@ def main() -> int:
         drop = labels.filter(F.col("node") != F.col("root")).select(
             F.col("node").alias("doc_id")
         )
-        toks = F.split(F.lower("text"), " ")
-        n_tokens = F.size(toks)
-        n_stop = stopword_hits(toks, STOPWORDS["en"])
-        quality = F.least(n_tokens / F.lit(50.0), F.lit(1.0)) * (
-            0.5 + F.least(n_stop.cast("double") / n_tokens, F.lit(0.5))
+        n_tokens = "size(split(lower(text), ' '))"
+        n_stop = stopword_hits("split(lower(text), ' ')", STOPWORDS["en"])
+        quality = (
+            f"least({n_tokens} / 50.0D, 1.0D)"
+            f" * (least(CAST({n_stop} AS DOUBLE) / {n_tokens}, 0.5D) + 0.5D)"
         )
         return {
             tuple(r)
             for r in d.join(F.broadcast(drop), "doc_id", "left_anti")
-            .select("lang", n_tokens.alias("n_tokens"), quality.alias("q"))
-            .filter(F.col("q") >= 0.5)
+            .selectExpr("lang", f"{n_tokens} AS n_tokens", f"{quality} AS q")
+            .where("q >= 0.5D")
             .groupBy("lang")
             .agg(
                 F.count("*").alias("n_docs"),

@@ -264,7 +264,7 @@ def main() -> int:
         run(f"{work}/chk_ann1")
         queries = e.filter(F.col("vec_id") < 3).select(
             F.col("vec_id").alias("query_id"),
-            as_double(F.col("embedding")).alias("v"),
+            F.expr(f"{as_double('embedding')} AS v"),
         )
 
         def served(path):

@@ -11,7 +11,11 @@ A query whose wall is ~(n_jobs x per-job floor) is JOB-BOUND — the fix is
 fewer passes/rounds, not faster per-row code. ``codegen_compiles`` and
 ``codegen_ms`` are the classes the counted run generated and compiled and
 the time spent compiling them; a warm run should compile none, since the
-session's class cache holds them (``session.get_spark``).
+session's class cache holds them (``session.get_spark``). ``py4j_calls``
+is the number of py4j commands the driver sent during the counted run:
+building a plan costs one per SQL-text expression but 3-8 per Column-API
+node, so a large count on a cheap query points at driver-side plan
+building.
 
 Usage: python tools/profile_queries.py [sf_dir] q_a q_b ...
 """
@@ -23,6 +27,8 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from py4j.clientserver import ClientServerConnection  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from perfbench.census import Census  # noqa: E402
@@ -47,6 +53,20 @@ def codegen(spark) -> tuple[int, float]:
     )
 
 
+def count_py4j() -> list[int]:
+    """Count every py4j command the driver sends from now on, into the
+    returned one-element list."""
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    return sent
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:]
@@ -58,13 +78,16 @@ def main() -> int:
         "noop"
     ).mode("overwrite").save()
     census = Census(spark)
+    sent = count_py4j()
     out = {}
     for name in names:
         fn = qs[name]
         run(spark, fn, sf_dir)  # warm
         compiles0, ms0 = codegen(spark)
         with census.span(name):
+            sent0 = sent[0]
             run(spark, fn, sf_dir)
+            py4j_calls = sent[0] - sent0
         compiles1, ms1 = codegen(spark)
         c = census.calls[-1]
         out[name] = {
@@ -77,6 +100,7 @@ def main() -> int:
             "driver_s": round(c.driver_s, 3),
             "codegen_compiles": compiles1 - compiles0,
             "codegen_ms": round(ms1 - ms0, 1),
+            "py4j_calls": py4j_calls,
         }
         print(name, json.dumps(out[name]))
         spark.catalog.clearCache()
