@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import (
+    atomic_overwrite,
     listing_memo,
     literal_frame,
     load_table,
@@ -629,32 +630,46 @@ def q_posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # On-disk index layout version, stamped into the stats manifest (ADVICE
 # r9). v2 = r9's layout: vocab carries term_len (length-banded fuzzy
-# serve), no SymSpell fuzzy artifact. A pre-r9 index (v1, no stamp) merged
-# or fuzzy-served under v2 code would null-fill term_len and silently
-# drop old terms from the banded BETWEEN filter — reject it instead.
-BM25_LAYOUT_VERSION = 2
+# serve), no SymSpell fuzzy artifact. v3 = the build also stores
+# docstats, the per-document lengths the stats fold. A v1 index merged or
+# fuzzy-served under current code would null-fill term_len and silently
+# drop old terms from the banded BETWEEN filter; a v2 index has no
+# docstats, so a refresh would fold stats over its own batch alone —
+# reject both instead.
+BM25_LAYOUT_VERSION = 3
 
 
-def _check_index_layout(stats, index_path: str, ctx: str) -> None:
-    """Raise unless the stats manifest carries the current layout stamp.
-    ``stats`` is the manifest as a DataFrame, or its row as a dict
-    (``_index_stats``).
+def _check_index_layout(stats: dict | None, index_path: str, ctx: str) -> None:
+    """Raise unless the stats manifest (its row as ``_index_stats``
+    returns it) carries the current layout stamp.
 
-    An EMPTY stats manifest (a crash between the index dirs landing and the
-    stats rows committing) must surface the rebuild diagnostic below, not a
-    raw TypeError from ``first()`` returning None (r11 advice)."""
-    if isinstance(stats, DataFrame):
-        row = stats.first()
-        stats = None if row is None else row.asDict()
+    An EMPTY stats manifest (``None``: a crash between the index dirs
+    landing and the stats rows committing) must surface the rebuild
+    diagnostic below, not a raw TypeError (r11 advice)."""
     v = (stats or {}).get("layout_version")
     v = 1 if v is None else int(v)
     if v != BM25_LAYOUT_VERSION:
         raise ValueError(
             f"{ctx}: index at {index_path} has layout_version={v}, this "
             f"build reads/writes layout_version={BM25_LAYOUT_VERSION} — "
-            f"rebuild it with build_search_index (old vocab rows lack "
-            f"term_len and would silently vanish from fuzzy serving)"
+            f"rebuild it with build_search_index (a v1 vocab lacks "
+            f"term_len, a v2 index lacks docstats)"
         )
+
+
+def _stored_buckets(
+    stats: dict, n_buckets: int | None, index_path: str, ctx: str
+) -> int:
+    """The manifest's bucket count. A caller's ``n_buckets`` is only an
+    assertion: a mismatched count would prune (serve) or write (refresh)
+    postings in other ``term_bucket`` directories than the stored ones."""
+    stored = int(stats["n_buckets"])
+    if n_buckets is not None and n_buckets != stored:
+        raise ValueError(
+            f"{ctx}: caller asserted n_buckets={n_buckets} but the index "
+            f"at {index_path} was built with n_buckets={stored}"
+        )
+    return stored
 
 
 def _index_stats(spark: SparkSession, index_path: str) -> dict | None:
@@ -668,6 +683,57 @@ def _index_stats(spark: SparkSession, index_path: str) -> dict | None:
         return None if row is None else row.asDict()
 
     return listing_memo(spark, path, "row", read)
+
+
+def _index_rows(
+    docs: DataFrame, id_col: str, text_col: str, n_buckets: int
+) -> tuple[DataFrame, DataFrame]:
+    """The index rows of ``docs`` from one tokenize: ``(id, dl)`` docstats,
+    one per document (an all-punctuation document has ``dl`` 0 and no
+    posting), and ``(term, id, dl, tf, term_bucket, _pk)`` postings."""
+    toks = docs.select(
+        F.col(id_col), tokenize(F.col(text_col)).alias("tokens")
+    ).withColumn("dl", F.size("tokens"))
+    postings = (
+        toks.select(id_col, "dl", F.explode("tokens").alias("term"))
+        .groupBy("term", id_col, "dl")
+        .agg(F.count("*").alias("tf"))
+        .withColumn("term_bucket", F.crc32(F.col("term")) % n_buckets)
+        .withColumn(
+            "_pk",
+            F.concat_ws("|", F.col("term"), F.col(id_col).cast("string")),
+        )
+    )
+    return toks.select(id_col, "dl"), postings
+
+
+def _vocab(postings: DataFrame) -> DataFrame:
+    """The distinct terms of ``postings``: ``(term, term_bucket, term_len,
+    _pk)``, keyed on the term itself."""
+    return (
+        postings.select("term", "term_bucket")
+        .distinct()
+        .withColumn("term_len", F.length("term"))
+        .withColumn("_pk", F.col("term"))
+    )
+
+
+def _write_stats(spark: SparkSession, index_path: str, n_buckets: int) -> None:
+    """Fold the STORED ``{index_path}/docstats`` into the 1-row stats
+    manifest: n_docs and avg_dl for BM25, plus ``n_buckets`` and the
+    layout stamp. Derived from idempotent state, so a replayed refresh
+    never double-counts a document. Every writer calls this LAST, through
+    ``io.atomic_overwrite``: every serve path reads this row before any
+    other artifact, so its presence is the index's commit marker."""
+    atomic_overwrite(
+        spark.read.parquet(f"{index_path}/docstats").agg(
+            F.count("*").alias("n_docs"),
+            F.avg("dl").alias("avg_dl"),
+            F.lit(n_buckets).alias("n_buckets"),
+            F.lit(BM25_LAYOUT_VERSION).alias("layout_version"),
+        ),
+        f"{index_path}/stats",
+    )
 
 
 def _bm25_score(
@@ -710,8 +776,11 @@ def build_search_index(
 ) -> None:
     """T7 — write the full BM25 serving layout to ``path``: the ES
     re-index analogue (reference ``scraper/main.py:271-277``) made concrete.
+    It is the engine's only BM25 layout writer: a streaming refresh onto an
+    index with no stats (``streaming.windows.index_refresh_batch``) calls
+    it with its batch.
 
-    Three artifacts:
+    Four artifacts:
 
     - ``{path}/postings`` — (term, doc_id, dl, tf, _pk), PARTITIONED by
       ``term_bucket = crc32(term) % n_buckets`` so a query's scan prunes to
@@ -728,37 +797,29 @@ def build_search_index(
       it; FUZZY serving (``bm25_serve_fuzzy``) expands query terms against
       it with a length-banded levenshtein join, and the materialized
       ``term_len`` sort means the banded scan prunes to the query lengths'
-      row groups via a pushed range filter. (r8 carried a fourth artifact
-      here — a SymSpell delete-key index at 38× |V| rows; r9 retired it on
+      row groups via a pushed range filter. (r8 carried a SymSpell
+      delete-key index here at 38× |V| rows; r9 retired it on
       measurement: the probe beat this banded scan only 1.13× at a 1M-term
       dictionary and LOST 0.66× at 4M/2.26M distinct terms, while tripling
       build time — ``evidence/bench_fuzzy_vocab_r08.json`` / ``_r09.json``.)
+    - ``{path}/docstats`` — (doc_id, dl), one row per document, documents
+      with no posting (all punctuation, ``dl`` 0) included: the state a
+      refresh merges its batch's lengths into.
     - ``{path}/stats`` — the 1-row corpus stats (n_docs, avg_dl) BM25 needs,
-      plus the layout manifest (``n_buckets``): serving derives its bucket
-      pruning from the stored value, so a build/serve bucket-count mismatch
-      (which would silently prune away valid postings) cannot happen.
-      Written LAST — every serve path reads its row (memoized on the
-      stats directory's listing) before any other artifact, so its
-      presence is the build's commit marker: a crash between artifact
-      writes can never be observed as a half-built but servable index.
+      folded from the stored docstats (``_write_stats``), plus the layout
+      manifest (``n_buckets``): serving derives its bucket pruning from the
+      stored value, so a build/serve bucket-count mismatch (which would
+      silently prune away valid postings) cannot happen. Written LAST —
+      every serve path reads its row (memoized on the stats directory's
+      listing) before any other artifact, so its presence is the build's
+      commit marker: a crash between artifact writes can never be observed
+      as a half-built but servable index.
 
     At 100 TB this build is the once-per-reindex cost that every subsequent
     query amortizes (vocab derives from the just-written postings via a
     column-pruned read-back — no extra corpus pass)."""
-    toks = docs.select(
-        F.col(id_col), tokenize(F.col(text_col)).alias("tokens")
-    ).withColumn("dl", F.size("tokens"))
     spark = docs.sparkSession
-    postings = (
-        toks.select(id_col, "dl", F.explode("tokens").alias("term"))
-        .groupBy("term", id_col, "dl")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("term_bucket", F.crc32(F.col("term")) % n_buckets)
-        .withColumn(
-            "_pk",
-            F.concat_ws("|", F.col("term"), F.col(id_col).cast("string")),
-        )
-    )
+    docstats, postings = _index_rows(docs, id_col, text_col, n_buckets)
     # repartition BY the partition column before the partitioned write
     # (r11, guide §6 — the discipline the vocab write below already had):
     # without it every post-groupBy task writes a file into EVERY bucket
@@ -773,11 +834,7 @@ def build_search_index(
         .parquet(f"{path}/postings")
     )
     (
-        spark.read.parquet(f"{path}/postings")
-        .select("term", "term_bucket")
-        .distinct()
-        .withColumn("term_len", F.length("term"))
-        .withColumn("_pk", F.col("term"))
+        _vocab(spark.read.parquet(f"{path}/postings"))
         # each bucket file SORTED by term_len in small row groups: the
         # fuzzy serve's pushed [lo, hi] length-band range filter then
         # prunes the dictionary scan to the query lengths' row groups —
@@ -789,18 +846,13 @@ def build_search_index(
         .mode("overwrite")
         .parquet(f"{path}/vocab")
     )
-    # Stats stay a second tokenize pass DELIBERATELY (r12, measured): a
-    # tokenizer-free variant (column-pruned count + dl fold from the
-    # postings read-back) was tried and measured WORSE — the (doc_id, dl)
-    # distinct is a full |postings| shuffle plus three extra jobs, vs one
-    # map-side-combining pass here (build census 10 jobs / 219 tasks vs
-    # 14 / 301 with the variant). Kept: simplest one-pass aggregate.
-    toks.agg(
-        F.count("*").alias("n_docs"),
-        F.avg("dl").alias("avg_dl"),
-        F.lit(n_buckets).alias("n_buckets"),
-        F.lit(BM25_LAYOUT_VERSION).alias("layout_version"),
-    ).write.mode("overwrite").parquet(f"{path}/stats")
+    # The second tokenize pass writes docstats, and stats fold the stored
+    # docstats: one map-only pass, where deriving (doc_id, dl) from the
+    # postings read-back is a full |postings| distinct shuffle (r12
+    # measured that variant at 14 jobs / 301 tasks against 10 / 219) and
+    # misses every document that has no posting.
+    docstats.write.mode("overwrite").parquet(f"{path}/docstats")
+    _write_stats(spark, path, n_buckets)
 
 
 def bm25_serve(
@@ -835,13 +887,7 @@ def bm25_serve(
     import zlib
 
     stats = _index_stats(spark, index_path)
-    stored = stats["n_buckets"]
-    if n_buckets is not None and n_buckets != stored:
-        raise ValueError(
-            f"bm25_serve: caller asserted n_buckets={n_buckets} but the index "
-            f"at {index_path} was built with n_buckets={stored}"
-        )
-    n_buckets = int(stored)
+    n_buckets = _stored_buckets(stats, n_buckets, index_path, "bm25_serve")
     terms = []
     for t in (t.lower() for t in query_terms):
         if t not in terms:
@@ -911,11 +957,13 @@ def bm25_serve_fuzzy(
     the listing-keyed memo, as in ``bm25_serve``.
 
     Freshness contract: ``build_search_index`` writes stats (the serve
-    entry point) last, and ``run_stream_index_refresh`` merges vocab
-    BEFORE postings, so at every observable point the dictionary covers
-    ⊇ the stored postings' terms — a fuzzy query can never miss a served
-    posting; dictionary terms whose postings haven't landed yet simply
-    match nothing."""
+    entry point) last, so until they land no index is servable, a
+    streaming refresh's bootstrap batch included (that refresh is the
+    build); ``run_stream_index_refresh`` merges vocab BEFORE postings, so
+    at every observable point the dictionary covers ⊇ the stored
+    postings' terms — a fuzzy query can never miss a served posting;
+    dictionary terms whose postings haven't landed yet simply match
+    nothing."""
     stats = _index_stats(spark, index_path)
     _check_index_layout(stats, index_path, "bm25_serve_fuzzy")
     qt = []

@@ -20,7 +20,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from projet_data_engineering_spark.io import load_table, merge_upsert
+from projet_data_engineering_spark.io import (
+    atomic_overwrite,
+    load_table,
+    merge_upsert,
+    merge_upsert_partitioned,
+    path_exists,
+    recover_atomic_overwrite,
+)
+from projet_data_engineering_spark.operators.search import (
+    _check_index_layout,
+    _index_rows,
+    _index_stats,
+    _stored_buckets,
+    _vocab,
+    _write_stats,
+    build_search_index,
+)
 from projet_data_engineering_spark.registry import query
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
@@ -209,12 +225,6 @@ def run_stream_upsert(
     query so the checkpoint replays the batch. The rewrite itself goes
     through ``io.atomic_overwrite`` (versioned dir + two renames), so a
     crash mid-swap is recoverable to exactly one complete table version."""
-    from projet_data_engineering_spark.io import (
-        atomic_overwrite,
-        path_exists,
-        recover_atomic_overwrite,
-    )
-
     def upsert(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         recover_atomic_overwrite(spark, target_path)
@@ -259,11 +269,6 @@ def run_stream_upsert_partitioned(
     existence probe (never try/except-on-read); merge errors propagate so
     the checkpoint replays the batch; crash-atomicity comes from
     ``merge_upsert_partitioned``'s staged-manifest commit."""
-    from projet_data_engineering_spark.io import (
-        merge_upsert_partitioned,
-        path_exists,
-    )
-
     def upsert(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
@@ -472,47 +477,22 @@ def index_refresh_batch(
     tests and the composed serving stack (``streaming.stack``) can drive
     it) — see the runner's docstring for the merge-order/failure
     contract."""
-    from projet_data_engineering_spark.io import (
-        atomic_overwrite,
-        merge_upsert_partitioned,
-        path_exists,
-        recover_atomic_overwrite,
-    )
-    from projet_data_engineering_spark.operators.search import (
-        BM25_LAYOUT_VERSION,
-        _check_index_layout,
-        tokenize,
-    )
-
-    postings_path = f"{index_path}/postings"
-    vocab_path = f"{index_path}/vocab"
-    docstats_path = f"{index_path}/docstats"
-    stats_path = f"{index_path}/stats"
     if batch.isEmpty():
         return
     spark = batch.sparkSession
+    docstats_path = f"{index_path}/docstats"
+    stats_path = f"{index_path}/stats"
     recover_atomic_overwrite(spark, docstats_path)
     recover_atomic_overwrite(spark, stats_path)
+    if not path_exists(spark, stats_path):
+        build_search_index(batch, id_col, text_col, index_path, n_buckets)
+        return
     # Refuse to merge onto an index written by an older on-disk layout
-    # (ADVICE r9): a pre-term_len vocab would null-fill and silently drop
-    # old terms from the fuzzy serve's length-band filter.
-    if path_exists(spark, stats_path):
-        _check_index_layout(
-            spark.read.parquet(stats_path), index_path, "index_refresh_batch"
-        )
-    toks = batch.select(
-        F.col(id_col), tokenize(F.col(text_col)).alias("tokens")
-    ).withColumn("dl", F.size("tokens"))
-    postings = (
-        toks.select(id_col, "dl", F.explode("tokens").alias("term"))
-        .groupBy("term", id_col, "dl")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("term_bucket", F.crc32(F.col("term")) % n_buckets)
-        .withColumn(
-            "_pk",
-            F.concat_ws("|", F.col("term"), F.col(id_col).cast("string")),
-        )
-    )
+    # (ADVICE r9) or laid out in other term buckets than this batch's.
+    stats = _index_stats(spark, index_path)
+    _check_index_layout(stats, index_path, "index_refresh_batch")
+    _stored_buckets(stats, n_buckets, index_path, "index_refresh_batch")
+    docstats, postings = _index_rows(batch, id_col, text_col, n_buckets)
     # Vocab BEFORE postings: at every crash point the stored dictionary
     # is a superset of the stored postings' terms, so bm25_serve_fuzzy
     # can never miss a served posting (a dictionary term whose postings
@@ -523,58 +503,17 @@ def index_refresh_batch(
     # loosen as batches accrue — a periodic build_search_index rebuild
     # restores them, the standard compaction story (the serve stays
     # CORRECT either way: the band filter is a plain pushed predicate).
-    vocab = (
-        postings.select("term", "term_bucket")
-        .distinct()
-        .withColumn("term_len", F.length("term"))
-        .withColumn("_pk", F.col("term"))
+    merge_upsert_partitioned(
+        spark, f"{index_path}/vocab", _vocab(postings), "_pk", "term_bucket"
     )
-    if path_exists(spark, vocab_path):
-        merge_upsert_partitioned(
-            spark, vocab_path, vocab, "_pk", "term_bucket"
-        )
-    else:
-        vocab.repartition(F.col("term_bucket")).sortWithinPartitions(
-            "term_len", "term"
-        ).write.option(
-            "parquet.block.size", 4 * 1024 * 1024
-        ).partitionBy("term_bucket").mode("overwrite").parquet(
-            vocab_path
-        )
-    had_postings = path_exists(spark, postings_path)
-    if had_postings:
-        merge_upsert_partitioned(
-            spark, postings_path, postings, "_pk", "term_bucket"
-        )
-    else:
-        postings.write.partitionBy("term_bucket").mode("overwrite").parquet(
-            postings_path
-        )
-    docstats = toks.select(id_col, "dl")
-    if path_exists(spark, docstats_path):
-        old = spark.read.parquet(docstats_path)
-        merged = merge_upsert(old, docstats, id_col)
-    elif had_postings:
-        # A batch-built index stores doc lengths only in its postings rows:
-        # seed docstats from them (this batch's rows have landed too), so
-        # the stats keep the batch's documents.
-        old = spark.read.parquet(postings_path).select(id_col, "dl").distinct()
-        merged = merge_upsert(old, docstats, id_col)
-    else:
-        merged = docstats
-    atomic_overwrite(merged, docstats_path)
-    # Derived 1-row stats (+ the n_buckets layout manifest bm25_serve
-    # reads), recomputed from the idempotent docstats state — can never
-    # double-count a replayed batch.
+    merge_upsert_partitioned(
+        spark, f"{index_path}/postings", postings, "_pk", "term_bucket"
+    )
     atomic_overwrite(
-        spark.read.parquet(docstats_path).agg(
-            F.count("*").alias("n_docs"),
-            F.avg("dl").alias("avg_dl"),
-            F.lit(n_buckets).alias("n_buckets"),
-            F.lit(BM25_LAYOUT_VERSION).alias("layout_version"),
-        ),
-        stats_path,
+        merge_upsert(spark.read.parquet(docstats_path), docstats, id_col),
+        docstats_path,
     )
+    _write_stats(spark, index_path, n_buckets)
 
 
 def run_stream_index_refresh(
@@ -609,10 +548,15 @@ def run_stream_index_refresh(
        ``{index_path}/docstats`` keyed on the doc id (idempotent for the
        same reason), then rewrites the 1-row ``{index_path}/stats`` from
        docstats — stats are derived state recomputed from idempotent state,
-       so they can never double-count a replayed batch. ``build_search_index``
-       writes no docstats, so the first refresh seeds them from the stored
-       postings' distinct ``(doc_id, dl)``: a refresh onto a batch-built
-       index keeps the batch's documents in ``n_docs`` and ``avg_dl``.
+       so they can never double-count a replayed batch.
+
+    A batch that finds no ``{index_path}/stats`` is the index's first: it
+    runs ``search.build_search_index`` over the batch instead, the one
+    writer of the BM25 layout, whose docstats every later batch merges
+    into. A replay of a bootstrap that crashed before its stats landed
+    rebuilds the same index. A merge batch's ``n_buckets`` must equal the
+    stored manifest's, or it raises before writing anything: postings in
+    other bucket directories would be invisible to the pruned serve.
 
     ``search.bm25_serve`` reads the refreshed index unchanged (including the
     persisted ``n_buckets`` layout manifest in the stats row). Parity with a

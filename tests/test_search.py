@@ -323,6 +323,8 @@ def test_index_layout_version_guard(spark, tmp_path):
     fuzzy serving and the streaming refresher must REJECT an index
     written by the old layout instead of silently null-filling term_len
     (which would drop old terms from the banded BETWEEN filter)."""
+    import shutil
+
     import pytest
     from pyspark.sql import functions as F
 
@@ -366,19 +368,31 @@ def test_index_layout_version_guard(spark, tmp_path):
             idx, n_buckets=4,
         )
 
+    # a v2 index: stamped 2, and its build wrote no docstats
+    shutil.rmtree(f"{idx}/docstats")
+    spark.createDataFrame(
+        legacy, schema=stats.drop("layout_version").schema
+    ).withColumn("layout_version", F.lit(2)).write.mode("overwrite").parquet(
+        f"{idx}/stats"
+    )
+    with pytest.raises(ValueError, match="layout_version=2"):
+        bm25_serve_fuzzy(spark, idx, ["spark"])
+    with pytest.raises(ValueError, match="layout_version=2"):
+        index_refresh_batch(
+            spark.createDataFrame([Row(doc_id=3, text="more spark")]),
+            idx, n_buckets=4,
+        )
+
 
 def test_check_index_layout_empty_stats_manifest(spark):
     """r11 advice: an EMPTY stats manifest (crash between index dirs and
-    stats rows landing) must surface the rebuild ValueError, not a raw
-    TypeError from first() returning None."""
+    stats rows landing), which ``_index_stats`` reads as None, must
+    surface the rebuild ValueError, not a raw TypeError."""
     import pytest
 
     from projet_data_engineering_spark.operators.search import (
         _check_index_layout,
     )
 
-    empty = spark.createDataFrame(
-        [], "layout_version INT, avg_len DOUBLE, n_docs BIGINT"
-    )
     with pytest.raises(ValueError, match="layout_version"):
-        _check_index_layout(empty, "/fake/idx", "test")
+        _check_index_layout(None, "/fake/idx", "test")

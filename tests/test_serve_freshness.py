@@ -116,6 +116,22 @@ def test_bm25_rebuild_with_other_bucket_count_is_served(spark, tmp_path):
         bm25_serve(spark, idx, ["spark"], n_buckets=16)
 
 
+def test_bm25_refresh_refuses_another_bucket_count(spark, tmp_path):
+    """A refresh with another n_buckets than the stored manifest's raises
+    before writing anything: its postings would land in other bucket
+    directories than the serve prunes to. The index keeps serving the
+    scan path's scores."""
+    idx = str(tmp_path / "idx")
+    docs = _docs(spark, ["spark streams", "cake", "spark cake", "data spark"])
+    build_search_index(docs, "doc_id", "text", idx, n_buckets=N_BUCKETS)
+    with pytest.raises(ValueError, match=f"n_buckets={N_BUCKETS}"):
+        index_refresh_batch(_docs(spark, ["spark cake"], start=4), idx)
+    terms = ["spark", "cake"]
+    want = _scores(bm25_scores(docs, "doc_id", "text", terms))
+    assert len(want) == 4
+    assert _scores(bm25_serve(spark, idx, terms)) == want
+
+
 VSCHEMA = StructType(
     [
         StructField("vec_id", LongType()),

@@ -487,11 +487,12 @@ def test_stream_upsert_interleaves_with_compaction(spark, tmp_path):
 
 def test_stream_index_refresh_bootstraps_from_batch_build(spark, tmp_path):
     """Build the index in batch, then STREAM additional documents into it —
-    the workflow the three-artifact layout implies. Works because the batch
+    the workflow the four-artifact layout implies. Works because the batch
     build writes the same _pk merge key (and vocab artifact) the streaming
     refresher upserts on (the dedup-bands lesson, ADVICE r6, applied to
-    BM25). Served scores — exact AND fuzzy — must equal a corpus scan over
-    the union of both document sets."""
+    BM25), and the docstats the refresh merges into. Served scores — exact
+    AND fuzzy — must equal a corpus scan over the union of both document
+    sets."""
     from projet_data_engineering_spark.operators.search import (
         bm25_scores,
         bm25_scores_fuzzy,
@@ -508,6 +509,7 @@ def test_stream_index_refresh_bootstraps_from_batch_build(spark, tmp_path):
             (0, "spark joins streams with spark sql"),
             (1, "vanilla cake recipe"),
             (2, "stream processing with spark"),
+            (5, "!!!"),  # no posting: only docstats keep it in n_docs
         ],
         ["doc_id", "text"],
     )
@@ -533,8 +535,8 @@ def test_stream_index_refresh_bootstraps_from_batch_build(spark, tmp_path):
     )
 
     everything = initial.unionByName(late)
-    # the stats row covers the batch-built documents too: the first refresh
-    # seeds docstats from the stored postings
+    # the stats row covers the batch-built documents too, the one with no
+    # posting included: the batch build stores docstats
     scratch = str(tmp_path / "scratch")
     build_search_index(everything, "doc_id", "text", scratch, n_buckets=16)
     assert (
