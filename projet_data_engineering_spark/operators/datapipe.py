@@ -1424,17 +1424,19 @@ def pack_windows(
     deal every sharded pretraining layout accepts."""
     # integer division, not float-divide-then-cast: stays exact over the
     # full int64 id range (float division loses precision past 2^53)
-    laid = (
-        laid.selectExpr(
-            "stream", "doc", f"doc div {shard_size} AS shard", "ntok"
-        )
-        .selectExpr(
-            "*",
-            "coalesce(sum(ntok) OVER (PARTITION BY stream, shard ORDER BY doc"
-            " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
-            " AS cum_before",
-        )
-        .selectExpr("*", f"cum_before div {budget} AS seq_id")
+    # ``shard`` is projected below the window (a lateral alias cannot be a
+    # window key), so the window's exchange on (stream, shard) also serves
+    # the aggregate
+    laid = laid.selectExpr(
+        "stream", "doc", f"doc div {shard_size} AS shard", "ntok"
+    ).selectExpr(
+        "stream",
+        "doc",
+        "shard",
+        "ntok",
+        "coalesce(sum(ntok) OVER (PARTITION BY stream, shard ORDER BY doc"
+        " ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+        f" div {budget} AS seq_id",
     )
     return laid.groupBy("stream", "shard", "seq_id").agg(
         F.expr("count(*) AS n_docs"),

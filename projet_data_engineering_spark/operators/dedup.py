@@ -20,7 +20,7 @@ DuckDB), so every operator here is oracle-checkable bit-for-bit.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import (
@@ -38,9 +38,11 @@ BAND_SIZE = 2  # 8 hashes / 2 per band = 4 bands
 
 
 def _shingles(tokens: str) -> str:
-    """Distinct word 3-grams of the SQL array ``tokens``, as SQL text.
-    element_at is 1-based; caller guarantees size(tokens) >= 3 so indices
-    stay in range under ANSI mode."""
+    """Distinct word 3-grams of the token-array COLUMN ``tokens``, as SQL
+    text. The lambda reads the column, so the array it indexes is the one
+    projected below it, never a tokenizer re-run per element (SCALING.md
+    "Building expressions"). element_at is 1-based; caller guarantees
+    size(tokens) >= 3 so indices stay in range under ANSI mode."""
     return (
         f"array_distinct(transform(sequence(1, size({tokens}) - 2), "
         f"i -> concat_ws(' ', element_at({tokens}, i), "
@@ -55,24 +57,31 @@ def minhash_signatures(docs: DataFrame, id_col: str, text_col: str) -> DataFrame
     slices; minhash k = lexicographic min of slice k over the shingle set.
     min over a uniform hash is a valid Jaccard-preserving minhash, and hex
     strings compare identically in Spark and DuckDB. Narrow map-only stage;
-    hashing cost is 2 md5 per shingle instead of 8. Every expression is one
-    SQL string, built JVM-side (SCALING.md "Building expressions").
+    hashing cost is 2 md5 per shingle instead of 8. The token array is one
+    projected column that the shingle lambda reads (lateral aliases in one
+    projection), so each document is split and lower-cased once for its
+    shingles, plus once in the length filter, which Spark pushes below it.
     """
-    toks = f"split(lower(`{text_col}`), ' ')"
     hashed = [
         f"transform(sh, s -> md5(concat('{seed}|', s))) AS m{seed}"
         for seed in range((N_HASHES + 3) // 4)
     ]
+    hs = [f"h{k}" for k in range(N_HASHES)]
     mins = [
         f"array_min(transform(m{k // 4}, "
-        f"m -> substring(m, {(k % 4) * 8 + 1}, 8))) AS h{k}"
-        for k in range(N_HASHES)
+        f"m -> substring(m, {(k % 4) * 8 + 1}, 8))) AS {h}"
+        for k, h in enumerate(hs)
     ]
     return (
-        docs.where(f"size({toks}) >= 3")
-        .selectExpr(f"`{id_col}`", f"{_shingles(toks)} AS sh")
-        .selectExpr(f"`{id_col}`", "sh", *hashed)
-        .selectExpr(f"`{id_col}`", *mins)
+        docs.where(f"size(split(lower(`{text_col}`), ' ')) >= 3")
+        .selectExpr(
+            f"`{id_col}`",
+            f"split(lower(`{text_col}`), ' ') AS toks",
+            f"{_shingles('toks')} AS sh",
+            *hashed,
+            *mins,
+        )
+        .selectExpr(f"`{id_col}`", *hs)
     )
 
 
@@ -115,25 +124,26 @@ def candidate_pairs_from_bands(
     table has no input files to size, and the only hint-free caller is
     the micro-batch path, where the sides are batch-sized and the
     planner's broadcast choice is the measured-fast one."""
-    a = bands.alias("a")
-    b = bands.alias("b")
     # size-gated merge hint: both sides are the corpus-derived band
     # table — never broadcastable at scale (AQE's compressed-bytes
     # estimate sits under the 64 MB threshold at sf10 while the
     # in-heap hash relation does not), but pinning sort-merge at
     # small corpus sizes cost 1.7x the anchor (r8 verdict), so the
     # hint attaches only past the source-bytes gate (plans/hints.py)
-    left = a if size_from is None else merge_if_large(a, size_from=size_from)
+    left = bands if size_from is None else merge_if_large(
+        bands, size_from=size_from
+    )
+    right = bands.selectExpr(
+        f"`{id_col}` AS doc2", "band_idx AS b_idx", "band_val AS b_val"
+    )
     return (
         left.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            right,
+            F.expr(
+                f"band_idx = b_idx AND band_val = b_val AND `{id_col}` < doc2"
+            ),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("doc1"), F.col(f"b.{id_col}").alias("doc2")
-        )
+        .selectExpr(f"`{id_col}` AS doc1", "doc2")
         .distinct()
     )
 
@@ -440,26 +450,31 @@ def _stars(
     edges: DataFrame, g: GraphLoop | None = None
 ) -> tuple[DataFrame, bool]:
     """(node, root, star) for every node of the canonical (hi, lo) edge
-    set, lazily checkpointed, and whether the whole set is one of depth-1
-    stars. ``root`` is the node's smallest ``lo`` (itself when it is no
-    ``hi``); ``star`` says it is no ``hi`` (a centre) or its one edge makes
-    it a leaf. One groupBy over both endpoints of every edge (pinned by
-    ``g`` on a small graph), then a 1-row check, the action that stores
-    this checkpoint and a lazy ``edges`` checkpoint together: no edge set
-    costs a job of its own to store. The empty graph is the zero-edge
-    star. A centre's ``up`` is ``nullif(lo, lo)``: a NULL of the node
-    column's type, whatever that type is."""
+    set, checkpointed, and whether the whole set is one of depth-1 stars.
+    ``root`` is the node's smallest ``lo`` (itself when it is no ``hi``);
+    ``star`` says it is no ``hi`` (a centre) or its one edge makes it a
+    leaf. One groupBy over both endpoints of every edge (pinned by ``g`` on
+    a small graph), stored by an eager checkpoint whose job also stores the
+    lazy ``edges`` checkpoint and observes ``bool_and(star)`` as the rows
+    pass: no edge set costs a job of its own to store, and the check reads
+    no stored row again. The empty graph is the zero-edge star. A centre's
+    ``up`` is ``nullif(lo, lo)``: a NULL of the node column's type,
+    whatever that type is."""
     ends = edges.selectExpr(
         "inline(array(struct(hi AS node, lo AS up), "
         "struct(lo AS node, nullif(lo, lo) AS up)))"
     )
     grouped = g.group(ends, "node") if g else ends.groupBy("node")
-    stars = grouped.agg(
-        F.expr("coalesce(min(up), node) AS root"),
-        F.expr("count(up) = 0 OR count(*) = 1 AS star"),
-    ).localCheckpoint(eager=False)
-    done = stars.selectExpr("coalesce(bool_and(star), true)").first()[0]
-    return stars, done
+    check = Observation()
+    stars = (
+        grouped.agg(
+            F.expr("coalesce(min(up), node) AS root"),
+            F.expr("count(up) = 0 OR count(*) = 1 AS star"),
+        )
+        .observe(check, F.expr("coalesce(bool_and(star), true) AS done"))
+        .localCheckpoint(eager=True)
+    )
+    return stars, check.get["done"]
 
 
 def connected_components_lss(
@@ -497,9 +512,11 @@ def connected_components_lss(
 
     Small graphs run the rounds with AQE off: see ``session.graph_loop``."""
     edges = (
-        pairs.selectExpr(f"`{left}` AS a", f"`{right}` AS b")
-        .where("a != b")
-        .selectExpr("greatest(a, b) AS hi", "least(a, b) AS lo")
+        pairs.selectExpr(
+            f"greatest(`{left}`, `{right}`) AS hi",
+            f"least(`{left}`, `{right}`) AS lo",
+        )
+        .where("hi != lo")
         .distinct()
         .localCheckpoint(eager=False)
     )

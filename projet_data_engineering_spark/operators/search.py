@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from projet_data_engineering_spark.io import (
     atomic_overwrite,
@@ -718,15 +719,19 @@ def _vocab(postings: DataFrame) -> DataFrame:
     )
 
 
-def _write_stats(spark: SparkSession, index_path: str, n_buckets: int) -> None:
+def _write_stats(
+    spark: SparkSession, index_path: str, n_buckets: int, docstats: StructType
+) -> None:
     """Fold the STORED ``{index_path}/docstats`` into the 1-row stats
     manifest: n_docs and avg_dl for BM25, plus ``n_buckets`` and the
     layout stamp. Derived from idempotent state, so a replayed refresh
     never double-counts a document. Every writer calls this LAST, through
     ``io.atomic_overwrite``: every serve path reads this row before any
-    other artifact, so its presence is the index's commit marker."""
+    other artifact, so its presence is the index's commit marker.
+    ``docstats`` is the schema of the frame the caller just stored there:
+    the read takes it instead of inferring it with a job of its own."""
     atomic_overwrite(
-        spark.read.parquet(f"{index_path}/docstats").agg(
+        spark.read.schema(docstats).parquet(f"{index_path}/docstats").agg(
             F.count("*").alias("n_docs"),
             F.avg("dl").alias("avg_dl"),
             F.lit(n_buckets).alias("n_buckets"),
@@ -834,7 +839,8 @@ def build_search_index(
         .parquet(f"{path}/postings")
     )
     (
-        _vocab(spark.read.parquet(f"{path}/postings"))
+        # read back with the written frame's schema: no inference job
+        _vocab(spark.read.schema(postings.schema).parquet(f"{path}/postings"))
         # each bucket file SORTED by term_len in small row groups: the
         # fuzzy serve's pushed [lo, hi] length-band range filter then
         # prunes the dictionary scan to the query lengths' row groups —
@@ -852,7 +858,7 @@ def build_search_index(
     # measured that variant at 14 jobs / 301 tasks against 10 / 219) and
     # misses every document that has no posting.
     docstats.write.mode("overwrite").parquet(f"{path}/docstats")
-    _write_stats(spark, path, n_buckets)
+    _write_stats(spark, path, n_buckets, docstats.schema)
 
 
 def bm25_serve(

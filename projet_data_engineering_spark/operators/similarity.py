@@ -571,11 +571,18 @@ def q_embed_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Norms are divided out per ROW before the join (one pass over n rows), so
     each of the O(block²) pairs costs a single dot product instead of three —
-    the standard precompute for any pairwise-cosine stage at scale."""
+    the standard precompute for any pairwise-cosine stage at scale. The cast
+    vector is projected once, and one fold gives its squared norm (the
+    products :func:`dot` sums, in its order), whose finish divides it out:
+    O(dim) per row. A norm projected on its own would be inlined back into
+    the per-element lambda, since that lambda is its only reader."""
     e = load_table(spark, sf_dir, "embeddings")
-    v = as_double("embedding")
     t = e.selectExpr(
-        "vec_id", "label", f"transform({v}, x -> x / sqrt({dot(v, v)})) AS nv"
+        "vec_id",
+        "label",
+        f"{as_double('embedding')} AS v",
+        "aggregate(v, 0.0D, (acc, x) -> acc + x * x,"
+        " acc -> transform(v, x -> x / sqrt(acc))) AS nv",
     )
     a, b = t.alias("a"), t.alias("b")
     return (

@@ -33,6 +33,15 @@ def stopword_hits(toks: str, words: tuple[str, ...]) -> str:
     return f"size(filter({toks}, t -> t IN ({listed})))"
 
 
+def _token_array(docs: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` plus ``t``, the lower-cased whitespace tokens of ``text``:
+    a projected column, so an n-gram or term-frequency lambda reads the
+    array instead of re-splitting the text for every element (SCALING.md
+    "Building expressions"). A filter on ``t`` above it is pushed below
+    and splits once more, outside any lambda."""
+    return docs.selectExpr(*keep, "split(lower(text), ' ') AS t")
+
+
 def _lang_case_sql() -> str:
     cnts = {
         lang: "len(list_filter(t, x -> x in ({})))".format(
@@ -259,23 +268,16 @@ def q_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion is a per-row transform + explode — never leaves its stage;
     only (bigram, partial count) pairs shuffle, with map-side combine
     doing the heavy reduction."""
-    d = load_table(spark, sf_dir, "documents")
-    t = F.split(F.lower("text"), " ")
-    grams = d.filter(F.size(t) >= 2).select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - 1),
-                lambda i: F.concat_ws(
-                    " ", F.element_at(t, i), F.element_at(t, i + 1)
-                ),
-            )
-        ).alias("bigram")
+    grams = (
+        _token_array(load_table(spark, sf_dir, "documents"))
+        .where("size(t) >= 2")
+        .selectExpr(
+            "explode(transform(sequence(1, size(t) - 1), "
+            "i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1))))"
+            " AS bigram"
+        )
     )
-    return (
-        grams.groupBy("bigram")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 20)
-    )
+    return grams.groupBy("bigram").agg(F.expr("count(*) AS n")).where("n >= 20")
 
 
 @query(
@@ -472,23 +474,21 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled semi join, or pin the eval set to a fixed doc list. At 100 TB
     with a real (bounded) eval suite this is one corpus pass + a broadcast
     semi-probe."""
-    d = load_table(spark, sf_dir, "documents")
-    t = F.split(F.lower("text"), " ")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(t) - 4),
-        lambda i: F.array_join(F.slice(t, i, 5), " "),
+    with_grams = (
+        _token_array(load_table(spark, sf_dir, "documents"), "doc_id")
+        .where("size(t) >= 5")
+        .selectExpr(
+            "doc_id",
+            "explode(transform(sequence(1, size(t) - 4), "
+            "i -> array_join(slice(t, i, 5), ' '))) AS gram",
+        )
     )
-    with_grams = d.filter(F.size(t) >= 5).select(
-        "doc_id", F.explode(grams).alias("gram")
-    )
-    ev = (
-        with_grams.filter(F.col("doc_id") % 97 == 0).select("gram").distinct()
-    )
-    corpus = with_grams.filter(F.col("doc_id") % 97 != 0)
+    ev = with_grams.where("doc_id % 97 = 0").selectExpr("gram").distinct()
+    corpus = with_grams.where("doc_id % 97 != 0")
     return (
         corpus.join(F.broadcast(ev), "gram")
         .groupBy("doc_id")
-        .agg(F.countDistinct("gram").alias("n_shared"))
+        .agg(F.expr("count(DISTINCT gram) AS n_shared"))
     )
 
 
@@ -672,19 +672,18 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by doc length), not explode+groupBy, which would shuffle the
     entire token stream to compute a per-row statistic. At 100 TB that's
     the difference between a map pass and a trillion-row exchange."""
-    d = load_table(spark, sf_dir, "documents")
-    t = F.split(F.lower("text"), " ")
-    max_tf = F.array_max(
-        F.transform(
-            F.array_distinct(t),
-            lambda x: F.size(F.filter(t, lambda y: y == x)),
+    return (
+        _token_array(load_table(spark, sf_dir, "documents"), "doc_id")
+        .where("size(t) > 0")
+        .selectExpr(
+            "doc_id",
+            "array_max(transform(array_distinct(t),"
+            " x -> size(filter(t, y -> y = x)))) AS tf",
+            "CAST(tf AS BIGINT) AS max_tf",
+            "CAST(size(t) AS BIGINT) AS n_tokens",
+            "round(tf / size(t), 4) AS top_ratio",
         )
-    )
-    return d.filter(F.size(t) > 0).select(
-        "doc_id",
-        max_tf.cast("long").alias("max_tf"),
-        F.size(t).cast("long").alias("n_tokens"),
-        F.round(max_tf / F.size(t), 4).alias("top_ratio"),
+        .drop("tf")
     )
 
 

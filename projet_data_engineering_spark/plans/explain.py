@@ -149,3 +149,25 @@ def scan_partitions_read(df: DataFrame) -> dict[str, int]:
         cs = node.children()
         stack.extend(cs.apply(i) for i in range(cs.size()))
     return out
+
+
+def lambda_bodies(plan: str) -> list[str]:
+    """Every ``lambdafunction(...)`` of a plan string, nested ones included.
+    A body runs once per array element, so a tokenizer or a fold found in
+    one is re-run per element; Catalyst's CollapseProject puts a projected
+    column back into a lambda when that lambda is its only reader."""
+    bodies = []
+    start = plan.find("lambdafunction(")
+    while start >= 0:
+        depth = 0
+        for end in range(start + len("lambdafunction"), len(plan)):
+            depth += {"(": 1, ")": -1}.get(plan[end], 0)
+            if depth == 0:
+                break
+        bodies.append(plan[start:end + 1])
+        start = plan.find("lambdafunction(", start + 1)
+    return bodies
+
+
+def optimized_plan(df: DataFrame) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()

@@ -10,14 +10,15 @@ module is their COMPOSITION, computed once:
   into a narrow per-document frame — (doc_id, source, n_tokens, root,
   split, reached), no text — stored by a lineage-truncating
   ``localCheckpoint``. The funnel is one explode of each document's reached
-  stages plus one groupBy, the train windows pack the stored token counts,
+  stages, unioned with the stored windows, plus one groupBy; the train
+  windows pack the stored token counts,
   and the splits join the survivors back to the corpus text for redaction.
   Each stage predicate is written once and no output replays the chain: at
   100 TB the frame is tens of bytes per document, against one corpus-text
   re-scan per output.
 - **Near-dup labels are computed ONCE**: one join feeds stages 1 and 5.
-- **No data-dependent broadcast hints**: the labels and the contaminated
-  list ride plain joins under AQE (SCALING.md "Drop-list anti-joins").
+- **No data-dependent broadcast hints**: the labels and the eval 5-grams
+  ride plain joins under AQE (SCALING.md "Drop-list anti-joins").
 - **Filters compose before heavy stages**: the 5-gram probe explodes only
   the deduped + quality-floored, non-eval documents.
 
@@ -35,7 +36,7 @@ Stage semantics (all identical to their standalone queries):
   5. leakage-safe split — md5 bucket of the near-dup CLUSTER ROOT, 13/13/230
      test/valid/train (q_split_groupsafe's rule);
   6. sequence packing   — token-budget windows over the train split
-     (datapipe.pack_windows, one shuffle).
+     (datapipe.pack_windows, one shuffle, stored once for every reader).
 
 ``tools/bench_curation.py`` runs it at big SF and
 ``tests/test_curation_pipeline.py`` pins stage-vs-standalone parity.
@@ -68,6 +69,7 @@ PHONE_RE = r"[+]1-555-[0-9]+"
 # decontamination ships into its split, the stage after the chain.
 CHAIN = ("0_raw", "1_dedup", "2_quality", "3_decontaminated", "4_redacted")
 SHIPPED = len(CHAIN)
+WINDOWS = "6_train_windows"
 
 
 def curate_corpus(
@@ -88,84 +90,104 @@ def curate_corpus(
       candidate pair) and ``_contaminated`` (doc_id).
 
     The chain runs here, eagerly, into the stored status frame; every
-    returned frame reads it. Nothing is cached for the caller to release:
-    the checkpoint's blocks are reclaimed once no frame references them, and
-    ``unpersist()`` on ``_labels`` / ``_contaminated`` is harmless."""
+    returned frame reads it. Each document is tokenized once for the chain:
+    the token array is a projected column that the stopword count and the
+    5-gram lambdas read, and the corpus is read once for it (the eval
+    probe's documents are read on their own, the eval filter pushed into
+    the scan). The train windows are packed once: the frame is stored when
+    first computed, so the write and the funnel's window row read the same
+    windows. Nothing is cached for the caller to release: the checkpoints'
+    blocks are reclaimed once no frame references them, and ``unpersist()``
+    on ``_labels`` / ``_contaminated`` is harmless."""
     # Every expression below is one SQL string, built JVM-side in one py4j
     # call; the Column API costs 3-8 calls per node (SCALING.md "Building
     # expressions"). Doubles carry a ``D`` suffix: ``50.0`` parses as DECIMAL.
-    toks = "split(lower(text), ' ')"
-    corpus = docs.selectExpr(
-        "doc_id", "text", "source", f"size({toks}) AS n_tokens"
-    )
     labels = connected_components_lss(
         minhash_candidate_pairs(docs, "doc_id", "text")
     ).withColumnRenamed("node", "doc_id")
 
     # ---- stages 1-2: near-dup roots, quality floor (q_curate's score) ----
-    n_stop = stopword_hits(toks, STOPWORDS["en"])
+    # One projection tokenizes each document once: ``toks`` is a column
+    # (a lateral alias) that the stopword count and both 5-gram lambdas
+    # read, so no lambda re-splits the text per element.
+    tokenized = docs.selectExpr(
+        "doc_id",
+        "source",
+        "split(lower(text), ' ') AS toks",
+        "size(toks) AS n_tokens",
+    )
+    n_stop = stopword_hits("toks", STOPWORDS["en"])
     quality = (
         "least(n_tokens / 50.0D, 1.0D)"
         f" * (least(CAST({n_stop} AS DOUBLE) / n_tokens, 0.5D) + 0.5D)"
     )
     is_eval = f"doc_id % {eval_mod} = 0"
-    base = (
-        corpus.join(labels, "doc_id", "left")
-        .withColumn("root", F.expr("coalesce(root, doc_id)"))
-        .withColumn(
-            "reached",
-            F.expr(
-                "CASE WHEN root != doc_id THEN 0"
-                # the eval probe itself passes no further than the quality
-                # floor
-                f" WHEN {quality} >= {float(min_quality)!r}D"
-                f" THEN CASE WHEN {is_eval} THEN 2 ELSE {SHIPPED} END"
-                " ELSE 1 END"
-            ),
-        )
+    scored = tokenized.join(labels, "doc_id", "left").selectExpr(
+        "doc_id",
+        "source",
+        # a document in no candidate pair has no label: it is its own root
+        "coalesce(root, doc_id) AS root",
+        "toks",
+        "n_tokens",
+        # ``level``: the last stage passed before decontamination; the eval
+        # probe itself passes no further than the quality floor
+        "CASE WHEN root != doc_id THEN 0"
+        f" WHEN {quality} >= {float(min_quality)!r}D"
+        f" THEN CASE WHEN {is_eval} THEN 2 ELSE {SHIPPED} END ELSE 1 END"
+        " AS level",
     )
 
     # ---- stage 3: decontamination vs the eval probe ----
     grams = (
-        f"transform(sequence(1, size({toks}) - 4), "
-        f"i -> array_join(slice({toks}, i, 5), ' '))"
+        "transform(sequence(1, n_tokens - 4), "
+        "i -> array_join(slice(toks, i, 5), ' '))"
     )
     # eval grams from the RAW corpus (the benchmark suite is fixed; it does
     # not shrink because training docs were deduped). Bounded by
     # construction here only because the probe set is; see q_contamination's
     # docstring for the 100 TB contract (fixed benchmark suite -> broadcast;
-    # this composition keeps the hint-free join and lets AQE decide).
-    eval_grams = (
-        corpus.where(f"{is_eval} AND n_tokens >= 5")
-        .selectExpr(f"explode({grams}) AS gram")
-        .distinct()
-    )
-    hits = (
-        base.where(f"reached = {SHIPPED} AND n_tokens >= 5")
-        .selectExpr("doc_id", f"explode({grams}) AS gram")
-        .join(eval_grams, "gram")
-        .selectExpr("doc_id", "true AS hit")
-        .distinct()
+    # this composition keeps the hint-free join and lets AQE decide). The
+    # eval filter reads only doc_id, so Spark pushes it into the scan, and
+    # the probe needs no labels. A gram two eval documents share stays two
+    # rows: the probe below folds its hits with bool_or, which duplicates
+    # cannot change, so no aggregate (and no exchange) dedups them first.
+    eval_grams = tokenized.where(is_eval).selectExpr(
+        f"explode(CASE WHEN n_tokens >= 5 THEN array_distinct({grams}) END)"
+        " AS gram",
+        "true AS hit",
     )
 
     # ---- stage 5: leakage-safe split on the cluster roots ----
     bucket = (
         "CAST(conv(substring(md5(CAST(root AS STRING)), 1, 2), 16, 10) AS INT)"
     )
+    # The corpus is read once for the whole chain: each shipped document's
+    # 5-grams are probed where it stands and folded back into its row by an
+    # aggregate on doc_id, which the corpus's doc_id layout already
+    # satisfies when the probe is broadcast (no self-join, no second read).
     status = (
-        base.join(hits, "doc_id", "left")
-        .selectExpr(
+        scored.selectExpr(
             "doc_id",
             "source",
-            "n_tokens",
             "root",
-            f"CASE WHEN {bucket} < 13 THEN 'test'"
-            f" WHEN {bucket} < 26 THEN 'valid' ELSE 'train' END AS split",
-            "CASE WHEN hit THEN 2 ELSE reached END AS reached",
+            "n_tokens",
+            "level",
+            f"explode_outer(CASE WHEN level = {SHIPPED} AND n_tokens >= 5"
+            f" THEN {grams} END) AS gram",
+        )
+        .join(eval_grams, "gram", "left")
+        .groupBy("doc_id", "source", "n_tokens", "root")
+        .agg(
+            F.expr(
+                f"CASE WHEN {bucket} < 13 THEN 'test'"
+                f" WHEN {bucket} < 26 THEN 'valid' ELSE 'train' END AS split"
+            ),
+            F.expr("CASE WHEN bool_or(hit) THEN 2 ELSE any_value(level) END"
+                   " AS reached"),
         )
         .localCheckpoint(eager=True)
     )
-    shipped = status.where(f"reached = {SHIPPED}")
+    shipped = f"reached = {SHIPPED}"
 
     # ---- stage 4: PII redaction (map-only) of the shipped docs' text ----
     # the patterns hold no backslash or quote, so they are SQL literals as-is
@@ -177,8 +199,7 @@ def curate_corpus(
         f"regexp_replace(regexp_replace(text, '{EMAIL_RE}', '<EMAIL>'),"
         f" '{PHONE_RE}', '<PHONE>')"
     )
-    text = docs.select("doc_id", "text", "n_chars")
-    splits = shipped.join(text, "doc_id").selectExpr(
+    splits = docs.join(status.where(shipped), ["doc_id", "source"]).selectExpr(
         "doc_id",
         "source",
         "n_chars",
@@ -189,13 +210,15 @@ def curate_corpus(
         "split",
     )
 
-    # ---- stage 6: pack the train split's stored token counts ----
+    # ---- stage 6: pack the train split's stored token counts, once ----
+    # Stored as it is first computed (by whichever action reads it first),
+    # so the funnel counts the windows a write already packed.
     train_windows = pack_windows(
-        shipped.where("split = 'train'").selectExpr(
+        status.where(f"{shipped} AND split = 'train'").selectExpr(
             "source AS stream", "doc_id AS doc", "n_tokens AS ntok"
         ),
         budget=pack_budget,
-    )
+    ).localCheckpoint(eager=False)
 
     # ---- funnel: every stage each document reached, counted once ----
     names = ", ".join(f"'{s}'" for s in CHAIN)
@@ -205,29 +228,33 @@ def curate_corpus(
         "doc_id",
         "n_tokens",
     )
-    # one doc-less row per chain stage, so a stage no document reached still
-    # reports (0 docs, NULL tokens), as a global aggregate would
+    # one row per window: counting its (never NULL) first document counts
+    # the windows, and their tokens sum to the train split's
+    windows = train_windows.selectExpr(
+        f"'{WINDOWS}'", "first_doc", "n_tokens"
+    )
+    # one doc-less row per stage, so a stage nothing reached still reports
+    # (0 docs, NULL tokens), as a global aggregate would
     empty = docs.sparkSession.sql(  # a local relation: no job, no worker
-        "VALUES " + ", ".join(f"('{s}', NULL, NULL)" for s in CHAIN)
+        "VALUES "
+        + ", ".join(f"('{s}', NULL, NULL)" for s in (*CHAIN, WINDOWS))
     )
     funnel = (
-        staged.union(empty)
+        staged.union(windows)
+        .union(empty)
         .groupBy("stage")
-        .agg(F.expr("count(doc_id)"), F.expr("sum(n_tokens)"))
-        .union(
-            train_windows.selectExpr(
-                "'6_train_windows'", "count(*)", "sum(n_tokens)"
-            )
+        .agg(
+            F.expr("count(doc_id) AS n_docs"), F.expr("sum(n_tokens) AS n_tokens")
         )
-        .toDF("stage", "n_docs", "n_tokens")
     )
     return {
         "train_windows": train_windows,
         "splits": splits,
         "funnel": funnel,
         "_labels": labels,
-        "_contaminated": status.where(f"reached = 2 AND NOT ({is_eval})")
-        .select("doc_id"),
+        "_contaminated": status.where(
+            f"reached = 2 AND NOT ({is_eval})"
+        ).selectExpr("doc_id"),
     }
 
 

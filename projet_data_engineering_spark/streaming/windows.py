@@ -509,11 +509,9 @@ def index_refresh_batch(
     merge_upsert_partitioned(
         spark, f"{index_path}/postings", postings, "_pk", "term_bucket"
     )
-    atomic_overwrite(
-        merge_upsert(spark.read.parquet(docstats_path), docstats, id_col),
-        docstats_path,
-    )
-    _write_stats(spark, index_path, n_buckets)
+    merged = merge_upsert(spark.read.parquet(docstats_path), docstats, id_col)
+    atomic_overwrite(merged, docstats_path)
+    _write_stats(spark, index_path, n_buckets, merged.schema)
 
 
 def run_stream_index_refresh(

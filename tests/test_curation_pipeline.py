@@ -174,6 +174,42 @@ def test_funnel_matches_the_oracle(spark):
     assert got == want
 
 
+def test_no_lambda_re_splits_the_text(spark, monkeypatch):
+    """Each document is tokenized once: the shingle, stopword and 5-gram
+    lambdas read a projected token array. In the optimized plans of
+    ``minhash_signatures`` and of every frame ``curate_corpus`` stores (the
+    status frame among them), no lambda body calls ``split(`` — neither
+    when the tokenizer is pasted into a lambda as SQL text nor when
+    CollapseProject inlines a once-read token column back into one."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from projet_data_engineering_spark.operators.dedup import (
+        minhash_signatures,
+    )
+    from projet_data_engineering_spark.plans.explain import (
+        lambda_bodies,
+        optimized_plan,
+    )
+
+    stored = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def record(self, *args, **kwargs):
+        stored.append(optimized_plan(self))
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", record)
+    docs = _docs(spark)
+    plans = [optimized_plan(minhash_signatures(docs, "doc_id", "text"))]
+    with curated(docs):
+        pass
+    plans += stored
+    # the status frame: it tokenizes the text and probes the 5-grams
+    assert any("split(" in p and "array_join(" in p for p in stored)
+    for plan in plans:
+        assert not any("split(" in body for body in lambda_bodies(plan))
+
+
 def _star_docs(spark, path):
     """The test corpus without the documents of any candidate pair, plus
     copies of two others under new ids: its near-dup graph is two one-edge
@@ -214,8 +250,10 @@ def test_outputs_read_the_stored_status_frame(spark, tmp_path):
             out["funnel"].collect()
         curate, windows, funnel = census.calls
         assert curate.jobs <= 18
-        assert windows.jobs <= 2
-        assert funnel.jobs <= 4
+        # the windows are packed once, by the write; the funnel counts the
+        # stored windows with its stage rows in one aggregate
+        assert windows.jobs <= 1
+        assert funnel.jobs <= 2
         for df in (out["train_windows"], out["funnel"]):
             plan = df._jdf.queryExecution().executedPlan().toString()
             assert "documents.parquet" not in plan

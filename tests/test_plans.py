@@ -13,6 +13,8 @@ from projet_data_engineering_spark.plans.explain import (
     codegen_stage_count,
     formatted_plan,
     has_pushed_filter,
+    lambda_bodies,
+    optimized_plan,
     read_schema_columns,
     shuffle_count,
     uses_broadcast_join,
@@ -600,3 +602,22 @@ def test_source_bytes_unquotes_percent_encoded_paths(spark, tmp_path):
         if f.endswith(".parquet")
     )
     assert source_bytes(df) == want > 0
+
+
+@pytest.mark.parametrize(
+    "name, per_row",
+    [
+        ("q_ngrams", "split("),
+        ("q_contamination", "split("),
+        ("q_repetition", "split("),
+        # the cast vector's squared norm, a fold over the whole vector
+        ("q_embed_dup_pairs", "aggregate("),
+    ],
+)
+def test_lambdas_read_projected_arrays(spark, name, per_row):
+    """A per-row array (the token split, the vector norm) is a projected
+    column the lambdas read, not an expression re-run per element: in the
+    optimized plan, after CollapseProject, no lambda body contains it."""
+    plan = optimized_plan(Q[name](spark, SF_DIR))
+    assert per_row in plan
+    assert not any(per_row in body for body in lambda_bodies(plan))

@@ -15,7 +15,10 @@ session's class cache holds them (``session.get_spark``). ``py4j_calls``
 is the number of py4j commands the driver sent during the counted run:
 building a plan costs one per SQL-text expression but 3-8 per Column-API
 node, so a large count on a cheap query points at driver-side plan
-building.
+building. ``dataframes`` is the number of DataFrames the counted run
+constructed on the Python side: each construction is one eager analysis
+in the JVM, a few milliseconds warm, so it counts plan-building work that
+``py4j_calls`` does not weigh.
 
 Usage: python tools/profile_queries.py [sf_dir] q_a q_b ...
 """
@@ -29,6 +32,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from py4j.clientserver import ClientServerConnection  # noqa: E402
+from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from perfbench.census import Census  # noqa: E402
@@ -67,6 +71,21 @@ def count_py4j() -> list[int]:
     return sent
 
 
+def count_dataframes() -> list[int]:
+    """Count every DataFrame constructed from now on, into the returned
+    one-element list. ``__new__`` runs once per construction; ``__init__``
+    runs twice, since ``__new__`` calls it before Python does."""
+    made = [0]
+    new = DataFrame.__new__
+
+    def counted(cls, *args, **kwargs):
+        made[0] += 1
+        return new(cls, *args, **kwargs)
+
+    DataFrame.__new__ = counted
+    return made
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     names = sys.argv[2:]
@@ -79,15 +98,17 @@ def main() -> int:
     ).mode("overwrite").save()
     census = Census(spark)
     sent = count_py4j()
+    made = count_dataframes()
     out = {}
     for name in names:
         fn = qs[name]
         run(spark, fn, sf_dir)  # warm
         compiles0, ms0 = codegen(spark)
         with census.span(name):
-            sent0 = sent[0]
+            sent0, made0 = sent[0], made[0]
             run(spark, fn, sf_dir)
             py4j_calls = sent[0] - sent0
+            dataframes = made[0] - made0
         compiles1, ms1 = codegen(spark)
         c = census.calls[-1]
         out[name] = {
@@ -101,6 +122,7 @@ def main() -> int:
             "codegen_compiles": compiles1 - compiles0,
             "codegen_ms": round(ms1 - ms0, 1),
             "py4j_calls": py4j_calls,
+            "dataframes": dataframes,
         }
         print(name, json.dumps(out[name]))
         spark.catalog.clearCache()
