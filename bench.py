@@ -68,7 +68,7 @@ BENCH_QUERIES = [
     "q_bloom_join",     # bloom-pruned fact join (r7b)
     "q_dsir_weights",   # DSIR importance weights (r7b)
     "q_semdedup",       # trained-cluster semantic dedup (r7b)
-    "q_pq_encode_arrow",  # PQ bulk-encode, production Arrow tier (r8)
+    "q_pq_encode",  # PQ train + Arrow bulk-encode (r8)
     "q_kmv_distinct",   # mergeable bottom-k cardinality sketch (r8)
     "q_percentile_sampled",  # deterministic hash-sample percentiles (r8)
     "q_cms_counts",     # Count-Min frequency sketch, one-digest buckets (r8)
@@ -124,7 +124,7 @@ R10_ANCHOR = {
     "q_media_container_meta": 0.555, "q_shuffle_shard": 0.106,
     "q_token_budget": 0.435, "q_vocab_coverage": 0.167,
     "q_domain_temperature": 0.173, "q_bloom_join": 0.841,
-    "q_dsir_weights": 0.379, "q_semdedup": 2.893, "q_pq_encode_arrow": 0.842,
+    "q_dsir_weights": 0.379, "q_semdedup": 2.893, "q_pq_encode": 0.842,
     "q_kmv_distinct": 0.974, "q_percentile_sampled": 1.153,
     "q_cms_counts": 0.613, "q_time_travel": 2.193,
     "q_stream_versioned": 2.437, "q_crawl_frontier": 2.533,

@@ -1280,22 +1280,18 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower-id vector in its cluster (greedy-by-id acceptance —
     deterministic, the same contract as the streaming near-dup ingest).
 
-    Registered in its PRODUCTION shape (r8): k=SEMDEDUP_K clusters (k is
-    the knob that must grow with the corpus — see :func:`semdedup_flags`)
-    and the Arrow/BLAS pair stage, so the hash-oracled artifact is the
-    same plan that scales; the oracle retrains the identical k-cluster
-    quantizer via the parameterized CTE builder. The JVM exact-arithmetic
-    pair tier stays flag-for-flag parity-pinned in
-    tests/test_dsir_semdedup.py."""
+    Registered at k=SEMDEDUP_K clusters (k is the knob that must grow with
+    the corpus — see :func:`semdedup_flags`); the DuckDB oracle retrains
+    the identical k-cluster quantizer via the parameterized CTE builder
+    and is the contract the flags are hash-checked against."""
     e = load_table(spark, sf_dir, "embeddings")
-    return semdedup_flags(e, k=SEMDEDUP_K, arrow_pairs=True)
+    return semdedup_flags(e, k=SEMDEDUP_K)
 
 
 def semdedup_flags(
     emb: DataFrame,
     k: int = 8,
     tau: float = SEMDEDUP_TAU,
-    arrow_pairs: bool = False,
 ) -> DataFrame:
     """(vec_id, cent_id, keep) SemDeDup flags over ``k`` trained clusters.
 
@@ -1306,154 +1302,81 @@ def semdedup_flags(
     EXACTLY like LSH band width: with k fixed, blocks grow O(n) and the
     pair stage grows O(n²/k); with k ∝ n (the paper runs tens of
     thousands of clusters), blocks stay constant and the pair stage is
-    LINEAR in the corpus. Assignment is map-only against LITERAL centroids
-    (k is bounded by construction). The keep column comes back as an int
-    flag so the output doubles as the drop-list builder: at scale the
-    `keep = 0` slice feeds the same bucketed anti-join the
-    `build_dedup_state` layout serves — never a corpus-sized broadcast
-    (r6 lesson).
+    LINEAR in the corpus. The keep column comes back as an int flag so
+    the output doubles as the drop-list builder: at scale the `keep = 0`
+    slice feeds the same bucketed anti-join the `build_dedup_state` layout
+    serves — never a corpus-sized broadcast (r6 lesson).
 
-    ``arrow_pairs`` picks the pair-stage engine. False (default, the
-    oracled path) runs the within-cluster pair JOIN in the JVM — exact
-    fold arithmetic, but a row-form pair join materializes O(block²) rows
-    each carrying two dim-sized arrays, which is COPY-bound long before it
-    is compute-bound (measured >10 min at sf5/k=40 vs ~BLAS-seconds of
-    actual math). True runs BOTH stages vectorized — assignment as one
-    ``mapInPandas`` argmax against the literal centroid matrix (see the
-    inline janino note), each cluster through ``applyInPandas`` with a
-    numpy matmul — the production tier for real block sizes; cosine
-    rounds to 4 dp before the τ compare, the same tolerance that already
-    reconciles the Arrow twin ``q_embed_knn_arrow`` with the JVM fold, and
-    pytest pins flag-for-flag parity between both engines on the
-    fixtures."""
-    import math
+    Both stages run vectorized. Assignment is one map-only
+    ``mapInPandas`` argmax of the 4-dp-rounded cosine against the centroid
+    matrix (a closure constant; k is bounded by construction), first max
+    = lowest cid; each cluster then goes through ``applyInPandas`` with a
+    numpy matmul, its cosines rounded to 4 dp before the τ compare. A
+    row-form JVM pair join materializes O(block²) rows each carrying two
+    dim-sized arrays, which is COPY-bound long before it is compute-bound
+    (measured >10 min at sf5/k=40), and past k≈16 a literal k·dim argmax
+    expression exceeds janino's 64 KB method limit. The contract is the
+    DuckDB oracle (:func:`_semdedup_oracle`), which ``q_semdedup`` is
+    hash-checked against."""
+    import numpy as np
 
     from projet_data_engineering_spark.operators.ml import kmeans_centroids
-    from projet_data_engineering_spark.operators.similarity import (
-        as_double,
-        cosine_unrolled,
-        dot_unrolled,
-    )
+    from projet_data_engineering_spark.operators.similarity import as_double
 
     b = emb.selectExpr("vec_id", f"{as_double('embedding')} AS v")
     # k is the scale knob, so the model stays bounded (k rows) however big
-    # the corpus: collect it and assign against LITERAL centroids — plain
-    # codegen arithmetic per (row, candidate), no HOF lambdas, no per-row
-    # artifact copying. Bit-identical to the broadcast-artifact argmax
-    # (same fold order, same 4-dp rounding, same lowest-cid tie-break);
-    # fold-based assignment measured ~86 s at sf5/k=40 vs seconds unrolled.
+    # the corpus: collect it and assign against it as a closure constant.
     cent_rows = sorted(
         (r["cid"], [float(x) for x in r["ce"]])
         for r in kmeans_centroids(emb, k=k, iters=2).collect()
     )
-    if arrow_pairs:
-        # Production tier: BOTH stages numpy. Past k≈16 the k·dim literal
-        # argmax expression exceeds janino's 64 KB method limit — the
-        # compile ATTEMPT alone on the megabyte generated class costs
-        # ~15 s of driver time per job before the interpreted fallback
-        # (measured at k=32/sf0.1), so the scaled shape assigns in the
-        # same engine that flags: one mapInPandas argmax over the literal
-        # centroid matrix (a closure constant), then the per-cluster
-        # flag pass. Same 4-dp-rounded cosine + lowest-cid tie-break;
-        # flag parity vs the exact JVM tier is pinned in pytest.
+    cmat = np.array([cv for _, cv in cent_rows], dtype=np.float64)
+    cid_lut = np.array([cid for cid, _ in cent_rows], dtype=np.int64)
+    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
+
+    def assign_batches(batches):
         import numpy as np
+        import pandas as pd
 
-        cmat = np.array([cv for _, cv in cent_rows], dtype=np.float64)
-        cid_lut = np.array([cid for cid, _ in cent_rows], dtype=np.int64)
-        cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-
-        def assign_batches(batches):
-            import numpy as np
-            import pandas as pd
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-                cos = np.round(
-                    (x @ cmat.T)
-                    / (np.sqrt((x * x).sum(axis=1))[:, None] * cnorm[None, :]),
-                    4,
-                )
-                best = cos.argmax(axis=1)  # first max = lowest cid
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "v": pdf["v"],
-                        "cent_id": cid_lut[best].astype("int32"),
-                    }
-                )
-
-        assigned = b.mapInPandas(
-            assign_batches, schema="vec_id bigint, v array<double>, cent_id int"
-        )
-
-        def flag_cluster(pdf):
-            import numpy as np
-            import pandas as pd
-
-            pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.sqrt((V * V).sum(axis=1))[:, None]
-            C = np.round(Vn @ Vn.T, 4)
-            dropped = np.triu(C >= tau, 1).any(axis=0)
-            return pd.DataFrame(
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            cos = np.round(
+                (x @ cmat.T)
+                / (np.sqrt((x * x).sum(axis=1))[:, None] * cnorm[None, :]),
+                4,
+            )
+            best = cos.argmax(axis=1)  # first max = lowest cid
+            yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"],
-                    "cent_id": pdf["cent_id"],
-                    "keep": np.where(dropped, 0, 1).astype("int32"),
+                    "v": pdf["v"],
+                    "cent_id": cid_lut[best].astype("int32"),
                 }
             )
 
-        return assigned.groupBy("cent_id").applyInPandas(
-            flag_cluster, schema="vec_id bigint, cent_id int, keep int"
-        )
-    vnorm = F.sqrt(dot_unrolled(F.col("v"), F.col("v")))
-
-    def _dot_lit(cv: list[float]) -> F.Column:
-        expr = None
-        for i, x in enumerate(cv, start=1):
-            t = F.element_at(F.col("v"), i) * F.lit(x)
-            expr = (F.lit(0.0) + t) if expr is None else expr + t
-        return expr
-
-    cands = []
-    for cid, cv in cent_rows:
-        s = 0.0
-        for x in cv:
-            s += x * x  # same left-to-right fold the JVM runs
-        cos = F.round(_dot_lit(cv) / (vnorm * F.lit(math.sqrt(s))), 4)
-        cands.append(F.struct((-cos).alias("neg_cos"), F.lit(cid).alias("cid")))
-    assigned = (
-        b.select(
-            "vec_id", "v", F.array_min(F.array(*cands))["cid"].alias("cent_id")
-        )
-        .localCheckpoint(eager=True)  # the materialized assignment table —
-        # shared by both sides of the within-cluster pair join
-    )
-    a, c = assigned.alias("a"), assigned.alias("b")
-    dups = (
-        a.join(
-            c,
-            (F.col("a.cent_id") == F.col("b.cent_id"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        # unrolled cosine: bit-identical to the HOF fold, but codegen-bound —
-        # the pair stage is O(sum of block²)·O(dim), and interpreted lambdas
-        # made it the scale bottleneck (174 s at sf5 fold-based)
-        .filter(
-            F.round(cosine_unrolled(F.col("a.v"), F.col("b.v")), 4) >= tau
-        )
-        .select(F.col("b.vec_id").alias("vec_id"))
-        .distinct()
-    )
-    return (
-        assigned.join(dups.withColumn("_dup", F.lit(1)), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cent_id",
-            F.when(F.col("_dup").isNull(), 1).otherwise(0).alias("keep"),
-        )
+    assigned = b.mapInPandas(
+        assign_batches, schema="vec_id bigint, v array<double>, cent_id int"
     )
 
+    def flag_cluster(pdf):
+        import numpy as np
+        import pandas as pd
 
+        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+        V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+        Vn = V / np.sqrt((V * V).sum(axis=1))[:, None]
+        C = np.round(Vn @ Vn.T, 4)
+        dropped = np.triu(C >= tau, 1).any(axis=0)
+        return pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"],
+                "cent_id": pdf["cent_id"],
+                "keep": np.where(dropped, 0, 1).astype("int32"),
+            }
+        )
+
+    return assigned.groupBy("cent_id").applyInPandas(
+        flag_cluster, schema="vec_id bigint, cent_id int, keep int"
+    )

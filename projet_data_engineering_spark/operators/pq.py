@@ -73,33 +73,29 @@ def _train_books(emb: DataFrame) -> BooksLocal:
     The math per subspace is :func:`ml.kmeans_centroids` exactly (seeds =
     bottom-K vectors by md5(vec_id) — identical seed ROWS across subspaces,
     different seed VALUES because the slice differs; raw-d2 argmin with
-    lowest-cid ties; 6-dp-rounded means) — the oracle transcribes it with
-    the SAME shared CTE builder, sliced source expression.
+    lowest-cid ties; 6-dp-rounded means). The contract is the DuckDB
+    oracle, which transcribes it with the SAME shared CTE builder over a
+    sliced source expression.
 
-    Execution shape (r8, measured): the model lives on the DRIVER (a
-    bounded M·K·subdim doubles — 1 KiB here, never corpus-proportional)
-    and each Lloyd's round is ONE ``mapInPandas`` pass that assigns every
-    row's M subvectors in numpy and emits PER-BATCH PARTIAL SUMS — at most
-    M·K rows of (m, cid, Σx₀..Σx₃, count) per Arrow batch — followed by a
+    Execution shape: the model lives on the DRIVER (a bounded M·K·subdim
+    doubles — 1 KiB here, never corpus-proportional) and each Lloyd's
+    round is ONE ``mapInPandas`` pass that assigns every row's M
+    subvectors in numpy and emits PER-BATCH PARTIAL SUMS — at most M·K
+    rows of (m, cid, Σx₀..Σx₃, count) per Arrow batch — followed by a
     tiny groupBy(m, cid) that finishes the means. Map-side combined by
     construction: the shuffle is O(batches · M · K) rows regardless of
-    corpus size. This replaced the literal-expression JVM loop from r7:
-    the fused M·K=256-candidate assignment projections exceeded janino's
-    64 KB method limit, and two rounds of interpreted evaluation + eager
-    localCheckpoints cost ~20 s per trained model at sf0.1 (2 000 rows!)
-    — pure plan/compile overhead, paid by every PQ query. The Arrow round
-    trains the identical lattice in <2 s (raw-d2 argmin, first-min =
-    lowest cid since books are cid-sorted). Mean-agreement contract with
-    the oracle's AVG-based retraining: the per-batch numpy partial sums
-    and the F.sum over them accumulate in a different (and run-dependent)
-    order than DuckDB's AVG, so agreement is at the 6-dp ROUNDING of the
-    means, tolerance-backed by the hash gate — not a bit-for-bit fold
-    guarantee. A mean sitting exactly on a rounding boundary could flip a
-    Lloyd round; the gate would catch it loudly (every downstream code
-    changes), and it has never fired. The earlier
-    measured losers stand: per-subspace DataFrame trainings were
-    stage-count-bound, a 1-row broadcast codebook artifact was copy-bound
-    (BroadcastNestedLoopJoin appends the build row to EVERY stream row)."""
+    corpus size. Mean-agreement with the oracle's AVG-based retraining:
+    the per-batch numpy partial sums and the F.sum over them accumulate in
+    a different (and run-dependent) order than DuckDB's AVG, so agreement
+    is at the 6-dp ROUNDING of the means, tolerance-backed by the hash
+    gate — not a bit-for-bit fold guarantee. A mean sitting exactly on a
+    rounding boundary could flip a Lloyd round; the gate would catch it
+    loudly (every downstream code changes), and it has never fired.
+    Measured losers: a literal-expression JVM round (its M·K-candidate
+    projections exceed janino's 64 KB method limit, ~20 s per model at
+    sf0.1), per-subspace DataFrame trainings (stage-count-bound) and a
+    1-row broadcast codebook artifact (copy-bound: BroadcastNestedLoopJoin
+    appends the build row to EVERY stream row)."""
     import numpy as np
 
     e = emb.select(
@@ -126,7 +122,7 @@ def _train_books(emb: DataFrame) -> BooksLocal:
         # only the ENCODE argmin rounds), ties toward the lowest cid:
         # numpy argmin returns the FIRST minimum and candidate rows are
         # cid-sorted. Clusters that receive no rows emit no partials and
-        # drop from the model (never invented) — same as the JVM round.
+        # drop from the model (never invented), as in the oracle.
         cents = [
             np.array([ce for _, ce in books[m]], dtype=np.float64)
             for m in range(m_count)
@@ -180,120 +176,24 @@ def _train_books(emb: DataFrame) -> BooksLocal:
     return books
 
 
-def _d2_unrolled(vec: Column, off: int, ce: list[float]) -> Column:
-    """Squared L2 distance of vec[off+1 .. off+subdim] to a LITERAL
-    centroid, unrolled into plain column arithmetic — Spark does not
-    codegen higher-order-function lambdas (ArrayAggregate/ZipWith are
-    CodegenFallback, evaluated per element through interpreted closures),
-    and the fold-based variant of this module measured compute-bound on
-    exactly that. Plain GetArrayItem + multiply/add rides whole-stage
-    codegen at the widths the k-means family uses (k≤16 candidates per
-    projection — IVF assignment, Lloyd's rounds); PQ's fused M·K=256-
-    candidate encode projection exceeds janino's 64 KB method limit and
-    falls back to interpreted evaluation — see :func:`pq_encode_with` for
-    why that fallback is kept. Left-to-right addition order matches the
-    JVM fold and DuckDB's list_sum, so the bits are identical."""
-    expr = None
-    for i, c in enumerate(ce):
-        t = F.element_at(vec, off + i + 1) - F.lit(c)
-        sq = t * t
-        expr = sq if expr is None else expr + sq
-    return expr
-
-
-def _cands(books: BooksLocal, m: int, vec: Column) -> Column:
-    """Array of struct(d2, cid) for subspace ``m``'s literal candidates
-    against the row's FULL vector (indexed at the subspace offset), d2
-    rounded to 6 dp per the ENCODE argmin contract (training, which argmins
-    on raw d2, runs through the Arrow round in :func:`_train_books`)."""
-    entries = []
-    for cid, ce in books[m]:
-        d2 = F.round(_d2_unrolled(vec, m * PQ_SUBDIM, ce), 6)
-        entries.append(
-            F.struct(d2.alias("d2"), F.lit(cid).alias("cid"))
-        )
-    return F.array(*entries)
-
-
-def pq_codebooks(emb: DataFrame) -> DataFrame:
-    """The trained codebooks as a (m, cid, ce) DataFrame — the persistable
-    model artifact (and the shape the tests replay in numpy). Training
-    itself is :func:`_train_books`."""
-    books = _train_books(emb)
-    rows = [
-        (m, cid, ce) for m in range(PQ_M) for cid, ce in books[m]
-    ]
-    return emb.sparkSession.createDataFrame(
-        rows, "m int, cid int, ce array<double>"
-    )
-
-
-def pq_encode_with(emb: DataFrame, books: BooksLocal) -> DataFrame:
-    """(vec_id, v, c1..cM, recon_err) against an already-trained model —
-    pure map work, literal codebooks, ZERO joins/shuffles/broadcasts. At
-    100 TB the (vec_id, c1..cM) projection IS the stored index — M bytes a
-    row.
-
-    Codegen caveat (measured, r8): the fused M·K=256-candidate projection
-    generates >64 KB of bytecode for one method, janino refuses
-    ("Code grows beyond 64 KB"), and the stage runs through Spark's
-    interpreted projection. That fallback is KEPT deliberately — every
-    alternative measured slower at sf5/100 k vectors: 8+8 argmin split
-    behind a localCheckpoint barrier 29.8 s, behind a sortWithinPartitions
-    barrier 8.9 s (the 8-argmin half-stages still exceed 64 KB anyway), a
-    least()/chained-when argmin reformulation 10.5 s, per-operator codegen
-    (wholeStage=false) 8.2 s, forced-interpreted 8.3 s — vs 6.9 s for this
-    fused interpreted form. tests/test_pq.py pins the fallback so a Spark
-    upgrade that starts compiling it (or a regression that slows it) is
-    caught, not silent. The production bulk-encode tier is
-    :func:`pq_encode_arrow` (vectorized numpy over mapInPandas), which
-    beats all JVM forms; this JVM form keeps the exact-arithmetic oracle
-    contract."""
-    v = emb.selectExpr("vec_id", f"{as_double('embedding')} AS v")
-    structs = [
-        F.array_min(_cands(books, m, F.col("v"))).alias(f"s{m}")
-        for m in range(PQ_M)
-    ]
-    enc = v.select("vec_id", "v", *structs)
-    err = F.round(
-        sum(F.col(f"s{m}")["d2"] for m in range(PQ_M)), 6
-    ).alias("recon_err")
-    return enc.select(
-        "vec_id",
-        "v",
-        *[F.col(f"s{m}")["cid"].alias(f"c{m + 1}") for m in range(PQ_M)],
-        err,
-    )
-
-
-def pq_encode(emb: DataFrame) -> DataFrame:
-    """Train + encode: the one-shot query shape (the driver gate invokes
-    each query standalone). Production splits these: train once on a
-    sample, persist the model, encode incrementally — ``pq_encode_with``
-    is that second half."""
-    return pq_encode_with(emb, _train_books(emb))
-
-
 def pq_encode_arrow(emb: DataFrame, books: BooksLocal) -> DataFrame:
-    """(vec_id, c1..cM, recon_err) — the vectorized PRODUCTION bulk-encode
-    tier: one ``mapInPandas`` pass where each Arrow batch computes all M·K
-    subspace distances as numpy array ops and the argmin per (row, m) in
-    one reduction. The semdedup ``arrow_pairs`` pattern applied to encode:
-    the JVM literal form (:func:`pq_encode_with`) keeps the exact-
-    arithmetic oracle contract but runs interpreted (its fused projection
-    exceeds janino's 64 KB method limit — see its docstring for the
-    measured alternatives), while this tier does the identical math
-    BLAS-shaped. Still map-only: literal codebooks travel as a closure
-    constant (M·K·subdim doubles), zero joins/shuffles/broadcasts, so the
-    100 TB cost model is unchanged — only the per-batch arithmetic engine.
+    """(vec_id, c1..cM, recon_err) against an already-trained model — the
+    engine's one encode tier: one ``mapInPandas`` pass where each Arrow
+    batch computes all M·K subspace distances as numpy array ops and the
+    argmin per (row, m) in one reduction. Map-only: the codebooks travel as
+    a closure constant (M·K·subdim doubles), zero joins/shuffles/broadcasts.
+    At 100 TB the (vec_id, c1..cM) projection IS the stored index — M
+    bytes a row.
 
     Numerics: float64 throughout, (x−c)² summed in index order (numpy is
-    sequential at subdim=4, matching the JVM fold), argmin takes the FIRST
-    minimum = lowest cid (books are cid-sorted). The one tolerance:
-    np.round is binary half-even where Spark's ROUND is decimal HALF_UP —
-    divergence needs a d2 landing exactly on a 5e-7 boundary;
-    tests/test_pq.py pins code-for-code and recon_err parity against the
-    JVM form on the driver fixtures."""
+    sequential at subdim=4, the order DuckDB's list_sum adds in), each d2
+    rounded to 6 dp before the argmin, which takes the FIRST minimum =
+    lowest cid (books are cid-sorted). The contract is the DuckDB oracle
+    ``_PQ_ENCODE_ORACLE``, which retrains and re-encodes the whole lattice;
+    ``q_pq_encode`` is hash-checked against it. The one tolerance: np.round
+    rounds an exact binary half to even where the oracle's ROUND rounds it
+    away from zero — divergence needs a d2 landing exactly on a 5e-7
+    boundary, and the hash gate would show it."""
     import numpy as np
 
     cents = np.stack(
@@ -426,35 +326,14 @@ _PQ_ANN_ORACLE = f"""
 @query("q_pq_encode", oracle=_PQ_ENCODE_ORACLE)
 def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantize the embedding store: M trained subspace codebooks
-    (PQ_M of them), M codes + exact reconstruction error per vector. The compression tier a
-    100 TB vector corpus applies before its inverted lists (IVF**+PQ**);
-    reconstruction error is the contract column — the oracle recomputes the
-    whole lattice (training included), so a wrong slice bound, rounding
-    mode, or tie-break fails the hash, not just a unit test."""
-    return pq_encode(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id",
-        *[F.col(f"c{m + 1}").cast("bigint").alias(f"c{m + 1}") for m in range(PQ_M)],
-        "recon_err",
-    )
-
-
-@query("q_pq_encode_arrow", oracle=_PQ_ENCODE_ORACLE)
-def q_pq_encode_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_pq_encode in its PRODUCTION shape: the same trained codebooks,
-    the encode stage run through :func:`pq_encode_arrow` (numpy over
-    mapInPandas) instead of the interpreted JVM projection — registered
-    under the SAME retraining oracle so the tier a 100 TB corpus would
-    actually run is the one the hash gate proves, not just a pytest
-    parity pin (the q_semdedup lesson from round 7: an oracled artifact
-    must model its own 100×). Same columns, same 6-dp rounding discipline;
-    the only numeric daylight is np.round's half-even vs ROUND's half-up
-    on an exact 5e-7 boundary, pinned code-for-code in tests/test_pq.py."""
+    (PQ_M of them), M codes + exact reconstruction error per vector, encoded
+    by :func:`pq_encode_arrow`. The compression tier a 100 TB vector corpus
+    applies before its inverted lists (IVF**+PQ**); reconstruction error is
+    the contract column — the oracle recomputes the whole lattice (training
+    included), so a wrong slice bound, rounding mode, or tie-break fails the
+    hash, not just a unit test."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_encode_arrow(emb, _train_books(emb)).select(
-        "vec_id",
-        *[F.col(f"c{m + 1}") for m in range(PQ_M)],
-        "recon_err",
-    )
+    return pq_encode_arrow(emb, _train_books(emb))
 
 
 def adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,14 +349,8 @@ def adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is a per-query constant, the codes table is the only scan."""
     e = load_table(spark, sf_dir, "embeddings")
     books = _train_books(e)
-    # Codes from the PRODUCTION Arrow encode tier (r11) — the same switch
-    # build_pq_index made in r8 and for the same reason: the JVM fused
-    # projection is kept ONLY for q_pq_encode's exact-arithmetic oracle
-    # row, and here it cost a fresh janino 64 KB-overflow compile attempt
-    # + interpreted evaluation per query build (measured: ~6–15 s of the
-    # ADC queries' wall at sf0.1 was the encode plan, on 2 000 rows).
-    # Code-for-code equality of the two tiers is pinned in tests/test_pq.py
-    # and hash-proven by q_pq_encode_arrow sharing q_pq_encode's oracle.
+    # Codes from the one encode tier, the rows build_pq_index stores; the
+    # retraining DuckDB oracle hash-checks that tier through q_pq_encode.
     codes = pq_encode_arrow(e, books).select(
         "vec_id", *[f"c{m + 1}" for m in range(PQ_M)]
     )
@@ -729,12 +602,8 @@ def train_pq_quantizer(embeddings: DataFrame, path: str) -> None:
 def encoded_codes(emb: DataFrame, books: BooksLocal) -> DataFrame:
     """(vec_id, c1..cM, shard) — the stored-codes projection shared by
     the batch build and the streaming refresher so both writers produce
-    identical rows. Runs the PRODUCTION encode tier
-    (:func:`pq_encode_arrow`, r8): the serving artifact is bulk-encoded
-    on every reindex, so the build pays the BLAS-shaped path, not the
-    interpreted JVM projection — code-for-code equality of the two tiers
-    is pinned in tests/test_pq.py and hash-proven by q_pq_encode_arrow
-    sharing q_pq_encode's retraining oracle at four SFs."""
+    identical rows, encoded by :func:`pq_encode_arrow`, the tier
+    ``q_pq_encode`` hash-checks against the retraining DuckDB oracle."""
     return pq_encode_arrow(emb, books).select(
         "vec_id",
         *[f"c{m + 1}" for m in range(PQ_M)],

@@ -844,9 +844,12 @@ def build_search_index(
         # each bucket file SORTED by term_len in small row groups: the
         # fuzzy serve's pushed [lo, hi] length-band range filter then
         # prunes the dictionary scan to the query lengths' row groups —
-        # the zero-space replacement for the retired delete-key index
+        # the zero-space replacement for the retired delete-key index.
+        # The sort leads with the partition column: the partitioned
+        # writer requires that order and would otherwise replace this
+        # sort with its own sort on term_bucket alone.
         .repartition(F.col("term_bucket"))
-        .sortWithinPartitions("term_len", "term")
+        .sortWithinPartitions("term_bucket", "term_len", "term")
         .write.option("parquet.block.size", 4 * 1024 * 1024)
         .partitionBy("term_bucket")
         .mode("overwrite")

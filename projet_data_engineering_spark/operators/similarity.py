@@ -83,29 +83,6 @@ def sign_bucket(vec: Column, n_bits: int = 8) -> Column:
     )
 
 
-def knn_brute_force(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k per query: broadcast the (small) query set against the
-    corpus, rank per query. Corpus-side data never moves; the only shuffle is
-    the per-query top-k, which TakeOrdered-style keeps at k rows/partition."""
-    e = embeddings.selectExpr(id_col, f"{as_double(vec_col)} AS ev")
-    q = queries.selectExpr(query_id_col, f"{as_double(vec_col)} AS qv")
-    scored = (
-        e.crossJoin(F.broadcast(q))
-        .selectExpr("*", f"round({cosine('ev', 'qv')}, 4) AS score")
-        .where(f"{query_id_col} != {id_col}")
-    )
-    return _top(scored, k, query_id_col, id_col).select(
-        query_id_col, id_col, "score", "rank"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Driver queries
 # ---------------------------------------------------------------------------
@@ -499,56 +476,6 @@ def q_ann_ivf_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(rows, schema=out.schema)
     finally:
         shutil.rmtree(path, ignore_errors=True)
-
-
-@query(
-    "q_embed_knn_arrow",
-    oracle="""
-    WITH q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0
-    )
-    SELECT vec_id, score FROM (
-        SELECT e.vec_id,
-               ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qv), 4) AS score
-        FROM embeddings e, q
-        WHERE e.vec_id <> 0
-    )
-    ORDER BY score DESC, vec_id ASC
-    LIMIT 20
-    """,
-)
-def q_embed_knn_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same top-20 as ``q_embed_knn`` but scored through the Arrow path:
-    ``mapInPandas`` with a vectorized numpy matmul per batch — the drop-in
-    pattern for wide vectors / real model scoring where per-element JVM
-    folds lose to BLAS. Oracle-checked to the identical result."""
-    e = load_table(spark, sf_dir, "embeddings")
-    qrow = e.filter(F.col("vec_id") == 0).select("embedding").first()
-    import numpy as np
-
-    qv = np.asarray(qrow["embedding"], dtype=np.float64)
-    qn = float(np.sqrt(qv @ qv))
-    out_schema = "vec_id bigint, score double"
-
-    def score_batches(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            # float64 math; 4-dp rounding absorbs fold-order ulps (the same
-            # tolerance that already reconciles the JVM and DuckDB folds)
-            scores = (m * qv).sum(axis=1) / (np.sqrt((m * m).sum(axis=1)) * qn)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "score": np.round(scores, 4)}
-            )
-
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .select("vec_id", "embedding")
-        .mapInPandas(score_batches, schema=out_schema)
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(20)
-    )
 
 
 @query(
@@ -952,27 +879,3 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.row_number().over(wa).alias("vec_rank")
     )
     return rrf_fuse(bm, ann)
-
-
-def dot_unrolled(a: Column, b: Column, dim: int = DIM) -> Column:
-    """:func:`dot` with the fold UNROLLED into plain column arithmetic for a
-    statically-known dimension. Bit-identical to the fold (same
-    left-to-right addition order over the same products — the fold's
-    initial 0.0 + a1·b1 chain is reproduced exactly), but rides whole-stage
-    codegen: Spark evaluates higher-order-function lambdas through
-    interpreted closures (CodegenFallback), which measured as the dominant
-    cost of every O(pairs)·O(dim) stage (SemDeDup's within-cluster pass ran
-    20× slower fold-based at sf5). Use this in pairwise hot paths; the fold
-    stays fine for per-row one-shot scores."""
-    expr = None
-    for i in range(1, dim + 1):
-        term = F.element_at(a, i) * F.element_at(b, i)
-        expr = (F.lit(0.0) + term) if expr is None else expr + term
-    return expr
-
-
-def cosine_unrolled(a: Column, b: Column, dim: int = DIM) -> Column:
-    """:func:`cosine` on the unrolled dot — bit-identical, codegen-bound."""
-    return dot_unrolled(a, b, dim) / (
-        F.sqrt(dot_unrolled(a, a, dim)) * F.sqrt(dot_unrolled(b, b, dim))
-    )

@@ -12,7 +12,6 @@ from projet_data_engineering_spark.operators.dedup import (
     minhash_candidate_pairs,
     minhash_signatures,
 )
-from projet_data_engineering_spark.operators.similarity import knn_brute_force
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -59,20 +58,16 @@ def test_merge_upsert_semantics_and_idempotence(spark):
 
 
 def test_knn_self_similarity_excluded_and_ranked(spark):
-    rows = [
-        Row(vec_id=0, embedding=[1.0, 0.0, 0.0]),
-        Row(vec_id=1, embedding=[0.9, 0.1, 0.0]),   # closest to 0
-        Row(vec_id=2, embedding=[0.0, 1.0, 0.0]),
-        Row(vec_id=3, embedding=[-1.0, 0.0, 0.0]),  # opposite
-    ]
-    e = spark.createDataFrame(rows)
-    q = e.filter(F.col("vec_id") == 0).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    out = knn_brute_force(e, q, k=3)
-    ranked = [r["vec_id"] for r in sorted(out.collect(), key=lambda r: r["rank"])]
-    assert ranked == [1, 2, 3]
-    assert 0 not in ranked
+    """q_embed_knn's top-20 neighbours of vector 0 never include vector 0
+    itself and come back ranked: scores non-increasing, ties by id."""
+    from projet_data_engineering_spark.registry import all_queries
+    from tests.conftest import SF_DIR
+
+    rows = all_queries()["q_embed_knn"](spark, SF_DIR).collect()
+    assert len(rows) == 20
+    assert 0 not in {r["vec_id"] for r in rows}
+    keys = [(-r["score"], r["vec_id"]) for r in rows]
+    assert keys == sorted(keys)
 
 
 def test_connected_components_properties(spark):

@@ -8,8 +8,6 @@ threshold.
 
 from __future__ import annotations
 
-import pytest
-
 import math
 
 import pyspark.sql.functions as F
@@ -158,24 +156,3 @@ def test_semdedup_drops_a_planted_duplicate(spark):
     dropped = {r["vec_id"] for r in dups.collect()}
     assert 100007 in dropped
     assert 7 not in dropped
-
-
-@pytest.mark.slow
-def test_semdedup_arrow_pair_stage_matches_jvm(spark):
-    """The Arrow/BLAS pair stage (the production tier the scale bench
-    measures) must produce flag-for-flag the same output as the exact JVM
-    pair join, across several cluster counts — the 4-dp rounding before
-    the τ compare is the shared tolerance contract."""
-    from projet_data_engineering_spark.operators.dedup import semdedup_flags
-
-    e = load_table(spark, SF_DIR, "embeddings")
-    for k in (4, 8, 32):  # 32 = SEMDEDUP_K, the registered production shape
-        jvm = {
-            (r["vec_id"], r["cent_id"], r["keep"])
-            for r in semdedup_flags(e, k=k).collect()
-        }
-        arw = {
-            (r["vec_id"], r["cent_id"], r["keep"])
-            for r in semdedup_flags(e, k=k, arrow_pairs=True).collect()
-        }
-        assert jvm == arw

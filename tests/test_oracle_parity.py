@@ -47,8 +47,7 @@ def test_changed_queries_lead_the_driver_walk():
 # covers every one of these queries independently every round.
 _SLOW_PARITY = {
     "q_stream_stack", "q_stream_pq_refresh", "q_stream_dedup_ingest",
-    "q_curation_funnel", "q_pq_served", "q_pq_encode",
-    "q_stream_ann_refresh",
+    "q_curation_funnel", "q_pq_served", "q_stream_ann_refresh",
 }
 
 

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from projet_data_engineering_spark.io import load_table
 from projet_data_engineering_spark.operators import pq
@@ -22,13 +21,19 @@ from tests.conftest import SF_DIR
 Q = all_queries()
 
 
+def _books_by_key(books):
+    """{(m, cid): centroid} of a trained model."""
+    return {
+        (m, cid): np.array(ce, dtype=np.float64)
+        for m, entries in books.items()
+        for cid, ce in entries
+    }
+
+
 @pytest.fixture(scope="module")
 def trained(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    books = {
-        (r["m"], r["cid"]): np.array(r["ce"], dtype=np.float64)
-        for r in pq.pq_codebooks(emb).collect()
-    }
+    books = _books_by_key(pq._train_books(emb))
     vecs = {
         r["vec_id"]: np.array(r["embedding"], dtype=np.float64)
         for r in emb.collect()
@@ -49,10 +54,7 @@ def test_codebooks_shape_and_determinism(spark, trained):
             assert books[(m, c)].shape == (pq.PQ_SUBDIM,)
     # retraining reproduces the artifact bit-for-bit (md5 seeds, 6dp means)
     emb = load_table(spark, SF_DIR, "embeddings")
-    again = {
-        (r["m"], r["cid"]): np.array(r["ce"], dtype=np.float64)
-        for r in pq.pq_codebooks(emb).collect()
-    }
+    again = _books_by_key(pq._train_books(emb))
     assert set(again) == set(books)
     for key in books:
         assert np.array_equal(books[key], again[key])
@@ -139,67 +141,28 @@ def test_rerank_recall_at_least_matches_adc(spark):
 
 
 def test_encode_plan_is_pure_map_work(spark):
-    """The model enters the plan as literals (MLlib centroid pattern), so
-    the encode plan is scan → project: no join of ANY kind, no exchange —
-    nothing model-sized is copied per corpus row."""
+    """The model travels as a closure constant of one Arrow map pass, so
+    the encode plan is scan → mapInPandas: no join of ANY kind, no
+    exchange — nothing model-sized is copied per corpus row."""
     from projet_data_engineering_spark.plans.explain import formatted_plan
 
     plan = formatted_plan(Q["q_pq_encode"](spark, SF_DIR))
+    assert "MapInPandas" in plan
     assert "Join" not in plan
     assert "CartesianProduct" not in plan
     assert "Exchange" not in plan
 
 
-@pytest.mark.slow
-def test_encode_codegen_fallback_is_pinned(spark):
-    """pq_encode_with's fused M·K argmin projection exceeds janino's 64 KB
-    method limit and runs through Spark's interpreted projection — the
-    documented, measured-fastest JVM form (its docstring records the
-    losing alternatives). The plan string still shows *(N) markers (the
-    fallback happens at compile time, inside execution), so the pin is
-    behavioral: with spark.sql.codegen.fallback=false the compile failure
-    must THROW. If a Spark upgrade starts compiling this plan (or a shape
-    change re-enables codegen), this fails and the docstring/measurements
-    must be revisited — the fallback stays a recorded decision, never a
-    silent one."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    books = pq._train_books(emb)  # training pays its own fallback; pin encode
-    enc = pq.pq_encode_with(emb, books).drop("v")
+def test_vector_kernels_compile_without_codegen_fallback(spark):
+    """With spark.sql.codegen.fallback=false a generated class that janino
+    cannot compile (e.g. "Code grows beyond 64 KB") raises instead of
+    running interpreted, so each of these runs only if every stage it
+    plans compiles. Every row is collected: a count would prune the
+    projections away."""
+    prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
-        with pytest.raises(Exception, match="64 KB|grows beyond"):
-            enc.collect()
+        for name in ("q_pq_encode", "q_ann_pq", "q_semdedup"):
+            assert Q[name](spark, SF_DIR).collect(), name
     finally:
-        spark.conf.set("spark.sql.codegen.fallback", "true")
-
-
-@pytest.mark.slow
-def test_encode_arrow_parity_with_jvm(spark):
-    """The vectorized production encode (mapInPandas + numpy) must agree
-    with the oracle-contract JVM form code-for-code, and on recon_err to
-    the shared 6-dp rounding."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    books = pq._train_books(emb)
-    jvm = {
-        r["vec_id"]: r
-        for r in pq.pq_encode_with(emb, books).drop("v").collect()
-    }
-    arrow = pq.pq_encode_arrow(emb, books).collect()
-    assert len(arrow) == len(jvm)
-    for r in arrow:
-        j = jvm[r["vec_id"]]
-        for m in range(pq.PQ_M):
-            assert r[f"c{m + 1}"] == j[f"c{m + 1}"], (r["vec_id"], m)
-        assert abs(r["recon_err"] - j["recon_err"]) <= 1e-9
-
-
-def test_encode_arrow_plan_is_map_only(spark):
-    """The Arrow tier keeps the JVM form's cost model: no join, no
-    exchange — one ArrowEvalPython/mapInPandas pass over the scan."""
-    from projet_data_engineering_spark.plans.explain import formatted_plan
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    books = pq._train_books(emb)
-    plan = formatted_plan(pq.pq_encode_arrow(emb, books))
-    assert "Join" not in plan
-    assert "Exchange" not in plan
+        spark.conf.set("spark.sql.codegen.fallback", prev)

@@ -316,6 +316,25 @@ def test_bm25_fuzzy_served_prunes_the_dictionary_scan(spark, tmp_path):
         assert "term_bucket" in pf and (" IN " in pf or " = " in pf), seg[:900]
 
 
+def test_vocab_files_are_sorted_by_term_len_then_term(spark, tmp_path):
+    """Every stored vocab file is ordered by (term_len, term), the order
+    the fuzzy serve's pushed length-band filter prunes row groups by."""
+    import pyarrow.parquet as pq
+
+    from projet_data_engineering_spark.io import load_table
+    from projet_data_engineering_spark.operators.search import build_search_index
+    from tests.conftest import SF_DIR
+
+    docs = load_table(spark, SF_DIR, "documents")
+    build_search_index(docs, "doc_id", "text", str(tmp_path / "idx"), n_buckets=16)
+    files = sorted((tmp_path / "idx" / "vocab").glob("term_bucket=*/*.parquet"))
+    assert len(files) > 1
+    for f in files:
+        t = pq.read_table(f, columns=["term_len", "term"]).to_pydict()
+        keys = list(zip(t["term_len"], t["term"]))
+        assert keys == sorted(keys), f.parent.name
+
+
 def test_index_layout_version_guard(spark, tmp_path):
     """ADVICE r9: the on-disk index layout changed in r9 (vocab gained
     term_len; the SymSpell artifact was retired) with no version marker.

@@ -70,14 +70,6 @@ def test_approx_distinct_within_error_bound(spark):
         assert rel_err <= 0.10, f"{k}: est={est} exact={exact[k]}"
 
 
-def test_arrow_knn_matches_jvm_knn(spark):
-    """The mapInPandas scoring path returns the identical top-20 as the
-    JVM zip_with/aggregate fold."""
-    jvm = [tuple(r) for r in Q["q_embed_knn"](spark, SF_DIR).collect()]
-    arrow = [tuple(r) for r in Q["q_embed_knn_arrow"](spark, SF_DIR).collect()]
-    assert arrow == jvm
-
-
 def test_ivf_neighbors_subset_of_bruteforce_universe(spark):
     """IVF returns real neighbors: every (query, hit) pair's score must equal
     the brute-force cosine for that pair (IVF may miss pairs — it's
