@@ -153,6 +153,19 @@ def test_encode_plan_is_pure_map_work(spark):
     assert "Exchange" not in plan
 
 
+def test_encode_arrow_plan_is_map_only(spark):
+    """pq_encode_arrow on its own, fed an already-trained model, is one
+    mapInPandas pass over the scan: no join, no exchange."""
+    from projet_data_engineering_spark.plans.explain import formatted_plan
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    books = pq._train_books(emb)
+    plan = formatted_plan(pq.pq_encode_arrow(emb, books))
+    assert "MapInPandas" in plan
+    assert "Join" not in plan
+    assert "Exchange" not in plan
+
+
 def test_vector_kernels_compile_without_codegen_fallback(spark):
     """With spark.sql.codegen.fallback=false a generated class that janino
     cannot compile (e.g. "Code grows beyond 64 KB") raises instead of
